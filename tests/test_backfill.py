@@ -9,15 +9,26 @@ from pyspark.sql import functions as F
 
 from ts_process_spark.datagen import transcripts
 from ts_process_spark.operators.rollup import full_cascade
-from ts_process_spark.plans.backfill import TableSet, backfill, verify_lineage
+from ts_process_spark.plans.backfill import (
+    HASH_COLS,
+    TIER_ORDER,
+    TableSet,
+    backfill,
+    verify_lineage,
+    with_bucket,
+)
 
 N_CONVS = 8
 N_BUCKETS = 4
 
 
 @pytest.fixture(scope="module")
-def raw(spark):
-    return transcripts(spark, n_convs=N_CONVS, seed=3, median_turns=10).cache()
+def raw(spark, tmp_path_factory):
+    # a parquet input table, not cached: every backfill re-scans it, as
+    # in production
+    path = str(tmp_path_factory.mktemp("raw") / "turns")
+    transcripts(spark, n_convs=N_CONVS, seed=3, median_turns=10).write.parquet(path)
+    return spark.read.parquet(path)
 
 
 def _tier_frame(df):
@@ -97,3 +108,106 @@ def test_backfill_parallel_matches_serial(spark, raw, tmp_path):
 
     with pytest.raises(ValueError):
         backfill(spark, raw, par, n_buckets=N_BUCKETS, parallelism=2, fail_after=1)
+
+
+def _assert_counters_match_disk(spark, raw, tables, n_buckets):
+    """Every lineage record's observed counters equal what a read-back
+    of its partition gives — schema inferred and hashed by a plain
+    aggregate, independent of the backfill's reader and of
+    ``DataFrame.observe`` — and what its input holds: a 1m unit's
+    rows_in == its bucket's raw rows, a 1h/1d unit's rows_in == its
+    parent unit's rows_out."""
+    recs = {(r["tier"], r["bucket_id"]): r for r in tables.read_lineage()}
+    assert len(recs) == len(tables.read_lineage()) == 3 * n_buckets
+    raw_rows = dict(
+        with_bucket(raw, n_buckets).groupBy("bucket_id").count().collect()
+    )
+    for (tier, b), rec in recs.items():
+        n, x = (
+            spark.read.parquet(tables.partition_dir(tier, b))
+            .agg(F.count(F.lit(1)), F.bit_xor(F.xxhash64(*HASH_COLS)))
+            .first()
+        )
+        assert (rec["rows_out"], rec["value_hash"]) == (n, x or 0), (tier, b)
+        if tier == "1m":
+            assert rec["rows_in"] == raw_rows.get(b, 0), (tier, b)
+        else:
+            parent = TIER_ORDER[TIER_ORDER.index(tier) - 1]
+            assert rec["rows_in"] == recs[(parent, b)]["rows_out"], (tier, b)
+
+
+@pytest.mark.parametrize("mode", ["serial", "parallel4", "resume"])
+def test_lineage_counters_match_read_back(spark, raw, tmp_path, mode):
+    """The counters observed during each write are the numbers the old
+    read-back/count passes produced — at parallelism 1 and 4, and when a
+    resume after a crash redoes a unit whose parent it skipped (that
+    unit's rows_in comes from the parent's lineage record)."""
+    tables = TableSet(str(tmp_path / mode))
+    if mode == "resume":
+        assert backfill(spark, raw, tables, n_buckets=N_BUCKETS, fail_after=5)[
+            "crashed"
+        ]
+        r = backfill(spark, raw, tables, n_buckets=N_BUCKETS)
+        assert r == {"committed": 3 * N_BUCKETS - 4, "skipped": 4}
+    else:
+        par = 4 if mode == "parallel4" else 1
+        r = backfill(spark, raw, tables, n_buckets=N_BUCKETS, parallelism=par)
+        assert r == {"committed": 3 * N_BUCKETS, "skipped": 0}
+    _assert_counters_match_disk(spark, raw, tables, N_BUCKETS)
+
+
+def test_lineage_counters_with_empty_buckets(spark, raw, tmp_path):
+    """More buckets than conversations: an empty bucket's units commit
+    zero counters (AQE prunes the empty input stage together with its
+    observed row count, so the empty unit counts its input directly)."""
+    n_buckets = N_CONVS + 4
+    tables = TableSet(str(tmp_path / "sparse"))
+    backfill(spark, raw, tables, n_buckets=n_buckets, parallelism=4)
+    _assert_counters_match_disk(spark, raw, tables, n_buckets)
+    empty = [r for r in tables.read_lineage() if r["rows_out"] == 0]
+    assert empty and all(r["value_hash"] == 0 for r in empty)
+
+
+def test_backfill_jobs_per_unit(spark, raw, tmp_path):
+    """A unit is its write: lineage counters are observed during the
+    write, nothing is read back and no partition read infers a schema,
+    so a serial backfill runs at most 2 Spark jobs (the shuffle map stage
+    and the write) per (tier, bucket) unit, and verify_lineage 1."""
+    sc = spark.sparkContext
+    tables = TableSet(str(tmp_path / "t"))
+    units = 3 * N_BUCKETS
+
+    def jobs(name, fn):
+        group = f"{name}-{tmp_path.name}"
+        sc.setJobGroup(group, f"{name} job-count pin")
+        try:
+            result = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return result, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    r, n_jobs = jobs("backfill", lambda: backfill(spark, raw, tables, n_buckets=N_BUCKETS))
+    assert r["committed"] == units
+    assert n_jobs <= 2 * units
+    problems, n_jobs = jobs("verify", lambda: verify_lineage(spark, tables))
+    assert problems == [] and n_jobs <= units
+
+
+def test_lineage_detects_schema_drift(spark, raw, tmp_path):
+    """verify_lineage reads partitions with the explicit tier schema; a
+    partition whose columns differ from it is still caught: a missing
+    hashed column reads as NULL and is reported, a column of another
+    type fails the read."""
+    tables = TableSet(str(tmp_path / "t3"))
+    backfill(spark, raw, tables, n_buckets=2)
+    assert verify_lineage(spark, tables) == []
+    victim = tables.partition_dir("1h", 0)
+    original = str(tmp_path / "original")
+    tables.read_partition(spark, "1h", 0).write.parquet(original)
+    spark.read.parquet(original).drop("text_hash").write.mode("overwrite").parquet(victim)
+    assert any("1h/0" in p for p in verify_lineage(spark, tables))
+    spark.read.parquet(original).withColumn(
+        "n_turns", F.col("n_turns").cast("string")
+    ).write.mode("overwrite").parquet(victim)
+    with pytest.raises(Exception, match="PARQUET_COLUMN_DATA_TYPE_MISMATCH"):
+        verify_lineage(spark, tables)

@@ -407,3 +407,24 @@ def test_concat_blobs_expr_matches_python_form(spark, raw_df):
             assert set(got) == set(exp)
             bad = [k for k in got if got[k] != exp[k]]
             assert not bad, (tier, kw, bad[:3])
+
+
+def test_le4_fails_loudly_past_2_31_with_ansi_off(spark):
+    """The container header's u32 fields: a length or chunk count
+    outside [0, 2^31) raises instead of being truncated to wrong bytes —
+    also in a non-ANSI session, where a cast would wrap silently."""
+    import struct
+
+    from ts_process_spark.operators.rollup import _le4
+
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try:
+        top = 2**31 - 1
+        got = spark.range(top, top + 1).select(_le4(F.col("id")).alias("b")).first()
+        assert bytes(got["b"]) == struct.pack("<I", top)
+        for bad in (2**31, 2**32 + 5, -1):
+            with pytest.raises(Exception, match="out of u32 range"):
+                spark.range(bad, bad + 1).select(_le4(F.col("id"))).collect()
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)

@@ -52,11 +52,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ts_process_spark.functions.codecs import (
-    concat_blobs,
-    encode_dod_batch,
-    encode_gorilla_batch,
-)
+from ts_process_spark.functions.codecs import encode_dod_batch, encode_gorilla_batch
 from ts_process_spark.operators.gapfill import gapfill_ts
 
 TIERS = {"1m": "minute", "1h": "hour", "1d": "day"}
@@ -109,30 +105,30 @@ def _encode_gorilla_udf(val_arrays: pd.Series) -> pd.Series:
     return pd.Series(encode_gorilla_batch(concat, lengths), index=val_arrays.index)
 
 
-@F.pandas_udf(T.BinaryType())
-def _concat_blobs_udf(blob_arrays: pd.Series) -> pd.Series:
-    # cascade = pure byte-level chunk concatenation (no decode/re-encode;
-    # the Gorilla-deployment immutable-chunk pattern) — see
-    # codecs.concat_blobs; decode_* reads containers transparently.
-    # r9: no longer on the cascade path (replaced by the pure-JVM
-    # _concat_blobs_expr below — the Python eval node itself was ~40% of
-    # the 1h/1d tier jobs, and an arrow_udf twin measured the same, so
-    # the boundary, not per-row Python, was the cost); kept as the
-    # reference form tests pin _concat_blobs_expr against.
-    return blob_arrays.map(lambda blobs: concat_blobs(list(blobs)))
-
-
 _SENTINEL_LE = b"\xff\xff\xff\xff"  # struct.pack('<I', codecs._CHUNK_SENTINEL)
 
 
-def _le4(x) -> F.Column:
+def _le4(x, checked: bool = True) -> F.Column:
     """Little-endian uint32 bytes of a non-negative int column —
-    byte-identical to ``struct.pack('<I', x)`` for x < 2^31 (all chunk
-    counts/lengths here).  hex() of the int, zero-padded to 8 nibbles,
-    decoded big-endian, then byte-reversed — every step a codegen
-    built-in (guide §4.1), no Python."""
+    byte-identical to ``struct.pack('<I', x)`` for 0 <= x < 2^31 (all
+    chunk counts/lengths here).  hex() of the int, zero-padded to 8
+    nibbles, decoded big-endian, then byte-reversed — every step a
+    codegen built-in (guide §4.1), no Python.
+
+    Out of that range the padding would truncate to wrong bytes, so a
+    ``checked`` column fails the row with ``raise_error`` instead,
+    whatever the session's ANSI setting.  ``checked=False`` is for blob
+    lengths only: ``F.length`` of a binary is an int below 2^31 by type,
+    and the test would run interpreted per child row inside
+    collect_list's struct."""
     be = F.to_binary(F.lpad(F.hex(x), 8, "0"), F.lit("hex"))
-    return F.concat(*[F.substring(be, i, 1) for i in (4, 3, 2, 1)])
+    le = F.concat(*[F.substring(be, i, 1) for i in (4, 3, 2, 1)])
+    if not checked:
+        return le
+    return F.when(F.shiftright(x, 31) == 0, le).otherwise(F.raise_error(F.concat(
+        F.lit("blob container length or chunk count out of u32 range: "),
+        x.cast("string"),
+    )))
 
 
 def _concat_blobs_expr(children, field: str, container: bool) -> F.Column:
@@ -190,7 +186,7 @@ def _concat_blobs_expr(children, field: str, container: bool) -> F.Column:
         )
         body = bcat(F.transform(children, lambda c: c[field]))
     return F.concat(
-        F.lit(_SENTINEL_LE), _le4(total_n.cast("int")), lens, body
+        F.lit(_SENTINEL_LE), _le4(total_n), lens, body
     )
 
 
@@ -348,8 +344,8 @@ def rollup_cascade(
                         []
                         if has_child_chunks
                         else [
-                            _le4(F.length("ts_blob")).alias("ltb"),
-                            _le4(F.length("val_blob")).alias("lvb"),
+                            _le4(F.length("ts_blob"), checked=False).alias("ltb"),
+                            _le4(F.length("val_blob"), checked=False).alias("lvb"),
                         ]
                     ),
                 )

@@ -20,6 +20,17 @@ per-partition lineage + metrics"):
   value_hash (xor-fold of row xxhash64s — order-independent, cheap to
   verify), started/committed wall times.  ``resume`` = anti-join of the
   pending set against committed lineage keys.
+- **Counters come from the write itself.**  ``rows_out`` and
+  ``value_hash`` are ``DataFrame.observe`` aggregates on the frame being
+  written (the same ``count(1)`` / ``bit_xor(xxhash64(HASH_COLS))`` that
+  ``count_and_hash`` computes on a read-back); a 1m unit's ``rows_in``
+  is observed on its bucket's raw rows, a 1h/1d unit's is its parent
+  unit's ``rows_out``.  No unit reads back what it wrote, and every
+  partition read (the next tier's input, the resume path, the verify
+  sweep) carries the explicit tier schema, so no schema-inference job
+  runs: a unit is its write's two Spark jobs.  ``verify_lineage``
+  stays the on-disk integrity check — it re-hashes every committed
+  partition against its record.
 
 On a real cluster this layer sits on Iceberg (snapshot ids instead of
 directory overwrites); the jar is not in this sandbox, so the same
@@ -35,12 +46,26 @@ import time
 import uuid
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from ts_process_spark.operators.rollup import rollup_cascade, rollup_raw_to_1m
+from ts_process_spark.operators.rollup import (
+    TIER_SCHEMA,
+    rollup_cascade,
+    rollup_raw_to_1m,
+)
 
 TIER_ORDER = ["1m", "1h", "1d"]
+
+# on-disk schema of each tier's partitions: every partition read carries
+# it, so reading one never runs a parquet schema-inference job.  The
+# coarser tiers append rollup_cascade's leaf-chunk count (backfill never
+# caps blobs, so there is no blob_chunks_dropped column)
+_CASCADE_SCHEMA = T.StructType(
+    TIER_SCHEMA.fields + [T.StructField("blob_n_chunks", T.LongType(), False)]
+)
+TIER_SCHEMAS = {"1m": TIER_SCHEMA, "1h": _CASCADE_SCHEMA, "1d": _CASCADE_SCHEMA}
 
 
 def with_bucket(df: DataFrame, n_buckets: int) -> DataFrame:
@@ -49,26 +74,28 @@ def with_bucket(df: DataFrame, n_buckets: int) -> DataFrame:
     )
 
 
-def value_hash(df: DataFrame, cols: list[str]) -> int:
-    """Order-independent content hash: bit-xor fold of per-row xxhash64
-    over the checked columns (blob columns excluded — codec
-    correctness is tested separately, SURVEY §7.4.5)."""
-    return count_and_hash(df, cols)[1]
+def _count_and_hash_aggs(cols: list[str]) -> list[Column]:
+    """The (row count, value_hash) aggregates: an order-independent
+    bit-xor fold of per-row xxhash64 over the checked columns (blob
+    columns excluded — codec correctness is tested separately, SURVEY
+    §7.4.5).  Shared by the read-back check and the observed write, so
+    the two give identical values."""
+    return [
+        F.count(F.lit(1)).alias("n"),
+        F.coalesce(F.bit_xor(F.xxhash64(*cols)), F.lit(0)).alias("x"),
+    ]
 
 
 def count_and_hash(df: DataFrame, cols: list[str]) -> tuple[int, int]:
-    """(row count, value_hash) in ONE aggregation job — the commit and
-    verify paths each need both, and two separate actions doubled the
-    post-write read cost per unit (review finding)."""
-    row = (
-        df.select(F.xxhash64(*cols).alias("h"))
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.expr("coalesce(bit_xor(h), 0)").alias("x"),
-        )
-        .first()
-    )
-    return int(row["n"]), int(row["x"])
+    """(row count, value_hash) in ONE Spark job: the aggregates are
+    observed on a no-op write of the checked columns, so no shuffle
+    stage runs (a global ``agg`` is two jobs)."""
+    seen = Observation()
+    df.select(*cols).observe(seen, *_count_and_hash_aggs(cols)).write.format(
+        "noop"
+    ).mode("overwrite").save()
+    m = seen.get
+    return int(m["n"]), int(m["x"])
 
 
 HASH_COLS = [
@@ -119,6 +146,14 @@ class TableSet:
     def read_tier(self, spark: SparkSession, tier: str) -> DataFrame:
         return spark.read.parquet(self.tier_dir(tier))
 
+    def read_partition(self, spark: SparkSession, tier: str, bucket_id: int) -> DataFrame:
+        """One (tier, bucket) partition under the explicit tier schema.
+        A file column whose type differs from the schema fails the read;
+        a missing one reads as NULL, which changes the value hash."""
+        return spark.read.schema(TIER_SCHEMAS[tier]).parquet(
+            self.partition_dir(tier, bucket_id)
+        )
+
 
 def backfill(
     spark: SparkSession,
@@ -142,12 +177,15 @@ def backfill(
     only serialized step (one lock), and each thread tags its jobs with
     a scheduler pool so a straggler bucket can't starve the rest.  The
     commit protocol (overwrite THEN lineage) is per unit and unchanged,
-    so crash-resume semantics are identical at any parallelism."""
+    so crash-resume semantics are identical at any parallelism.
+
+    Each unit's lineage counters are observed during its write (see the
+    module docstring), so a unit runs only its write's Spark jobs."""
     import threading
 
     run_id = uuid.uuid4().hex[:12]
     os.makedirs(tables.root, exist_ok=True)
-    done = tables.committed()
+    done = {(r["tier"], r["bucket_id"]): r for r in tables.read_lineage()}
     bucketed = with_bucket(raw, n_buckets)
     if parallelism > 1 and (max_units is not None or fail_after is not None):
         raise ValueError("crash-simulation knobs require parallelism=1")
@@ -161,32 +199,34 @@ def backfill(
             spark.sparkContext.setLocalProperty(
                 "spark.scheduler.pool", f"backfill-{bucket_id % parallelism}"
             )
-        src = bucketed.where(F.col("bucket_id") == bucket_id).drop("bucket_id")
-        child: DataFrame | None = None
-        for tier in TIER_ORDER:
+        parent_rows = 0  # rows_out of the previous tier's unit
+        for i, tier in enumerate(TIER_ORDER):
             key = (tier, bucket_id)
             if key in done:
                 with lock:
                     counts["skipped"] += 1
-                # defer the committed-partition reader: on a fully
-                # committed resume nothing consumes it, and eager
-                # spark.read.parquet per tier issued n_buckets*3 footer
-                # reads for discarded DataFrames (review finding)
-                child = None
-                child_dir = tables.partition_dir(tier, bucket_id)
+                parent_rows = done[key]["rows_out"]
                 continue
             if max_units is not None and counts["committed"] >= max_units:
                 return False
             started = time.time()
+            # observation names are unique per unit: bucket chains run
+            # their writes concurrently on one session
+            tag = f"backfill:{run_id}:{tier}:{bucket_id}"
             if tier == "1m":
-                out = rollup_raw_to_1m(src)
-                rows_in = src.count()
+                seen = Observation(f"{tag}:in")
+                src = bucketed.where(F.col("bucket_id") == bucket_id).drop("bucket_id")
+                out = rollup_raw_to_1m(src.observe(seen, F.count(F.lit(1)).alias("n")))
             else:
-                if child is None:  # previous tier was a skipped commit
-                    child = spark.read.parquet(child_dir)
-                out = rollup_cascade(child, tier)
-                rows_in = child.count()
-            out = out.sortWithinPartitions("conv_id", "bucket_ts")
+                # the parent partition is read only here, where a tier
+                # consumes it — never after the last tier's write
+                seen = None
+                parent = tables.read_partition(spark, TIER_ORDER[i - 1], bucket_id)
+                out = rollup_cascade(parent, tier)
+            written = Observation(f"{tag}:out")
+            out = out.sortWithinPartitions("conv_id", "bucket_ts").observe(
+                written, *_count_and_hash_aggs(HASH_COLS)
+            )
             pdir = tables.partition_dir(tier, bucket_id)
             out.write.mode("overwrite").parquet(pdir)  # idempotent overwrite
             if fail_after is not None and counts["committed"] + 1 >= fail_after:
@@ -194,22 +234,30 @@ def backfill(
                 # the resume run must redo this unit
                 counts["crashed"] = True
                 return False
-            written = spark.read.parquet(pdir)
-            rows_out, vhash = count_and_hash(written, HASH_COLS)
+            stats = written.get
+            if seen is None:
+                rows_in = parent_rows
+            elif stats["n"]:
+                rows_in = seen.get["n"]
+            else:
+                # AQE replaces an input stage that produced no rows by an
+                # empty relation, and drops its observed metrics with it:
+                # count an empty unit's input directly
+                rows_in = src.count()
             rec = {
                 "run_id": run_id,
                 "tier": tier,
                 "bucket_id": bucket_id,
                 "rows_in": rows_in,
-                "rows_out": rows_out,
-                "value_hash": vhash,
+                "rows_out": stats["n"],
+                "value_hash": stats["x"],
                 "started_at": started,
                 "committed_at": time.time(),
             }
             with lock:
                 tables.append_lineage(rec)
                 counts["committed"] += 1
-            child = written
+            parent_rows = stats["n"]
         return True
 
     if parallelism <= 1:
@@ -226,11 +274,13 @@ def backfill(
 
 def verify_lineage(spark: SparkSession, tables: TableSet) -> list[str]:
     """Re-hash every committed partition against its lineage record —
-    the post-backfill integrity sweep."""
+    the post-backfill on-disk integrity sweep, one Spark job per
+    partition (the read carries the tier schema, so no schema-inference
+    job runs)."""
     problems = []
     for rec in tables.read_lineage():
-        pdir = tables.partition_dir(rec["tier"], rec["bucket_id"])
-        n, vhash = count_and_hash(spark.read.parquet(pdir), HASH_COLS)
+        part = tables.read_partition(spark, rec["tier"], rec["bucket_id"])
+        n, vhash = count_and_hash(part, HASH_COLS)
         if n != rec["rows_out"]:
             problems.append(f"{rec['tier']}/{rec['bucket_id']}: rowcount drift")
         elif vhash != rec["value_hash"]:
