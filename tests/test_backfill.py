@@ -51,10 +51,26 @@ def test_backfill_crash_and_resume(spark, raw, tmp_path):
     assert len(tables.committed()) == 4
 
     # resume: must redo the uncommitted 5th unit, skip the 4 committed
+    earlier_runs = {r["run_id"] for r in tables.read_lineage()}
     r2 = backfill(spark, raw, tables, n_buckets=N_BUCKETS)
     assert r2["skipped"] == 4
     assert r2["committed"] == 3 * N_BUCKETS - 4
     assert len(tables.committed()) == 3 * N_BUCKETS
+
+    # the resumed run's records carry one new run_id (what
+    # jobs/cascade_backfill.py counts throughput by), and their 1m
+    # rows_in sums to the raw rows of the buckets that run committed
+    mine = [r for r in tables.read_lineage() if r["run_id"] not in earlier_runs]
+    assert len(mine) == r2["committed"]
+    assert len({r["run_id"] for r in mine}) == 1
+    mine_1m = {r["bucket_id"]: r["rows_in"] for r in mine if r["tier"] == "1m"}
+    assert 0 < len(mine_1m) < N_BUCKETS
+    want = (
+        with_bucket(raw, N_BUCKETS)
+        .where(F.col("bucket_id").isin(list(mine_1m)))
+        .count()
+    )
+    assert sum(mine_1m.values()) == want
 
     # final tiers == direct full cascade (blobs and hashes included)
     direct = full_cascade(raw)

@@ -72,13 +72,11 @@ def test_jvm_rollup_is_hash_aggregate(spark):
 
 
 def test_dim_join_is_broadcast(spark):
-    # user_nation_rollup rotated out of the 50-slot gate in round 8
-    # (value pin in test_rotated_out_slots); its broadcast plan shape
-    # stays pinned here
-    from ts_process_spark.queries_ts import q_user_nation_rollup
+    """first_crossing joins each event to its per-user threshold dim
+    with an explicit broadcast: never a shuffle join."""
+    import __spark_entry__ as E
 
-    df = q_user_nation_rollup(spark, SF_DIR)
-    plan = _plan(df)
+    plan = _plan(E.queries()["first_crossing"](spark, SF_DIR))
     assert "BroadcastHashJoin" in plan, plan
     assert "SortMergeJoin" not in plan, plan
 
@@ -177,30 +175,6 @@ def test_signal_queries_prune_events_scan(spark):
         m = re.search(r"ReadSchema: struct<([^>]*)>", plan)
         cols = {c.split(":")[0] for c in m.group(1).split(",")}
         assert "props" not in cols, (name, cols)
-
-
-def test_dropped_registry_variants(spark):
-    """Queries rotated out of the 50-slot registry keep correctness
-    coverage here: decimate4 (slot freed round 4 for the decoded-media
-    gate query) still matches its DuckDB oracle at sf0.001."""
-    import duckdb
-
-    from ts_process_spark.queries_ts import SQL_DECIMATE4, q_decimate4
-
-    sf = "/root/testdata/sf0.001"
-    got = sorted(
-        (r[0], r[1], float(r[2]))
-        for r in q_decimate4(spark, sf).collect()
-    )
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW events AS SELECT * FROM '{sf}/events.parquet'"
-    )
-    want = sorted(
-        (r[0], r[1], float(r[2]))
-        for r in con.execute(SQL_DECIMATE4).fetchall()
-    )
-    assert got == want
 
 
 def test_minhash_plan_shapes(spark):

@@ -83,8 +83,8 @@ def main() -> None:
     add(1012, 63, etype="view")
     # (1005/1006 already pin n = 64 with constant/zero series)
     # users that EXIST in the symlinked orders/customer tables, so the
-    # join-shaped queries (asof_join, user_nation_rollup) exercise the
-    # hostile ts patterns too instead of matching nothing
+    # join-shaped asof_join query exercises the hostile ts patterns too
+    # instead of matching nothing
     add(7, 24, dup_ts=True, etype="click")
     add(13, 16, null_ts_every=7, etype="purchase")
 

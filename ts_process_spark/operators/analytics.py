@@ -163,21 +163,6 @@ def filter_signals(
     )
 
 
-def taper_signals(
-    df: DataFrame, flag: str = "all", m: int = 100, cols: Iterable[str] = _SIG_COLS
-) -> DataFrame:
-    """Kaiser(β=14) taper (ts_library.py:439-479)."""
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = pdf.copy()
-        w = dsp.taper_window(flag, m, len(pdf))
-        for c in cols:
-            out[c] = out[c].to_numpy(dtype=np.float64) * w
-        return out
-
-    return _per_series(df, fn)
-
-
 def resample_signals(df: DataFrame, new_dt: float) -> DataFrame:
     """interp dispatch per series: no-op / decimate / sinc
     (ts_library.py:896-962); emits the new i grid and dt."""
@@ -469,22 +454,6 @@ def integrate_signals(df: DataFrame, col: str = "acc", out: str = "integral") ->
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
         dt = float(pdf["dt"].iloc[0])
         pdf[out] = dsp.integrate(pdf[col].to_numpy(dtype=np.float64), dt)
-        return pdf
-
-    return _per_series(df, fn, schema)
-
-
-def differentiate_signals(
-    df: DataFrame, col: str = "dis", out: str = "deriv"
-) -> DataFrame:
-    """Reference derivative (ts_library.py:111-124)."""
-    schema = T.StructType(
-        list(df.schema.fields) + [T.StructField(out, T.DoubleType(), False)]
-    )
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        dt = float(pdf["dt"].iloc[0])
-        pdf[out] = dsp.derivative(pdf[col].to_numpy(dtype=np.float64), dt)
         return pdf
 
     return _per_series(df, fn, schema)

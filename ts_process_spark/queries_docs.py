@@ -443,13 +443,6 @@ def _srp_bucket_expr() -> str:
     return " + ".join(terms)
 
 
-def _srp_sql() -> str:
-    return f"""
-WITH e AS (SELECT vec_id AS id, {_Q_SQL} AS q FROM embeddings)
-SELECT id, {_srp_bucket_expr()} AS bucket FROM e
-"""
-
-
 def q_emb_srp_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bucketed approximate top-3 neighbors (equi-join within SRP
     buckets).  Fully deterministic — exact integer bucket + quantized
@@ -1449,36 +1442,11 @@ def queries_docs() -> dict[str, object]:
         "doc_langid": q_doc_langid,
         "doc_bm25": q_doc_bm25,
         "doc_tfidf_top5": q_doc_tfidf_top5,
-        # round-6 rotation (VERDICT r5 #1): set_ops / pivot_types /
-        # revenue_forecast left the ts slice (SQL-trivial; operators
-        # also ride inside other green slots, pinned in
-        # tests/test_rotated_out_slots.py) so the r5 curation ops —
-        # gopher rules, sequence packing, and the IVF×PQ production ANN
-        # path — get value-checked CORRECTNESS rows.
         "gopher_quality_flags": q_gopher_quality,
         "pack_documents": q_pack_documents,
         "emb_ivfpq_ann": q_emb_ivfpq_ann,
-        # round-7 rotation (VERDICT r6 #1): median_by_type left the ts
-        # slice (its percentile/sort semantics also ride inside
-        # rotmax_scan's median; pinned in tests/test_rotated_out_slots)
-        # so the PII scrub — the one first-class curation op with no
-        # CORRECTNESS row — gets a value-checked slot.
         "doc_pii_scrub": q_doc_pii_scrub,
-        # round-6 mid-round rotation: top3_per_supplier (plain
-        # row_number rank; pinned in tests/test_rotated_out_slots.py)
-        # left the ts slice so span-level substring dedup — the one
-        # dedup family member the engine lacked — gets a value-checked
-        # CORRECTNESS row.
         "doc_span_dedup": q_doc_span_dedup,
-        # round-8 rotation (VERDICT r7 #1/#2/#7): cube_counts /
-        # pricing_summary / user_nation_rollup / sync_streams left the
-        # ts slice (SQL-trivial cube / multi-agg / broadcast-dim-join /
-        # full-outer-grid semantics that also ride inside other green
-        # slots; pinned in tests/test_rotated_out_slots.py) so the
-        # flagship eval-integrity op (decontamination), SemDeDup, the
-        # MP3/triage metadata walk, and the third streaming class
-        # (stream_dedup, in queries_ts) get value-checked rows —
-        # completing gate coverage of the whole dedup family.
         "doc_decontam": q_doc_decontam,
         "emb_semdedup": q_emb_semdedup,
         "multimodal_media_metadata": q_multimodal_media_metadata,

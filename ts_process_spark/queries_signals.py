@@ -32,20 +32,6 @@ from ts_process_spark import datagen
 from ts_process_spark.operators import analytics
 
 
-def q_signal_lowpass(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Butterworth lowpass filtfilt over the signal fixtures
-    (ts_library.py:835-894) — grouped Arrow kernel."""
-    sig = datagen.signals(spark, cases=["lowpass"], n=2048)
-    return analytics.filter_signals(sig, "lowpass", fmax=5.0)
-
-
-def q_signal_bandpass_padded(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Band-pass incl. the 1.5·N/fmin zero-pad rule
-    (ts_library.py:805-818)."""
-    sig = datagen.signals(spark, cases=["bandpass"], n=2048)
-    return analytics.filter_signals(sig, "bandpass", fmin=0.2, fmax=8.0)
-
-
 def q_signal_ellip_bandpass(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Elliptic (rp=0.1 dB, rs=100 dB) zero-phase band-pass incl. the
     1.5·N/fmin zero-pad rule — the reference's family='ellip' path
@@ -66,12 +52,6 @@ def q_signal_ellip_bandpass(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("i").cast("long").alias("i"),
         (F.col("acc") + F.lit(0.0)).alias("acc_f"),
     )
-
-
-def q_signal_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Decimate fast path (integer ratio) per ts_library.py:919-925."""
-    sig = datagen.signals(spark, cases=["lowpass"], n=2048)
-    return analytics.resample_signals(sig, 0.02)
 
 
 def q_signal_baseline(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -372,13 +352,6 @@ def q_signal_fas(spark: SparkSession, sf_dir: str) -> DataFrame:
     return analytics.fas_signals(sig, fmin=2.0, fmax=10.0)
 
 
-def q_signal_rotd50(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RotD50 response spectra per station (rotd50.f:185-235) — the
-    Fortran-subprocess replacement."""
-    sig = datagen.signals(spark, cases=["rotate30", "lowpass"], n=1024)
-    return analytics.rotd50_stations(sig, periods=[0.2, 0.5, 1.0, 2.0])
-
-
 def q_signal_rotd50_grid63(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RotD50 over the reference's EXACT 63-period output domain
     (rotd50.f:36-45) with its Famp1.5 first-crossing scalar
@@ -538,9 +511,10 @@ def q_signal_process_dt(spark: SparkSession, sf_dir: str) -> DataFrame:
     (process_timeseries_dt, ts_library.py:992-1043): interp dispatch →
     Butterworth-lowpass filtfilt — VALUE-CHECKED bit-exactly at the
     driver via the same filtfilt fold replay as signal_ellip_bandpass
-    (new_dt == dt exercises the no-op interp branch; the decimate and
-    taper stages are value-checked by decimate4 / taper_tukey, and the
-    full interp→taper→filter fixture composition stays pytest-pinned:
+    (new_dt == dt exercises the no-op interp branch; the taper stage is
+    value-checked by taper_tukey, the decimate stage is pytest-pinned by
+    tests/test_analytics.py::test_resample_decimate, and the full
+    interp→taper→filter fixture composition stays pytest-pinned:
     tests/test_analytics.py::test_process_signals_dt_matches_kernel_composition)."""
     sig = _event_sig(spark, sf_dir, cnt_min=16, rn_cap=64, dt=0.01)
     out = analytics.process_signals_dt(sig, new_dt=0.01, fmax=5.0, taper=None)

@@ -21,10 +21,10 @@ Representation contract (learned from the round-1 driver gate):
   (numerator/denominator or scaled integer division) wherever the ratio
   itself isn't load-bearing.
 - Accepted exceptions: (a) the trig-based kernels (taper_tukey,
-  rotmax_scan, haversine, rotate expressions) round transcendental
+  rotmax_scan, rotate expressions) round transcendental
   values — JVM Math.cos vs libm cos may differ by 1 ulp, so a value
   within ~1 ulp of a rounding boundary could flip one engine's last
-  digit; (b) gapfill_linear / integrate_trapezoid / median_by_type
+  digit; (b) gapfill_linear / integrate_trapezoid
   round float interpolations whose expression trees are identical on
   both sides, where only a representable-decimal tie could diverge.
   Data-dependent residual risk of order 1e-10 per row, accepted because
@@ -48,12 +48,6 @@ from pyspark.sql import functions as F
 from ts_process_spark.operators.textstats import _ensure_parallelism
 
 R = 6  # float rounding for oracle hash stability
-
-# The events.parquet event_type domain is a fixed datagen contract
-# (TESTDATA.md; verified identical at sf0.001/0.01/0.1).  Pinning it here
-# keeps query *construction* free of Spark actions — no .collect() driver
-# round-trips while building a plan (VERDICT r1 "what's wrong" #5).
-EVENT_TYPES = ("click", "error", "purchase", "signup", "view")
 
 # SQL-side exact integer surrogate for the 2-decimal double `value`
 _C = "CAST(round(value * 100) AS BIGINT)"
@@ -387,24 +381,6 @@ FROM (
 # ---------------------------------------------------- aggregates / search
 
 
-def q_median_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact interpolated median per event_type — the D50 median of the
-    RotD50 aggregate (rotd50.f:233-235 + sort.f)."""
-    ev = _events(spark, sf_dir)
-    return ev.groupBy("event_type").agg(
-        F.round(F.expr("percentile(value, 0.5)"), R).alias("median_value"),
-        F.round(F.expr("percentile(value, 0.95)"), R).alias("p95_value"),
-    )
-
-
-SQL_MEDIAN_BY_TYPE = f"""
-SELECT event_type,
-       round(quantile_cont(value, 0.5), {R}) AS median_value,
-       round(quantile_cont(value, 0.95), {R}) AS p95_value
-FROM events GROUP BY event_type
-"""
-
-
 def q_first_crossing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """First timestamp where |value| ≥ 1.5× the user's mean |value| — the
     Famp1.5 first-crossing search (rotd50.f:238-246): min over a filtered
@@ -447,39 +423,6 @@ SELECT e.user_id,
 FROM events e JOIN thr USING (user_id)
 WHERE 2 * thr.n * abs({_C.replace('value', 'e.value')}) >= 3 * thr.sum_abs_c
 GROUP BY e.user_id
-"""
-
-
-def q_decimate4(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Integer-factor downsample: keep every 4th event per user in time
-    order (the `decimate` fast path, ts_library.py:919-925).
-
-    NOT registered since round 4: its path is a strict sub-stage of
-    signal_process_dt's resample leg, and the freed slot value-checks
-    the native media decode instead (queries_docs.
-    q_multimodal_decoded_stats).  Stays pytest-pinned via
-    tests/test_plans.py::test_dropped_registry_variants."""
-    ev = _events(spark, sf_dir)
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    return (
-        ev.withColumn("rn", F.row_number().over(w))
-        .where((F.col("rn") - 1) % 4 == 0)
-        .groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_kept"),
-            F.round(F.sum("value"), 2).alias("sum_kept"),
-        )
-    )
-
-
-SQL_DECIMATE4 = """
-SELECT user_id, count(*) AS n_kept, round(sum(value), 2) AS sum_kept
-FROM (
-    SELECT user_id, value,
-           row_number() OVER (PARTITION BY user_id ORDER BY ts NULLS FIRST, event_id) AS rn
-    FROM events
-) WHERE (rn - 1) % 4 = 0
-GROUP BY user_id
 """
 
 
@@ -526,49 +469,6 @@ FROM s GROUP BY user_id
 
 
 # ----------------------------------------------------------------- joins
-
-
-def q_sync_streams(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full-outer alignment of two event streams on a shared 1-minute
-    grid per user — `synchronize_all_stations` recast as a time-grid
-    join (process_timeseries.py:53-138; 1-sample repair → coalesce 0)."""
-    ev = _events(spark, sf_dir)
-    ta, tb = EVENT_TYPES[0], EVENT_TYPES[1]
-    a = (
-        ev.where(F.col("event_type") == ta)
-        .groupBy("user_id", F.date_trunc("minute", "ts").alias("bucket"))
-        .agg(F.sum(_cents(F.col("value"))).alias("va_c"))
-    )
-    b = (
-        ev.where(F.col("event_type") == tb)
-        .groupBy("user_id", F.date_trunc("minute", "ts").alias("bucket"))
-        .agg(F.sum(_cents(F.col("value"))).alias("vb_c"))
-    )
-    j = a.join(b, ["user_id", "bucket"], "full_outer")
-    return j.select(
-        "user_id",
-        F.date_format("bucket", "yyyy-MM-dd HH:mm:ss").alias("bucket_ts"),
-        F.coalesce(F.col("va_c"), F.lit(0)).alias("va_c"),
-        F.coalesce(F.col("vb_c"), F.lit(0)).alias("vb_c"),
-    )
-
-
-SQL_SYNC_STREAMS = f"""
-WITH a AS (
-    SELECT user_id, date_trunc('minute', ts) AS bucket,
-           CAST(sum({_C}) AS BIGINT) AS va_c
-    FROM events WHERE event_type = '{EVENT_TYPES[0]}' GROUP BY 1, 2
-), b AS (
-    SELECT user_id, date_trunc('minute', ts) AS bucket,
-           CAST(sum({_C}) AS BIGINT) AS vb_c
-    FROM events WHERE event_type = '{EVENT_TYPES[1]}' GROUP BY 1, 2
-)
-SELECT coalesce(a.user_id, b.user_id) AS user_id,
-       strftime(coalesce(a.bucket, b.bucket), '%Y-%m-%d %H:%M:%S') AS bucket_ts,
-       coalesce(va_c, 0) AS va_c,
-       coalesce(vb_c, 0) AS vb_c
-FROM a FULL OUTER JOIN b ON a.user_id = b.user_id AND a.bucket = b.bucket
-"""
 
 
 def q_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -642,37 +542,6 @@ FROM (
 """
 
 
-def q_user_nation_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Broadcast dim join (J2, station-list lookup): events → customer →
-    nation, event stats per nation."""
-    ev = _events(spark, sf_dir)
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet").select(
-        F.col("c_custkey").alias("user_id"), "c_nationkey"
-    )
-    nation = spark.read.parquet(f"{sf_dir}/nation.parquet").select(
-        F.col("n_nationkey").alias("c_nationkey"), "n_name"
-    )
-    return (
-        ev.join(F.broadcast(cust), "user_id")
-        .join(F.broadcast(nation), "c_nationkey")
-        .groupBy("n_name")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(_cents(F.col("value"))).alias("sum_value_c"),
-        )
-    )
-
-
-SQL_USER_NATION_ROLLUP = f"""
-SELECT n.n_name, count(*) AS n_events,
-       CAST(sum(CAST(round(e.value * 100) AS BIGINT)) AS BIGINT) AS sum_value_c
-FROM events e
-JOIN customer c ON c.c_custkey = e.user_id
-JOIN nation n ON n.n_nationkey = c.c_nationkey
-GROUP BY n.n_name
-"""
-
-
 # ------------------------------------------------- relational classics
 
 
@@ -713,32 +582,6 @@ SELECT l_returnflag, l_linestatus,
 FROM lineitem
 WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
 GROUP BY l_returnflag, l_linestatus
-"""
-
-
-def q_revenue_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q6-style filtered agg — predicate pushdown showcase."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    return li.where(
-        (F.col("l_shipdate") >= F.lit("1995-01-01"))
-        & (F.col("l_shipdate") < F.lit("1996-01-01"))
-        & (F.col("l_discount").between(0.03, 0.07))
-        & (F.col("l_quantity") < 24)
-    ).agg(
-        F.sum(
-            F.round(F.col("l_extendedprice") * F.col("l_discount") * 10000).cast(
-                "long"
-            )
-        ).alias("revenue_e4")
-    )
-
-
-SQL_REVENUE_FORECAST = """
-SELECT CAST(sum(CAST(round(l_extendedprice * l_discount * 10000) AS BIGINT))
-            AS BIGINT) AS revenue_e4
-FROM lineitem
-WHERE l_shipdate >= TIMESTAMP '1995-01-01' AND l_shipdate < TIMESTAMP '1996-01-01'
-  AND l_discount BETWEEN 0.03 AND 0.07 AND l_quantity < 24
 """
 
 
@@ -785,178 +628,7 @@ FROM (
 """
 
 
-# --------------------------------------------------- scalar function ops
-
-
-def q_haversine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Haversine great-circle distance (ts_library.py:126-151) as a pure
-    column expression over synthetic coords derived from lineitem."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    lat1, lon1 = F.radians(F.col("l_discount") * 900 - 45), F.radians(
-        F.col("l_tax") * 1800 - 90
-    )
-    lat2, lon2 = F.radians(F.col("l_quantity") * 1.5 - 37), F.radians(
-        F.col("l_extendedprice") % 360 - 180
-    )
-    h = (
-        F.sin((lat2 - lat1) / 2) ** 2
-        + F.cos(lat1) * F.cos(lat2) * F.sin((lon2 - lon1) / 2) ** 2
-    )
-    dist = 2 * 6371.0 * F.asin(F.sqrt(h))
-    return li.select(
-        "l_orderkey", "l_linenumber", F.round(dist, 4).alias("dist_km")
-    )
-
-
-SQL_HAVERSINE = """
-SELECT l_orderkey, l_linenumber,
-    round(2 * 6371.0 * asin(sqrt(
-        pow(sin((radians(l_quantity * 1.5 - 37) - radians(l_discount * 900 - 45)) / 2), 2)
-        + cos(radians(l_discount * 900 - 45)) * cos(radians(l_quantity * 1.5 - 37))
-          * pow(sin((radians(fmod(l_extendedprice, 360) - 180)
-                     - radians(l_tax * 1800 - 90)) / 2), 2)
-    )), 4) AS dist_km
-FROM lineitem
-"""
-
-
-def q_unit_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Unit projections: m→cm ×100 (file_utilities.py:59-67), g→cm/s²
-    ×980.665 (ts_library.py:57), vertical sign flip
-    (file_utilities.py:46-57)."""
-    ev = _events(spark, sf_dir)
-    # outputs are exact decimals (2dp input × decimal constants) →
-    # integer-scale so Spark's BigDecimal rounding and DuckDB's
-    # multiply-round can't disagree on a decimal tie
-    return ev.select(
-        "event_id",
-        _cents(F.col("value")).alias("value_cm_c"),  # ×100 = cm in centi-units
-        # 2dp value × 3dp constant = 5dp exact decimal → ×1e5 is integer
-        F.round(F.col("value") * 980.665 * 100000).cast("long").alias("value_cmss_e5"),
-        (-_cents(F.col("value"))).alias("value_flipped_c"),
-    )
-
-
-SQL_UNIT_SCALE = """
-SELECT event_id,
-       CAST(round(value * 100) AS BIGINT) AS value_cm_c,
-       CAST(round(value * 980.665 * 100000) AS BIGINT) AS value_cmss_e5,
-       -CAST(round(value * 100) AS BIGINT) AS value_flipped_c
-FROM events
-"""
-
-
-def q_json_props(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """JSON extraction from the props column (engine metrics pattern —
-    SURVEY §2.8 notes JSON only for lineage metrics) + aggregate.  The
-    integer parse is guarded by an explicit digits regex on BOTH sides:
-    the engines' bare string→int casts disagree on decimal strings
-    (DuckDB rounds, Spark ANSI errors) and DuckDB's json_extract errors
-    on malformed JSON where Spark returns NULL — the guards pin one
-    semantics (k counts iff the document is valid JSON and k is an
-    integer literal)."""
-    ev = _events(spark, sf_dir)
-    ks = F.get_json_object("props", "$.k")
-    # \A..\z, not ^..$: Java's $ also matches before a trailing line
-    # terminator, so "123\n" would pass here yet fail DuckDB's
-    # regexp_full_match — anchor to the true string ends on both engines
-    k = F.when(ks.rlike(r"\A-?[0-9]+\z"), ks.cast("long"))
-    return ev.groupBy("event_type").agg(
-        F.sum(k).alias("sum_k"),
-        F.count(F.when(k.isNull(), 1)).alias("n_null_k"),
-    )
-
-
-SQL_JSON_PROPS = """
-SELECT event_type,
-       CAST(sum(k) AS BIGINT) AS sum_k,
-       count(CASE WHEN k IS NULL THEN 1 END) AS n_null_k
-FROM (
-    SELECT event_type,
-        CASE WHEN ks IS NOT NULL AND regexp_full_match(ks, '-?[0-9]+')
-             THEN CAST(ks AS BIGINT) END AS k
-    FROM (
-        SELECT event_type,
-            CASE WHEN json_valid(props)
-                 THEN json_extract_string(props, '$.k') END AS ks
-        FROM events
-    )
-)
-GROUP BY event_type
-"""
-
-
-def q_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Set operations (SURVEY §2.7 — absent in reference, union analog
-    compare_timeseries.py:302-310): users seen in the lexicographically
-    first event type but not the second, unioned with the reverse,
-    tagged."""
-    ev = _events(spark, sf_dir)
-    ta, tb = EVENT_TYPES[0], EVENT_TYPES[1]
-    a = ev.where(F.col("event_type") == ta).select("user_id").distinct()
-    b = ev.where(F.col("event_type") == tb).select("user_id").distinct()
-    only_a = a.exceptAll(b).withColumn("side", F.lit("a_not_b"))
-    only_b = b.exceptAll(a).withColumn("side", F.lit("b_not_a"))
-    both = a.intersect(b).withColumn("side", F.lit("both"))
-    return only_a.unionByName(only_b).unionByName(both)
-
-
-SQL_SET_OPS = f"""
-WITH a AS (SELECT DISTINCT user_id FROM events WHERE event_type = '{EVENT_TYPES[0]}'),
-     b AS (SELECT DISTINCT user_id FROM events WHERE event_type = '{EVENT_TYPES[1]}')
-SELECT user_id, 'a_not_b' AS side FROM (SELECT user_id FROM a EXCEPT SELECT user_id FROM b)
-UNION ALL
-SELECT user_id, 'b_not_a' AS side FROM (SELECT user_id FROM b EXCEPT SELECT user_id FROM a)
-UNION ALL
-SELECT user_id, 'both' AS side FROM (SELECT user_id FROM a INTERSECT SELECT user_id FROM b)
-"""
-
-
-def q_cube_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CUBE over (event_type, day) — multi-dimensional rollup metrics
-    (free in Spark; SURVEY §2.4 'absent in reference') — plus exact
-    distinct-user cardinality per cell (§2.4 distinct)."""
-    ev = _events(spark, sf_dir).withColumn(
-        "day", F.date_format(F.date_trunc("day", "ts"), "yyyy-MM-dd")
-    )
-    return ev.cube("event_type", "day").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(_cents(F.col("value"))).alias("sum_value_c"),
-        F.countDistinct("user_id").alias("n_users"),
-    )
-
-
-SQL_CUBE_COUNTS = f"""
-SELECT event_type, strftime(date_trunc('day', ts), '%Y-%m-%d') AS day,
-       count(*) AS n,
-       CAST(sum({_C}) AS BIGINT) AS sum_value_c,
-       count(DISTINCT user_id) AS n_users
-FROM events
-GROUP BY CUBE (event_type, day)
-"""
-
-
-def q_pivot_types(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pivot event types to columns per user (conditional aggregation —
-    identical semantics spelled as CASE sums in the oracle)."""
-    ev = _events(spark, sf_dir)
-    types = list(EVENT_TYPES[:3])
-    piv = (
-        ev.groupBy("user_id")
-        .pivot("event_type", types)
-        .agg(F.sum(_cents(F.col("value"))))
-    )
-    cols = [F.col("user_id")] + [
-        F.coalesce(F.col(f"`{t}`"), F.lit(0)).alias(f"sum_{t}_c") for t in types
-    ]
-    return piv.select(*cols)
-
-
-SQL_PIVOT_TYPES = "SELECT user_id,\n       " + ",\n       ".join(
-    f"coalesce(CAST(sum(CASE WHEN event_type = '{t}' THEN {_C} END) AS BIGINT), 0)"
-    f" AS sum_{t}_c"
-    for t in EVENT_TYPES[:3]
-) + "\nFROM events GROUP BY user_id"
+# -------------------------------------------------------- padding removal
 
 
 def q_remove_padding(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1055,8 +727,7 @@ def q_rotmax_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     take the peak |rotated| per azimuth (A1), then the median-of-maxima
     across azimuths (D50) and the max (D100).  The median is the exact
     18th order statistic (a picked element, no interpolation arithmetic
-    → engine-stable); the interpolated-median path is covered by
-    median_by_type.  The oscillator-response half of RotD50 (an IIR
+    → engine-stable).  The oscillator-response half of RotD50 (an IIR
     recurrence) stays in the Arrow kernel, rows-only + pytest-pinned."""
     ev = _events(spark, sf_dir)
     # r9: sparse-bucket key spread for the grid aggregate (see
@@ -1669,30 +1340,9 @@ def queries_ts() -> dict[str, object]:
         # (stream_sessionize) classes.
         "stream_dedup": q_stream_dedup,
         "asof_join": q_asof_join,
-        # Rotated OUT of the 50-slot gate (queries + oracles stay in
-        # this module, strict-compared by tests/test_rotated_out_slots):
-        # - round 5 (VERDICT r4 #1): haversine / unit_scale / json_props
-        #   → slots went to doc_bm25 / doc_tfidf_top5 / emb_pq_ann.
-        # - round 6 (VERDICT r5 #1): set_ops / pivot_types /
-        #   revenue_forecast (SQL-trivial; distinct/union/conditional-agg
-        #   and filtered-agg semantics also ride inside cube_counts,
-        #   user_nation_rollup, pricing_summary) → slots went to
-        #   gopher_quality_flags / pack_documents / emb_ivfpq_ann
-        #   (queries_docs.py).
-        # - round 6 late: top3_per_supplier (plain row_number rank)
-        #   → slot went to doc_span_dedup (queries_docs.py).
-        # - round 7 (VERDICT r6 #1/#3): median_by_type (its exact-median
-        #   sort semantics also ride inside rotmax_scan) → slot went to
-        #   doc_pii_scrub (queries_docs.py); batch sessionize → slot
-        #   went to stream_sessionize above.
-        # - round 8 (VERDICT r7 #1/#2/#6/#7): cube_counts /
-        #   pricing_summary (judge-named SQL-trivial), user_nation_rollup
-        #   (broadcast-dim-join semantics also ride inside
-        #   first_crossing's broadcast station lookup) and sync_streams
-        #   (J1 grid alignment also gate-covered bit-exactly by
-        #   signal_synchronize) → slots went to doc_decontam /
-        #   emb_semdedup / multimodal_media_metadata (queries_docs.py)
-        #   and stream_dedup above.
+        # Rotated out of the 50-slot gate and kept only because the
+        # frozen bench.py times them: sessionize, pricing_summary and
+        # top3_per_supplier (strict pin in tests/test_rotated_out_slots).
         "taper_tukey": q_taper_tukey,
         "rotmax_scan": q_rotmax_scan,
     }

@@ -19,7 +19,6 @@ file, the reference's own unit of output).
 
 from __future__ import annotations
 
-import os
 import re
 
 import numpy as np
@@ -310,10 +309,6 @@ def read_rwg(spark: SparkSession, path: str) -> DataFrame:
         F.col("c2").alias("h2"),
         F.col("c3").alias("ver"),
     )
-
-
-read_edge = read_rwg  # EDGE shares the skip-negative-time semantics
-# (edge2bbp.py:82-128)
 
 
 def write_bbp(
