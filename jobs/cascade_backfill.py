@@ -35,7 +35,9 @@ def main() -> None:
                          "for the seeded generator")
     ap.add_argument("--root", required=True, help="tier-table output root")
     ap.add_argument("--buckets", type=int, default=64,
-                    help="conv_id hash buckets = resume/commit granularity")
+                    help="conv_id hash buckets = resume/commit granularity; "
+                         "a resume must reuse the root's value (any other "
+                         "is refused)")
     ap.add_argument("--seed", type=int, default=42)
     ap.add_argument("--parallelism", type=int, default=4,
                     help="concurrent bucket chains (1 = serial); the "

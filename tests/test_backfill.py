@@ -3,6 +3,9 @@ identical final state and no double-processing (SURVEY §5.4)."""
 
 from __future__ import annotations
 
+import json
+import os
+
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
@@ -87,6 +90,44 @@ def test_backfill_crash_and_resume(spark, raw, tmp_path):
 
     # integrity sweep
     assert verify_lineage(spark, tables) == []
+
+
+def _tree(root):
+    """(relative path → file bytes) of everything under ``root``."""
+    out = {}
+    for d, _, files in os.walk(root):
+        for f in files:
+            path = os.path.join(d, f)
+            with open(path, "rb") as fh:
+                out[os.path.relpath(path, root)] = fh.read()
+    return out
+
+
+def test_resume_with_other_bucket_count_refused(spark, raw, tmp_path):
+    """Lineage keys are (tier, bucket_id), so a resume that re-buckets
+    would skip units whose conversations now hash elsewhere and write
+    those conversations a second time.  A crash at 4 buckets resumed at
+    8 must raise before it writes anything; so must a root whose
+    records do not say how they were bucketed."""
+    tables = TableSet(str(tmp_path / "t"))
+    assert backfill(spark, raw, tables, n_buckets=N_BUCKETS, fail_after=5)[
+        "crashed"
+    ]
+    assert {r["n_buckets"] for r in tables.read_lineage()} == {N_BUCKETS}
+    before = _tree(tables.root)
+    with pytest.raises(ValueError, match="n_buckets"):
+        backfill(spark, raw, tables, n_buckets=2 * N_BUCKETS)
+    assert _tree(tables.root) == before
+
+    recs = tables.read_lineage()
+    with open(tables.lineage_path, "w") as f:
+        for r in recs:
+            r.pop("n_buckets")
+            f.write(json.dumps(r) + "\n")
+    before = _tree(tables.root)
+    with pytest.raises(ValueError, match="n_buckets"):
+        backfill(spark, raw, tables, n_buckets=N_BUCKETS)
+    assert _tree(tables.root) == before
 
 
 def test_lineage_detects_tamper(spark, raw, tmp_path):

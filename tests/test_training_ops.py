@@ -657,7 +657,7 @@ def test_pq_ann_codes_and_recall(spark):
     }
     assert g1 == g2  # deterministic
     # exact quantized-L2 top-k ground truth
-    base = similarity.cosine_base(emb, "vec_id", "embedding")
+    base = similarity.cosine_base(emb)
     q = base.orderBy("id").limit(8).select(
         F2.col("id").alias("query_id"), F2.col("q").alias("qq")
     )
@@ -717,7 +717,7 @@ def test_ivfpq_ann_composition(spark):
         for r in similarity.ivf_cell_assignments(emb, 16).collect()
     }
     # exact ground truth for recall
-    base = similarity.cosine_base(emb, "vec_id", "embedding")
+    base = similarity.cosine_base(emb)
     q = base.orderBy("id").limit(8).select(
         F3.col("id").alias("query_id"), F3.col("q").alias("qq")
     )
@@ -753,7 +753,7 @@ def test_ivfpq_ann_composition(spark):
     # of ITS query's probed cells
     # recompute the probe rule: nprobe best cells by rounded quantized
     # cosine (desc, cell_id tie) — same expression as the operator
-    cell_rows = similarity.cosine_base(emb, "vec_id", "embedding")
+    cell_rows = similarity.cosine_base(emb)
     cells = cell_rows.orderBy("id").limit(16).select(
         F3.col("id").alias("cell_id"), F3.col("q").alias("cv"),
         F3.col("nq").alias("ncv"),
@@ -913,7 +913,7 @@ def test_pq_kmeans_trains_reproducibly_and_improves(spark):
     assert cb1.shape == cb0.shape and (cb1 == cb1b).all()
     assert (cb1 != cb0).any()  # training actually moved the codebook
 
-    base = similarity.cosine_base(emb, "vec_id", "embedding")
+    base = similarity.cosine_base(emb)
     rows = base.select("id", "q").collect()
     ids = np.array([r["id"] for r in rows])
     Q = np.stack([np.asarray(r["q"], dtype=np.int64) for r in rows])
@@ -2076,25 +2076,25 @@ def test_dedup_lines_plan_shape(spark):
 # ------------------------------------------------------- semantic dedup
 
 
+# Hand-checkable SemDeDup fixture (n_cells=2): two well-separated
+# directions, exact and near duplicates inside each cluster, and a zero
+# vector excluded by the norm filter.
+SEMDEDUP_CRAFTED = [
+    (0, [1.0, 0.0, 0.0, 0.0]),          # centroid/cell A (first-2 rule)
+    (1, [0.0, 1.0, 0.0, 0.0]),          # centroid/cell B
+    (2, [2.0, 0.0, 0.0, 0.0]),          # same direction as 0 → dup
+    (3, [0.999, 0.0447, 0.0, 0.0]),     # cos≈0.999 vs 0 → dup
+    (4, [0.0, 1.0, 0.8, 0.0]),          # cell B, cos vs 1 ≈ 0.781 → kept
+    (5, [0.0, 1.0, 0.801, 0.0]),        # near-dup of 4 (cos ≈ 0.99997)
+    (6, [0.0, 0.0, 0.0, 0.0]),          # zero norm → excluded
+]
+
+
 def test_semantic_dedup_crafted(spark):
-    """Hand-checkable SemDeDup fixture: two well-separated directions,
-    exact and near duplicates inside each cluster, min-id keep policy,
-    and a zero vector excluded by the norm filter."""
-    import pandas as pd
-
-    from ts_process_spark.operators import similarity
-
-    rows = [
-        (0, [1.0, 0.0, 0.0, 0.0]),          # centroid/cell A (first-2 rule)
-        (1, [0.0, 1.0, 0.0, 0.0]),          # centroid/cell B
-        (2, [2.0, 0.0, 0.0, 0.0]),          # same direction as 0 → dup
-        (3, [0.999, 0.0447, 0.0, 0.0]),     # cos≈0.999 vs 0 → dup
-        (4, [0.0, 1.0, 0.8, 0.0]),          # cell B, cos vs 1 ≈ 0.781 → kept
-        (5, [0.0, 1.0, 0.801, 0.0]),        # near-dup of 4 (cos ≈ 0.99997)
-        (6, [0.0, 0.0, 0.0, 0.0]),          # zero norm → excluded
-    ]
+    """SEMDEDUP_CRAFTED at threshold 0.95: the min-id keep policy, row
+    by row."""
     embs = spark.createDataFrame(
-        pd.DataFrame(rows, columns=["vec_id", "embedding"])
+        pd.DataFrame(SEMDEDUP_CRAFTED, columns=["vec_id", "embedding"])
     )
     got = {
         r["vec_id"]: (
@@ -2163,6 +2163,28 @@ def test_semantic_dedup_matches_duckdb(spark):
         ).collect()
     )
     assert shuffled == got
+
+
+def test_semantic_dedup_jvm_twin_matches_arrow_kernel(spark):
+    """``arrow_pairwise=False`` — the JVM pair-join twin of the grouped
+    Arrow kernel — gives the same rows as the default, on the real
+    embeddings table and on the crafted fixture."""
+    real = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    crafted = spark.createDataFrame(
+        pd.DataFrame(SEMDEDUP_CRAFTED, columns=["vec_id", "embedding"])
+    )
+    for embs, kw in (
+        (real, {"n_cells": 16, "threshold": 0.4}),
+        (crafted, {"n_cells": 2, "threshold": 0.95}),
+    ):
+        arrow = sorted(map(tuple, similarity.semantic_dedup_stats(
+            embs, **kw
+        ).collect()))
+        jvm = sorted(map(tuple, similarity.semantic_dedup_stats(
+            embs, arrow_pairwise=False, **kw
+        ).collect()))
+        assert jvm == arrow
+        assert any(r[4] for r in arrow)  # duplicates found: not vacuous
 
 
 def test_semantic_dedup_plan_shape(spark):

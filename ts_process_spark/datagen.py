@@ -159,19 +159,18 @@ _FREQS = np.array([0.2, 0.5, 1.0, 2.0, 5.0, 10.0])
 def gen_signal_pdf(
     case: str,
     component: str,
-    seed: int = 42,
     n: int = 4096,
-    dt: float = 0.01,
     drift: float = 0.0,
 ) -> pd.DataFrame:
     """vel(t) = Σ A_j sin(2π f_j t + φ_j) + noise + drift·t; acc/dis are
     the analytic derivative / trapezoid integral (ts_library.py:96-124)."""
     import zlib
 
+    dt = 0.01
     comp_k = {"h1": 0, "h2": 1, "ver": 2}[component]
     # crc32, not hash(): Python's str hash is salted per process and would
     # break cross-run determinism.
-    rng = np.random.default_rng([seed, zlib.crc32(case.encode()), comp_k])
+    rng = np.random.default_rng([42, zlib.crc32(case.encode()), comp_k])
     t = np.arange(n) * dt
     amps = rng.uniform(0.1, 2.0, size=len(_FREQS))
     phases = rng.uniform(0, 2 * np.pi, size=len(_FREQS))
@@ -202,14 +201,11 @@ def gen_signal_pdf(
 def signals(
     spark: SparkSession,
     cases: list[str] | None = None,
-    seed: int = 42,
     n: int = 4096,
-    dt: float = 0.01,
 ) -> DataFrame:
     cases = cases or ["lowpass", "highpass", "bandpass", "rotate30", "baseline"]
     pdfs = [
-        gen_signal_pdf(c, comp, seed=seed, n=n, dt=dt,
-                       drift=0.3 if c == "baseline" else 0.0)
+        gen_signal_pdf(c, comp, n=n, drift=0.3 if c == "baseline" else 0.0)
         for c in cases
         for comp in ("h1", "h2", "ver")
     ]

@@ -330,14 +330,12 @@ import functools as _functools
 
 
 @_functools.lru_cache(maxsize=64)
-def cheby1_sos(N: int, rp: float, Wn: float, btype: str = "lowpass") -> np.ndarray:
-    """Chebyshev-I digital design (closed-form poles) — the anti-alias
-    filter family scipy's decimate() uses (order 8, rp=0.05, cutoff
-    0.8/q), which is the reference's downsample fast path
+def cheby1_sos(N: int, rp: float, Wn: float) -> np.ndarray:
+    """Chebyshev-I digital lowpass design (closed-form poles) — the
+    anti-alias filter family scipy's decimate() uses (order 8, rp=0.05,
+    cutoff 0.8/q), which is the reference's downsample fast path
     (ts_library.py:919-925).  lru_cached like design_sos — the decimate
     kernel calls it once per series per column."""
-    if btype != "lowpass":
-        raise NotImplementedError("cheby1 used only for the decimate lowpass")
     eps = np.sqrt(10 ** (0.1 * rp) - 1.0)
     mu = np.arcsinh(1.0 / eps) / N
     m = np.arange(1, N + 1)
@@ -496,10 +494,10 @@ def sosfiltfilt(sos: np.ndarray, x: np.ndarray) -> np.ndarray:
 # prototype → frequency transform → bilinear pipeline.
 
 
-def _landen_seq(k: float, tol: float = 1e-16) -> list[float]:
+def _landen_seq(k: float) -> list[float]:
     """Descending Landen sequence k → 0."""
     out = []
-    while k > tol and len(out) < 64:
+    while k > 1e-16 and len(out) < 64:
         k = (k / (1.0 + np.sqrt(1.0 - k * k))) ** 2
         out.append(k)
     return out
@@ -1031,8 +1029,7 @@ def fft_radix2(x: np.ndarray, points: int) -> tuple[np.ndarray, np.ndarray]:
     return re, im
 
 
-def fas(data: np.ndarray, dt: float, points: int, fmin: float, fmax: float,
-        s_factor: int = 3):
+def fas(data: np.ndarray, dt: float, points: int, fmin: float, fmax: float):
     """Fourier amplitude spectrum with frequency slice + smoothing
     (ts_library.py:411-437).  points ≤ _FFT_EXACT_MAX takes the
     fixed-op-order radix-2 path with the explicit sqrt(re²+im²)
@@ -1047,7 +1044,7 @@ def fas(data: np.ndarray, dt: float, points: int, fmin: float, fmax: float,
     deltaf = (1.0 / dt) / points
     inif = int(fmin / deltaf)
     endf = int(fmax / deltaf) + 1
-    return freq[inif:endf], smooth(afs[inif:endf], s_factor)
+    return freq[inif:endf], smooth(afs[inif:endf])
 
 
 def get_points(samples: int) -> int:
@@ -1162,11 +1159,11 @@ def rotd50(
     acc2: np.ndarray,
     dt: float,
     periods: np.ndarray = ROTD50_PERIODS,
-    damping: float = 0.05,
 ):
-    """RotD50 per period: oscillator histories for both components,
-    amplitude pre-filter at min(Sa)/1.5, 90 rotation angles → 180 Sa
-    values, median = mean of sorted ranks 90/91 (rotd50.f:185-235).
+    """RotD50 per period: 5%-damped oscillator histories for both
+    components, amplitude pre-filter at min(Sa)/1.5, 90 rotation angles
+    → 180 Sa values, median = mean of sorted ranks 90/91
+    (rotd50.f:185-235).
     Returns (psa_1, psa_2, rotd50) arrays over `periods`."""
     n = min(len(acc1), len(acc2))
     acc1, acc2 = np.asarray(acc1[:n]), np.asarray(acc2[:n])
@@ -1175,8 +1172,8 @@ def rotd50(
     rd50 = np.empty(len(periods))
     for ip, period in enumerate(periods):
         w = 2.0 * np.pi / period
-        th1 = oscillator_response(acc1, w, damping, dt)
-        th2 = oscillator_response(acc2, w, damping, dt)
+        th1 = oscillator_response(acc1, w, 0.05, dt)
+        th2 = oscillator_response(acc2, w, 0.05, dt)
         sa1, sa2 = calc_sa(th1), calc_sa(th2)
         test = min(sa1, sa2) / 1.5
         mask = np.maximum(np.abs(th1), np.abs(th2)) > test

@@ -65,7 +65,6 @@ def filter_signals(
     btype: str,
     fmin: float = 0.0,
     fmax: float = 0.0,
-    N: int = 4,
     cols: Iterable[str] = _SIG_COLS,
     family: str = "butter",
     rp: float = 0.1,
@@ -75,8 +74,9 @@ def filter_signals(
     chunk_overlap: int | None = None,
 ) -> DataFrame:
     """Zero-phase filter per series (filter_timeseries,
-    ts_library.py:779-894), incl. the 1.5·N/fmin zero-pad rule for
-    high/band-pass; output keeps the input grid (padding is internal).
+    ts_library.py:779-894) of order N=4, incl. the 1.5·N/fmin zero-pad
+    rule for high/band-pass; output keeps the input grid (padding is
+    internal).
     ``family`` ∈ {'butter', 'ellip'} with rp/rs ripple params for the
     elliptic family — the reference's full filter_data dispatch.
 
@@ -97,9 +97,9 @@ def filter_signals(
             n0 = len(x)
             pad = 0
             if fmin and btype in ("highpass", "bandpass"):
-                x, pad = dsp.pad_for_highpass(x, dt, fmin, N)
+                x, pad = dsp.pad_for_highpass(x, dt, fmin)
             y = dsp.filter_data(
-                x, dt, btype, fmin=fmin, fmax=fmax, N=N,
+                x, dt, btype, fmin=fmin, fmax=fmax,
                 family=family, rp=rp, rs=rs,
             )
             out[c] = y[pad : pad + n0] if pad else y
@@ -140,7 +140,7 @@ def filter_signals(
         # dt=0.001, fmin=0.2 gives pad 15000 > the 8192 default
         if fmin and btype in ("highpass", "bandpass") and len(pdf):
             dt = float(pdf["dt"].iloc[0])
-            pad = int(np.round((1.5 * N / fmin) / dt / 2.0))
+            pad = int(np.round((1.5 * 4 / fmin) / dt / 2.0))
             if pad > chunk_overlap:
                 raise ValueError(
                     f"filter_signals chunk_overlap={chunk_overlap} < pad "
@@ -395,7 +395,6 @@ def synchronize_stations(
     stamp_s: float | None = None,
     eq_time_s: float = 0.0,
     leading: float = 0.0,
-    sync_end_time: bool = True,
     m: int = 20,
 ) -> DataFrame:
     """Distributed synchronize_all_stations: the per-station plan is a
@@ -414,7 +413,7 @@ def synchronize_stations(
         .agg(F.first("dt").alias("dt"), F.max("n").alias("n"))
     )
     plan_df = synchronization_plan_df(
-        per, obs_station, stamp_s, eq_time_s, leading, sync_end_time
+        per, obs_station, stamp_s, eq_time_s, leading
     )
     out_schema = df.schema
     src = sdf.join(F.broadcast(plan_df), "station").drop("station")
@@ -540,14 +539,14 @@ FAS_SCHEMA = T.StructType(
 
 
 def fas_signals(
-    df: DataFrame, col: str = "acc", fmin: float = 0.1, fmax: float = 20.0
+    df: DataFrame, fmin: float = 0.1, fmax: float = 20.0
 ) -> DataFrame:
     """Fourier amplitude spectrum per series (FAS, ts_library.py:411-437)
     with the next-pow-2 point count (get_points, :380-391)."""
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
         dt = float(pdf["dt"].iloc[0])
-        x = pdf[col].to_numpy(dtype=np.float64)
+        x = pdf["acc"].to_numpy(dtype=np.float64)
         freq, amp = dsp.fas(x, dt, dsp.get_points(len(x)), fmin, fmax)
         return pd.DataFrame(
             {"series_id": pdf["series_id"].iloc[0], "freq": freq, "amplitude": amp}
@@ -568,60 +567,26 @@ PSA_SCHEMA = T.StructType(
 def response_spectrum(
     df: DataFrame,
     periods: Iterable[float] = tuple(dsp.ROTD50_PERIODS),
-    damping: float = 0.05,
-    col: str = "acc",
-    fan_out: bool = False,
 ) -> DataFrame:
-    """PSA per (series, period) over the period grid (the 63-period
-    domain, rotd50.f:36-45; calcrsp.f oscillator semantics).
+    """PSA of ``acc`` at 5% damping per (series, period) over the period
+    grid (the 63-period domain, rotd50.f:36-45; calcrsp.f oscillator
+    semantics).
 
-    DEFAULT plan (the rotd50_stations pattern): ONE group pass per
-    series computes every period — the series' samples cross the shuffle
-    exactly once instead of ×len(periods), which at the reference's 2M
-    samples × 63 periods is the difference between shuffling 16 MB and
-    1 GB per station.  The oscillator itself is the vectorized
-    geometric-scan kernel (dsp.oscillator_response), so the per-period
-    loop below is ~63 NumPy scans, no per-sample Python.
-
-    ``fan_out=True`` keeps the old crossJoin-with-period-dim plan for
-    the regime where it wins: few very long series and periods ≫ cores
-    (each (series, period) becomes an independent task)."""
+    The rotd50_stations pattern: ONE group pass per series computes
+    every period — the series' samples cross the shuffle exactly once
+    instead of ×len(periods), which at the reference's 2M samples × 63
+    periods is the difference between shuffling 16 MB and 1 GB per
+    station.  The oscillator itself is the vectorized geometric-scan
+    kernel (dsp.oscillator_response), so the per-period loop below is
+    ~63 NumPy scans, no per-sample Python."""
     ps = np.array(sorted(float(p) for p in periods))
-
-    if fan_out:
-        spark = df.sparkSession
-        dim = spark.createDataFrame(
-            [(float(p),) for p in ps],
-            T.StructType([T.StructField("period", T.DoubleType())]),
-        )
-        fan = df.crossJoin(F.broadcast(dim))
-
-        def fn1(pdf: pd.DataFrame) -> pd.DataFrame:
-            pdf = pdf.sort_values("i")
-            dt = float(pdf["dt"].iloc[0])
-            period = float(pdf["period"].iloc[0])
-            rsp = dsp.oscillator_response(
-                pdf[col].to_numpy(dtype=np.float64), 2.0 * np.pi / period,
-                damping, dt,
-            )
-            return pd.DataFrame(
-                {
-                    "series_id": [pdf["series_id"].iloc[0]],
-                    "period": [period],
-                    "psa": [dsp.calc_sa(rsp)],
-                }
-            )
-
-        return fan.groupBy("series_id", "period").applyInPandas(
-            fn1, schema=PSA_SCHEMA
-        )
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("i")
         dt = float(pdf["dt"].iloc[0])
-        x = pdf[col].to_numpy(dtype=np.float64)
+        x = pdf["acc"].to_numpy(dtype=np.float64)
         psa = [
-            dsp.calc_sa(dsp.oscillator_response(x, 2.0 * np.pi / p, damping, dt))
+            dsp.calc_sa(dsp.oscillator_response(x, 2.0 * np.pi / p, 0.05, dt))
             for p in ps
         ]
         return pd.DataFrame(
@@ -649,13 +614,11 @@ ROTD50_SCHEMA = T.StructType(
 def rotd50_stations(
     df: DataFrame,
     periods: Iterable[float] = tuple(dsp.ROTD50_PERIODS),
-    damping: float = 0.05,
-    col: str = "acc",
 ) -> DataFrame:
-    """RotD50 per station over the period grid — replaces the
-    reference's Fortran subprocess + PEER tempfile round-trip
-    (ts_library.py:207-271) with one grouped Arrow UDF; no files, no
-    chdir, thread-safe by construction."""
+    """RotD50 of ``acc`` at 5% damping per station over the period
+    grid — replaces the reference's Fortran subprocess + PEER tempfile
+    round-trip (ts_library.py:207-271) with one grouped Arrow UDF; no
+    files, no chdir, thread-safe by construction."""
     src = _station_col(df).where(F.col("orientation_deg").isNotNull())
     ps = np.array(sorted(periods))
 
@@ -681,11 +644,10 @@ def rotd50_stations(
         h2 = pdf[pdf["component"] == comps[1]].sort_values("i")
         dt = float(pdf["dt"].iloc[0])
         psa1, psa2, rd = dsp.rotd50(
-            h1[col].to_numpy(dtype=np.float64),
-            h2[col].to_numpy(dtype=np.float64),
+            h1["acc"].to_numpy(dtype=np.float64),
+            h2["acc"].to_numpy(dtype=np.float64),
             dt,
             periods=ps,
-            damping=damping,
         )
         return pd.DataFrame(
             {
@@ -711,9 +673,8 @@ def asof_join_grouped(
     left_on: str,
     right_on: str,
     right_cols: list[str],
-    direction: str = "backward",
 ) -> DataFrame:
-    """Scalable as-of join: cogrouped applyInPandas running
+    """Scalable backward as-of join: cogrouped applyInPandas running
     pd.merge_asof per key — sort-merge within groups, equi-partition
     across keys (the engine's answer to SURVEY §2.3 J1 at scale; the
     window-function form in queries_ts.q_asof_join is the
@@ -736,7 +697,7 @@ def asof_join_grouped(
             return l
         r = r.sort_values(right_on)[[right_on] + right_cols]
         merged = pd.merge_asof(
-            l, r, left_on=left_on, right_on=right_on, direction=direction,
+            l, r, left_on=left_on, right_on=right_on, direction="backward",
             suffixes=("", "_r"),
         )
         drop = [right_on + "_r"] if right_on + "_r" in merged.columns else (

@@ -8,10 +8,11 @@ Scale design (the part that matters at 100 TB):
   doc_id) pairs.
 - **MinHash+LSH**: the only near-dup path that avoids the O(n²)
   self-join.  Everything is JVM-side column expressions — shingles via
-  array HOFs, the 64-permutation signature via `min(xxhash64(shingle,
-  seed))` aggregates, banding via `xxhash64` of signature slices, and
-  the candidate generation is an equi-join on (band_id, band_hash),
-  which AQE can split if a degenerate band bucket gets hot.  No UDF.
+  sliced token arrays, the 64-permutation signature via
+  `min(xxhash64(shingle, seed))` aggregates, banding via `xxhash64` of
+  signature slices, and the candidate generation is an equi-join on
+  (band_id, band_hash), which AQE can split if a degenerate band bucket
+  gets hot.  No UDF.
 - **wordset_jaccard_pairs**: exact verifier — at scale it runs only on
   LSH candidates; the full within-group self-join form here doubles as
   the DuckDB-checkable oracle query at test scale.
@@ -46,15 +47,13 @@ def hash60(col: Column) -> Column:
 # ---------------------------------------------------------------- exact
 
 
-def exact_dedup(
-    df: DataFrame, key_col: Column, id_col: str = "doc_id"
-) -> DataFrame:
+def exact_dedup(df: DataFrame, key_col: Column) -> DataFrame:
     """Group rows by the md5 of ``key_col``; emit one row per duplicate
-    group: digest, group size, kept (min) id."""
+    group: digest, group size, kept (min) doc_id."""
     return (
-        df.select(F.md5(key_col).alias("digest"), F.col(id_col))
+        df.select(F.md5(key_col).alias("digest"), F.col("doc_id"))
         .groupBy("digest")
-        .agg(F.count(F.lit(1)).alias("n_docs"), F.min(id_col).alias("keep_id"))
+        .agg(F.count(F.lit(1)).alias("n_docs"), F.min("doc_id").alias("keep_id"))
     )
 
 
@@ -64,8 +63,6 @@ def exact_dedup(
 def wordset_jaccard_pairs(
     df: DataFrame,
     threshold: float,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     group_col: str | None = None,
     allow_unblocked: bool = False,
 ) -> DataFrame:
@@ -84,9 +81,9 @@ def wordset_jaccard_pairs(
             "oracle use (production near-dup: minhash_dedup_pairs)"
         )
     ws = df.select(
-        F.col(id_col).alias("id"),
+        F.col("doc_id").alias("id"),
         *( [F.col(group_col).alias("grp")] if group_col else [] ),
-        F.array_distinct(tokens(F.col(text_col))).alias("ws"),
+        F.array_distinct(tokens(F.col("text"))).alias("ws"),
     )
     a = ws.alias("a")
     b = ws.alias("b")
@@ -112,18 +109,12 @@ def wordset_jaccard_pairs(
 # ------------------------------------------------------------ minhash/LSH
 
 
-def shingles(col: Column, k: int = 3) -> Column:
-    """k-word shingles as strings (empty array when < k tokens)."""
-    toks = tokens(col)
-    n = F.size(toks)
-    return F.when(n >= k, F.transform(
-        F.sequence(F.lit(1), n - (k - 1)),
-        lambda i: F.concat_ws(" ", F.slice(toks, i, k)),
-    )).otherwise(F.array(F.concat_ws(" ", toks)))
-
-
 MINHASH_P = 2147483647  # 2^31 − 1: (h%P)·a + b < 2^62 — ANSI-overflow-safe
 MINHASH_MIX_A = 1103515245  # Horner multiplier for md5-mode band keys
+MINHASH_BANDS = 16  # LSH bands × rows per band = the 64 permutations
+MINHASH_ROWS_PER_BAND = 4
+MINHASH_PERMS = MINHASH_BANDS * MINHASH_ROWS_PER_BAND
+SHINGLE_K = 3  # words per MinHash shingle
 
 
 def minhash_affine_consts(p: int) -> tuple[int, int]:
@@ -135,36 +126,30 @@ def minhash_affine_consts(p: int) -> tuple[int, int]:
     return a, b
 
 
-def minhash_signatures(
-    df: DataFrame,
-    n_perm: int = 64,
-    k: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    hash_mode: str = "xxhash64",
-) -> DataFrame:
-    """One row per doc: ``sig`` = array of n_perm minhashes.  Shingles are
-    exploded once and each shingle STRING is hashed exactly once
-    (``xxhash64(sh)``); the n_perm permutations are ``min(xxhash64(h,
-    seed_p))`` over that fixed-width long — hashing 8 bytes n_perm times
-    instead of the full string n_perm times (~5× cheaper per shingle).
-    One hash-aggregate with n_perm min() columns, all JVM-side; partial
-    aggregation makes the shuffle O(docs × n_perm), never O(shingles)."""
+def minhash_signatures(df: DataFrame, hash_mode: str = "xxhash64") -> DataFrame:
+    """One row per doc: ``sig`` = array of MINHASH_PERMS minhashes over
+    SHINGLE_K-word shingles of ``text``.  Shingles are exploded once and
+    each shingle STRING is hashed exactly once (``xxhash64(sh)``); the
+    permutations are ``min(xxhash64(h, seed_p))`` over that fixed-width
+    long — hashing 8 bytes per permutation instead of the full string
+    (~5× cheaper per shingle).  One hash-aggregate with one min() column
+    per permutation, all JVM-side; partial aggregation makes the shuffle
+    O(docs × perms), never O(shingles)."""
+    k = SHINGLE_K
     src = _ensure_parallelism(
-        df.select(F.col(id_col).alias("id"), F.col(text_col)), "id"
+        df.select(F.col("doc_id").alias("id"), F.col("text")), "id"
     )
     hfn = F.xxhash64 if hash_mode == "xxhash64" else hash60
     # r9: shingle via posexploded indices + codegen concat_ws(slice())
-    # instead of the shingles() transform HOF (CodegenFallback,
-    # interpreted per shingle — measured 6× slower at sf1.0).  Same
-    # multiset of shingle strings: full k-windows for docs with >= k
-    # tokens, ONE whole-doc shingle otherwise (slice(toks, 1, k) of a
-    # short array IS the whole array, so the single index 1 reproduces
-    # shingles()'s short-doc convention, including "" for empty docs).
+    # instead of a transform HOF (CodegenFallback, interpreted per
+    # shingle — measured 6× slower at sf1.0).  Full k-windows for docs
+    # with >= k tokens, ONE whole-doc shingle otherwise (slice(toks, 1,
+    # k) of a short array IS the whole array, so the single index 1
+    # gives the whole-doc shingle, including "" for empty docs).
     # Tokenization is materialized below the generate (the
     # token_ngram_hashes lesson: an expensive expression alongside an
     # explode is moved ABOVE the Generate and re-run per row).
-    tok = src.select("id", tokens(F.col(text_col)).alias("toks"))
+    tok = src.select("id", tokens(F.col("text")).alias("toks"))
     n = F.size("toks")
     idx = F.when(n >= k, F.sequence(F.lit(1), n - (k - 1))).otherwise(
         F.array(F.lit(1))
@@ -192,9 +177,11 @@ def minhash_signatures(
         perm = lambda p: (  # noqa: E731
             hm * minhash_affine_consts(p)[0] + minhash_affine_consts(p)[1]
         ) % MINHASH_P
-    mins = [F.min(perm(p)).alias(f"m{p}") for p in range(n_perm)]
+    mins = [F.min(perm(p)).alias(f"m{p}") for p in range(MINHASH_PERMS)]
     agg = sh.groupBy("id").agg(*mins)
-    return agg.select("id", F.array(*[f"m{p}" for p in range(n_perm)]).alias("sig"))
+    return agg.select(
+        "id", F.array(*[f"m{p}" for p in range(MINHASH_PERMS)]).alias("sig")
+    )
 
 
 def _expand_bucket_pairs(buckets: DataFrame) -> DataFrame:
@@ -377,24 +364,22 @@ def bucket_cap_metrics(
     return prim.crossJoin(sub)  # two 1-row aggregates → one metrics row
 
 
-def lsh_candidate_pairs(
-    sigs: DataFrame,
-    n_bands: int = 16,
-    rows_per_band: int = 4,
-    hash_mode: str = "xxhash64",
-    max_bucket: int = 10_000,
-) -> DataFrame:
-    """Band the signature, hash each band, bucket on (band, hash).
+def lsh_candidate_pairs(sigs: DataFrame, hash_mode: str = "xxhash64") -> DataFrame:
+    """Band the signature into MINHASH_BANDS bands of
+    MINHASH_ROWS_PER_BAND rows, hash each band, bucket on (band, hash).
     Returns distinct candidate (id_a < id_b) pairs.
 
     Each band row also carries the NEXT band's hash (``bh2``) as the
     secondary-signature salt for `_bucket_pairs`' two-level split: a
-    boilerplate bucket beyond ``max_bucket`` re-buckets on (band, bh,
+    boilerplate bucket beyond its cap re-buckets on (band, bh,
     bh2) instead of being dropped wholesale, keeping recall for pairs
     that agree on consecutive bands (true near-dups agree on most)."""
 
     def band_hash(b: int) -> Column:
-        vals = [F.col("sig")[b * rows_per_band + r] for r in range(rows_per_band)]
+        vals = [
+            F.col("sig")[b * MINHASH_ROWS_PER_BAND + r]
+            for r in range(MINHASH_ROWS_PER_BAND)
+        ]
         if hash_mode == "xxhash64":
             return F.xxhash64(*vals)
         # md5 (oracle) mode: exact Horner mix over the band's minhashes —
@@ -417,9 +402,9 @@ def lsh_candidate_pairs(
                     F.struct(
                         F.lit(b).alias("band"),
                         band_hash(b).alias("bh"),
-                        band_hash((b + 1) % n_bands).alias("bh2"),
+                        band_hash((b + 1) % MINHASH_BANDS).alias("bh2"),
                     )
-                    for b in range(n_bands)
+                    for b in range(MINHASH_BANDS)
                 ]
             )
         ).alias("bb"),
@@ -429,21 +414,17 @@ def lsh_candidate_pairs(
         F.col("bb.bh").alias("bh"),
         F.col("bb.bh2").alias("bh2"),
     )
-    return _bucket_pairs(bands, ["band", "bh"], max_bucket, salt_col="bh2")
+    return _bucket_pairs(bands, ["band", "bh"], salt_col="bh2")
 
 
 def minhash_dedup_pairs(
     df: DataFrame,
     threshold: float = 0.9,
-    n_perm: int = 64,
-    k: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     hash_mode: str = "xxhash64",
 ) -> DataFrame:
     """Full MinHash-LSH near-dup pipeline: signatures → banded candidate
     pairs → exact word-set Jaccard verification ≥ threshold."""
-    sigs = minhash_signatures(df, n_perm, k, text_col, id_col, hash_mode)
+    sigs = minhash_signatures(df, hash_mode)
     cands = lsh_candidate_pairs(sigs, hash_mode=hash_mode)
     # Verify stage, candidate-first (round-3 VERDICT ask #2): the
     # broadcast side is the BARE pair ids exploded to (pair, side, id)
@@ -462,7 +443,7 @@ def minhash_dedup_pairs(
         F.explode(F.array(F.col("id_a"), F.col("id_b"))).alias("id"),
     )
     matched = (
-        df.select(F.col(id_col).alias("id"), F.col(text_col).alias("_t"))
+        df.select(F.col("doc_id").alias("id"), F.col("text").alias("_t"))
         .join(F.broadcast(sides), "id")
         .select(
             "id_a", "id_b",
@@ -491,12 +472,7 @@ def minhash_dedup_pairs(
 # ----------------------------------------------------------------- simhash
 
 
-def simhash64(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    hash_mode: str = "xxhash64",
-) -> DataFrame:
+def simhash64(df: DataFrame, hash_mode: str = "xxhash64") -> DataFrame:
     """SimHash: per-token hash, per-bit ±1 votes summed per doc,
     sign → bit.  One explode + one aggregate with conditional sums —
     no UDF.  64 bits with xxhash64 (production); 60 bits with the
@@ -504,8 +480,8 @@ def simhash64(
     n_bits = 64 if hash_mode == "xxhash64" else 60
     hfn = F.xxhash64 if hash_mode == "xxhash64" else hash60
     ex = _ensure_parallelism(
-        df.select(F.col(id_col).alias("id"), F.col(text_col)), "id"
-    ).select("id", F.explode(tokens(F.col(text_col))).alias("w")).select(
+        df.select(F.col("doc_id").alias("id"), F.col("text")), "id"
+    ).select("id", F.explode(tokens(F.col("text"))).alias("w")).select(
         "id", hfn(F.col("w")).alias("h")
     )
     votes = [
@@ -556,8 +532,6 @@ def simhash_chunk_layout(n_bits: int, max_hamming: int) -> list[tuple[int, int]]
 def simhash_pairs(
     df: DataFrame,
     max_hamming: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     hash_mode: str = "xxhash64",
 ) -> DataFrame:
     """Pairs within Hamming distance ≤ max_hamming via chunk blocking
@@ -571,7 +545,7 @@ def simhash_pairs(
     _bucket_pairs' cap — quantified by bucket_cap_metrics and
     replicated in the oracle, never silent."""
     n_bits = 64 if hash_mode == "xxhash64" else 60
-    sigs = simhash64(df, text_col, id_col, hash_mode)
+    sigs = simhash64(df, hash_mode)
     layout = simhash_chunk_layout(n_bits, max_hamming)
     # Carry (id, simhash) as one struct through bucketing so the vote
     # aggregate is evaluated once and no rejoin is needed for distances.
@@ -613,16 +587,10 @@ def simhash_pairs(
     ).where(F.col("hamming") <= max_hamming)
 
 
-def simhash_pairs_exact(
-    df: DataFrame,
-    max_hamming: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    hash_mode: str = "xxhash64",
-) -> DataFrame:
+def simhash_pairs_exact(df: DataFrame, max_hamming: int = 3) -> DataFrame:
     """Unblocked all-pairs SimHash reference (O(n²)) — the ground-truth
     oracle for the blocked path's recall tests, never a production path."""
-    sigs = simhash64(df, text_col, id_col, hash_mode)
+    sigs = simhash64(df)
     a = sigs.select(F.col("id").alias("id_a"), F.col("simhash").alias("sa"))
     b = sigs.select(F.col("id").alias("id_b"), F.col("simhash").alias("sb"))
     return (
@@ -764,19 +732,13 @@ def _span_hash(gram: Column, hash_mode: str) -> Column:
     )
 
 
-def span_windows(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = SPAN_K,
-    stride: int = SPAN_STRIDE,
-    hash_mode: str = "xxhash64",
-) -> DataFrame:
-    """Sampled k-char windows per document, hashed JVM-side.
+def span_windows(df: DataFrame, hash_mode: str) -> DataFrame:
+    """Sampled SPAN_K-char windows of each document's ``text``, hashed
+    JVM-side.
 
     One row per window: ``(id, n_chars, pos, h)`` where ``pos`` is the
-    0-based char offset of a window starting every ``stride`` chars
-    (only full-length windows; a doc shorter than ``k`` yields none).
+    0-based char offset of a window starting every SPAN_STRIDE chars
+    (only full-length windows; a doc shorter than SPAN_K yields none).
     The explode factor is bounded at ``len/stride`` rows per doc — a
     fixed, predictable amplification of the scan, all built-in
     functions (sequence/transform/substr/xxhash64), no Python.
@@ -787,9 +749,8 @@ def span_windows(
     recast as a bounded stride-sampled hash join — the shape that
     shuffles O(corpus_len/stride) fixed-width rows instead of building
     a distributed suffix array."""
-    if stride <= 0 or k <= 0:
-        raise ValueError("k and stride must be positive")
-    t = F.coalesce(F.col(text_col), F.lit(""))
+    k, stride = SPAN_K, SPAN_STRIDE
+    t = F.coalesce(F.col("text"), F.lit(""))
     n = F.length(t)
     idx = F.when(
         n >= k, F.sequence(F.lit(0), F.floor((n - k) / stride).cast("int"))
@@ -801,12 +762,10 @@ def span_windows(
     # duplicated_span_stats sat AFTER span_windows, which only spread
     # the downstream CONSUMERS of the already-hashed rows.)  No-op at
     # real scale, the _ensure_parallelism contract.
-    src = _ensure_parallelism(
-        df.select(F.col(id_col).alias(id_col), F.col(text_col))
-    )
+    src = _ensure_parallelism(df.select("doc_id", "text"))
     return (
         src.select(
-            F.col(id_col).alias("id"),
+            F.col("doc_id").alias("id"),
             t.alias("t"),
             n.cast("long").alias("n_chars"),
             F.explode(idx).alias("i"),
@@ -825,21 +784,16 @@ def span_windows(
 
 def duplicated_span_stats(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = SPAN_K,
-    stride: int = SPAN_STRIDE,
-    min_count: int = 2,
     hash_mode: str = "xxhash64",
     broadcast_dup: bool = False,
 ) -> DataFrame:
     """Per-document duplicated-span statistics: which fraction of each
-    doc's characters is covered by k-char windows whose content occurs
-    ``min_count``+ times anywhere in the corpus (other docs or repeats
+    doc's characters is covered by SPAN_K-char windows whose content
+    occurs twice or more anywhere in the corpus (other docs or repeats
     within the same doc).
 
-    Returns one row per input doc (docs shorter than ``k`` included,
-    with zero windows): ``(id, n_chars, n_windows, n_dup_windows,
+    Returns one row per input doc (docs shorter than SPAN_K included,
+    with zero windows): ``(doc_id, n_chars, n_windows, n_dup_windows,
     dup_chars)`` — all exact int64.  ``dup_chars`` is the EXACT union
     length of the duplicated intervals ``[pos, pos+k)``, computed with
     a per-doc running-max window (no double counting when windows
@@ -875,11 +829,12 @@ def duplicated_span_stats(
     # hot-gram pile-up this operator is hardened against — and would
     # also sit BELOW the occurrence count's partial aggregate, defeating
     # its map-side combine.
-    w = span_windows(df, text_col, id_col, k, stride, hash_mode)
+    k = SPAN_K
+    w = span_windows(df, hash_mode)
     dup = (
         w.groupBy("h")
         .agg(F.count(F.lit(1)).alias("occ"))
-        .where(F.col("occ") >= min_count)
+        .where(F.col("occ") >= 2)
         .select("h", F.lit(True).alias("is_dup"))
     )
     if broadcast_dup:
@@ -913,13 +868,13 @@ def duplicated_span_stats(
         F.sum("new_cov").alias("dup_chars"),
     )
     base = df.select(
-        F.col(id_col).alias("id"),
-        F.length(F.coalesce(F.col(text_col), F.lit(""))).cast("long").alias(
+        F.col("doc_id").alias("id"),
+        F.length(F.coalesce(F.col("text"), F.lit(""))).cast("long").alias(
             "n_chars"
         ),
     )
     return base.join(agg, "id", "left").select(
-        F.col("id").alias(id_col),
+        F.col("id").alias("doc_id"),
         "n_chars",
         F.coalesce(F.col("n_windows"), F.lit(0)).alias("n_windows"),
         F.coalesce(F.col("n_dup_windows"), F.lit(0)).alias("n_dup_windows"),
@@ -930,22 +885,15 @@ def duplicated_span_stats(
 def span_dedup_keep(
     df: DataFrame,
     max_dup_pct: int = 50,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = SPAN_K,
-    stride: int = SPAN_STRIDE,
-    min_count: int = 2,
     hash_mode: str = "xxhash64",
 ) -> DataFrame:
     """Keep decision from duplicated_span_stats: a doc survives when at
     most ``max_dup_pct`` percent of its characters sit under duplicated
     spans (integer cross-multiply — no floating point in the gate).
     Zero-char docs have nothing duplicated and are kept."""
-    stats = duplicated_span_stats(
-        df, text_col, id_col, k, stride, min_count, hash_mode
-    )
+    stats = duplicated_span_stats(df, hash_mode)
     return stats.select(
-        id_col,
+        "doc_id",
         "n_chars",
         "dup_chars",
         (
@@ -958,11 +906,7 @@ def span_dedup_keep(
 
 
 def token_ngram_hashes(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 13,
-    hash_mode: str = "xxhash64",
+    df: DataFrame, n: int = 13, hash_mode: str = "xxhash64"
 ) -> DataFrame:
     """One row per token n-gram occurrence: ``(id, pos, h)`` where
     ``pos`` is the 1-based token offset and ``h`` hashes the n-token
@@ -994,9 +938,9 @@ def token_ngram_hashes(
     # parquet file otherwise pins the whole stage to one task; no-op at
     # real scale, the _ensure_parallelism contract).
     src = _ensure_parallelism(
-        df.select(F.col(id_col).alias("id"), F.col(text_col))
+        df.select(F.col("doc_id").alias("id"), F.col("text"))
     )
-    tok = src.select("id", tokens(F.col(text_col)).alias("toks"))
+    tok = src.select("id", tokens(F.col("text")).alias("toks"))
     idx = F.when(
         F.size("toks") >= n, F.sequence(F.lit(1), F.size("toks") - n + 1)
     )
@@ -1013,17 +957,14 @@ def token_ngram_hashes(
 def decontaminate_stats(
     corpus: DataFrame,
     benchmark: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     n: int = 13,
     hash_mode: str = "xxhash64",
-    broadcast_benchmark: bool = True,
 ) -> DataFrame:
     """Benchmark decontamination (the GPT-3 appendix-C / PaLM
     protocol): flag training documents sharing any token n-gram with an
     evaluation set, so test data cannot leak into a training corpus.
 
-    Returns one row per corpus doc: ``(id, n_tokens, n_ngrams,
+    Returns one row per corpus doc: ``(doc_id, n_tokens, n_ngrams,
     n_contaminated, contaminated)`` — all exact int64, where
     ``n_contaminated`` counts n-gram POSITIONS whose shingle occurs
     anywhere in the benchmark (a doc repeating a leaked gram counts
@@ -1031,21 +972,17 @@ def decontaminate_stats(
 
     Scale shape: the benchmark's distinct shingle-hash set is tiny
     next to a training corpus (eval suites are ~10⁶ grams vs 10¹²) and
-    is BROADCAST by default, so the corpus-side bounded explode is
-    never shuffled on gram content — a hot boilerplate gram costs one
-    hash probe per occurrence, exactly the span-dedup r7 posture; the
-    only exchange is the final per-doc count on ``id``.  Set
-    ``broadcast_benchmark=False`` for a pathologically large benchmark
-    (shuffle join on ``h``, AQE skew backstop)."""
-    bench = (
-        token_ngram_hashes(benchmark, text_col, id_col, n, hash_mode)
+    is always BROADCAST, so the corpus-side bounded explode is never
+    shuffled on gram content — a hot boilerplate gram costs one hash
+    probe per occurrence, exactly the span-dedup r7 posture; the only
+    exchange is the final per-doc count on ``id``."""
+    bench = F.broadcast(
+        token_ngram_hashes(benchmark, n, hash_mode)
         .select("h")
         .distinct()
         .select("h", F.lit(True).alias("hit"))
     )
-    if broadcast_benchmark:
-        bench = F.broadcast(bench)
-    grams = token_ngram_hashes(corpus, text_col, id_col, n, hash_mode)
+    grams = token_ngram_hashes(corpus, n, hash_mode)
     # r9: n_ngrams is ANALYTIC — a doc with t >= n tokens yields exactly
     # t-n+1 gram rows, so it derives from n_tokens on the base side and
     # the gram stream only needs to count HITS.  The probe becomes an
@@ -1059,16 +996,16 @@ def decontaminate_stats(
         .agg(F.count(F.lit(1)).alias("n_contaminated"))
     )
     base = _ensure_parallelism(
-        corpus.select(F.col(id_col).alias("id"), F.col(text_col))
+        corpus.select(F.col("doc_id").alias("id"), F.col("text"))
     ).select(
         "id",
-        F.size(tokens(F.col(text_col))).cast("long").alias("n_tokens"),
+        F.size(tokens(F.col("text"))).cast("long").alias("n_tokens"),
     )
     n_ngrams = F.when(
         F.col("n_tokens") >= n, F.col("n_tokens") - F.lit(n - 1)
     ).otherwise(F.lit(0)).cast("long")
     return base.join(counts, "id", "left").select(
-        F.col("id").alias(id_col),
+        F.col("id").alias("doc_id"),
         "n_tokens",
         n_ngrams.alias("n_ngrams"),
         F.coalesce(F.col("n_contaminated"), F.lit(0)).alias(
@@ -1081,27 +1018,15 @@ def decontaminate_stats(
 
 
 def decontaminate_keep(
-    corpus: DataFrame,
-    benchmark: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 13,
-    max_hits: int = 0,
-    hash_mode: str = "xxhash64",
-    broadcast_benchmark: bool = True,
+    corpus: DataFrame, benchmark: DataFrame, n: int = 13
 ) -> DataFrame:
-    """Keep decision from decontaminate_stats: a doc survives with at
-    most ``max_hits`` contaminated n-gram positions (0 = the strict
-    drop-on-any-overlap protocol).  ``broadcast_benchmark`` passes
-    through to decontaminate_stats — the escape hatch for an eval set
-    whose shingle set cannot fit executor memory."""
-    stats = decontaminate_stats(
-        corpus, benchmark, text_col, id_col, n, hash_mode=hash_mode,
-        broadcast_benchmark=broadcast_benchmark,
-    )
+    """Keep decision from decontaminate_stats under the strict
+    drop-on-any-overlap protocol: a doc survives only with zero
+    contaminated n-gram positions."""
+    stats = decontaminate_stats(corpus, benchmark, n)
     return stats.select(
-        id_col,
+        "doc_id",
         "n_ngrams",
         "n_contaminated",
-        (F.col("n_contaminated") <= max_hits).alias("keep"),
+        (F.col("n_contaminated") <= 0).alias("keep"),
     )

@@ -408,7 +408,7 @@ def _png_chunk(ctype: bytes, body: bytes) -> bytes:
     )
 
 
-def encode_png(arr: np.ndarray, compress_level: int = 6) -> bytes:
+def encode_png(arr: np.ndarray) -> bytes:
     """Native PNG writer — 8-bit grayscale (H, W) or RGB (H, W, 3),
     filter type 0 per scanline, one zlib IDAT.  Pure stdlib zlib +
     struct: PNG's compression IS zlib (RFC 1950/2083), so a *compressed*
@@ -426,7 +426,7 @@ def encode_png(arr: np.ndarray, compress_level: int = 6) -> bytes:
     return (
         _PNG_SIG
         + _png_chunk(b"IHDR", ihdr)
-        + _png_chunk(b"IDAT", zlib.compress(raw, compress_level))
+        + _png_chunk(b"IDAT", zlib.compress(raw, 6))
         + _png_chunk(b"IEND", b"")
     )
 
@@ -802,23 +802,26 @@ def as_rgb(img: np.ndarray) -> np.ndarray:
     raise ValueError(f"unexpected decoded image shape {img.shape}")
 
 
-def byte_features(payload: bytes, n_dims: int = 8) -> tuple[float, float, list[float]]:
+_FEATURE_DIMS = 8  # the 256-bin byte histogram folds into 8 bins
+
+
+def byte_features(payload: bytes) -> tuple[float, float, list[float]]:
     """Byte-level payload features: mean byte value, byte-histogram
-    Shannon entropy, and an n_dims folded-histogram vector — exact
-    functions of the bytes, codec-free."""
+    Shannon entropy, and a folded-histogram vector of _FEATURE_DIMS
+    bins — exact functions of the bytes, codec-free."""
     arr = np.frombuffer(payload, dtype=np.uint8)
     if len(arr) == 0:
-        return 0.0, 0.0, [0.0] * n_dims
+        return 0.0, 0.0, [0.0] * _FEATURE_DIMS
     hist = np.bincount(arr, minlength=256).astype(np.float64)
     p = hist / hist.sum()
     nz = p[p > 0]
     entropy = float(-(nz * np.log2(nz)).sum())
-    feat = hist.reshape(n_dims, -1).sum(axis=1)
+    feat = hist.reshape(_FEATURE_DIMS, -1).sum(axis=1)
     feat = (feat / feat.sum()).tolist()
     return float(arr.mean()), entropy, feat
 
 
-def extract_features(media: DataFrame, n_dims: int = 8) -> DataFrame:
+def extract_features(media: DataFrame) -> DataFrame:
     """mapInPandas feature extraction — Arrow batches in, vectorized
     NumPy per payload, schema-stable output."""
 
@@ -827,7 +830,7 @@ def extract_features(media: DataFrame, n_dims: int = 8) -> DataFrame:
             means, ents, feats = [], [], []
             for payload in pdf["payload"]:
                 m, e, f = byte_features(
-                    bytes(payload) if payload is not None else b"", n_dims
+                    bytes(payload) if payload is not None else b""
                 )
                 means.append(m)
                 ents.append(e)

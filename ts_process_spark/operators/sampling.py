@@ -54,49 +54,44 @@ def sample_draw(id_col: Column, salt: str) -> Column:
 def sample_by_rate(
     df: DataFrame,
     rate_ppm: int,
-    id_col: str = "doc_id",
     salt: str = "v1",
 ) -> DataFrame:
-    """Deterministic Bernoulli(rate_ppm/10^6) subsample keyed on the id:
+    """Deterministic Bernoulli(rate_ppm/10^6) subsample keyed on doc_id:
     keep iff draw < threshold.  One scan projection + filter — no
     exchange, no rand(), restart-safe, exactly replayable in SQL."""
     thr = _threshold(rate_ppm)
-    return df.where(sample_draw(F.col(id_col), salt) < F.lit(thr))
+    return df.where(sample_draw(F.col("doc_id"), salt) < F.lit(thr))
 
 
 def stratified_sample(
     df: DataFrame,
     weights_ppm: "dict[str, int]",
     domain_col: str = "domain",
-    id_col: str = "doc_id",
     salt: str = "v1",
-    default_ppm: int = 0,
 ) -> DataFrame:
     """Per-domain deterministic sampling — the domain-mixing downsample
     step of a data recipe.  ``weights_ppm`` maps domain value → keep
-    rate in ppm; unlisted domains get ``default_ppm`` (0 = drop, the
-    explicit-allowlist posture).  The thresholds ride a literal CASE
+    rate in ppm; unlisted domains are dropped (the explicit-allowlist
+    posture).  The thresholds ride a literal CASE
     expression (weights dicts are recipe-sized, not data-sized), so the
     whole operator stays one scan projection + filter."""
-    thr: Column = F.lit(_threshold(default_ppm))
+    thr: Column = F.lit(0)
     for dom, ppm in sorted(weights_ppm.items()):
         thr = F.when(
             F.col(domain_col) == dom, F.lit(_threshold(ppm))
         ).otherwise(thr)
-    return df.where(sample_draw(F.col(id_col), salt) < thr)
+    return df.where(sample_draw(F.col("doc_id"), salt) < thr)
 
 
 def upsample_epochs(
     df: DataFrame,
     factor_ppm: int,
-    id_col: str = "doc_id",
     salt: str = "v1",
-    copy_col: str = "epoch_copy",
 ) -> DataFrame:
     """Repeat-factor upsampling for domain mixing: a factor of
     2_400_000 ppm (2.4 epochs) emits every row twice plus a third copy
     for the deterministic 40% of ids whose draw lands under the
-    fractional threshold.  Adds ``copy_col`` (0-based copy index) so
+    fractional threshold.  Adds ``epoch_copy`` (0-based copy index) so
     downstream shuffles/packing see distinct rows; the explode is
     bounded by ceil(factor).  The fractional draw is salted with the
     integer part so chained recipes don't correlate with
@@ -106,37 +101,34 @@ def upsample_epochs(
     whole, frac_ppm = divmod(factor_ppm, PPM)
     thr = _threshold(frac_ppm)
     n_copies = F.lit(whole) + (
-        sample_draw(F.col(id_col), f"{salt}:frac{whole}") < F.lit(thr)
+        sample_draw(F.col("doc_id"), f"{salt}:frac{whole}") < F.lit(thr)
     ).cast("int")
     return (
         df.withColumn("__n", n_copies)
         .where(F.col("__n") > 0)
-        .withColumn(copy_col, F.explode(F.sequence(F.lit(0), F.col("__n") - 1)))
+        .withColumn(
+            "epoch_copy", F.explode(F.sequence(F.lit(0), F.col("__n") - 1))
+        )
         .drop("__n")
     )
 
 
-def assign_split(
-    df: DataFrame,
-    splits_ppm: "dict[str, int]",
-    id_col: str = "doc_id",
-    salt: str = "split-v1",
-    split_col: str = "split",
-) -> DataFrame:
-    """Deterministic train/val/test split assignment: partition the
+def assign_split(df: DataFrame, splits_ppm: "dict[str, int]") -> DataFrame:
+    """Deterministic train/val/test ``split`` column: partition the
     hash space into contiguous ranges proportional to ``splits_ppm``
     (which must sum to exactly 10^6 — a silent remainder would be an
-    unlabeled shard) and label each row by where its ``hash60(salt:id)``
-    draw lands.  Being id-keyed, the assignment survives re-runs,
-    repartitioning, engine changes, and INCREMENTAL ARRIVALS: a doc
-    ingested next month lands in the same split it would have today,
-    so val/test never bleed into train as the corpus grows — the
-    property a rand()-based or row-number split cannot give.
+    unlabeled shard) and label each row by where its
+    ``hash60(split-v1:id)`` draw lands.  Being id-keyed, the assignment
+    survives re-runs, repartitioning, engine changes, and INCREMENTAL
+    ARRIVALS: a doc ingested next month lands in the same split it
+    would have today, so val/test never bleed into train as the corpus
+    grows — the property a rand()-based or row-number split cannot
+    give.
 
     One scan projection (a CASE over the draw, thresholds as plan
     literals) — no exchange, no Python.  Assignment order is the
     sorted split names, so the mapping is a pure function of
-    (splits_ppm, salt), not dict insertion order."""
+    splits_ppm, not dict insertion order."""
     total = sum(splits_ppm.values())
     if total != PPM:
         raise ValueError(
@@ -145,7 +137,7 @@ def assign_split(
         )
     if any(v <= 0 for v in splits_ppm.values()):
         raise ValueError("every split needs a positive ppm share")
-    draw = sample_draw(F.col(id_col), salt)
+    draw = sample_draw(F.col("doc_id"), "split-v1")
     expr: Column | None = None
     acc = 0
     for name, ppm in sorted(splits_ppm.items()):
@@ -156,4 +148,4 @@ def assign_split(
     # the otherwise() is unreachable but keeps the column non-null
     # under any future arithmetic drift
     last = sorted(splits_ppm)[-1]
-    return df.withColumn(split_col, expr.otherwise(F.lit(last)))
+    return df.withColumn("split", expr.otherwise(F.lit(last)))

@@ -135,12 +135,13 @@ def cosine_qn(a: Column, b: Column, na: Column, nb: Column) -> Column:
 
 
 
-def cosine_base(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
-    """(id, quantized vector) with ZERO-NORM vectors excluded: a zero
-    embedding has no direction, and under ANSI mode its cosine is a
-    DIVIDE_BY_ZERO that would kill the whole job for one poisoned row
-    (found by the adversarial embeddings fixture).  Every cosine-scored
-    op builds on this; the DuckDB oracles carry the same predicate.
+def cosine_base(df: DataFrame) -> DataFrame:
+    """(id, quantized vector) of (vec_id, embedding) with ZERO-NORM
+    vectors excluded: a zero embedding has no direction, and under ANSI
+    mode its cosine is a DIVIDE_BY_ZERO that would kill the whole job
+    for one poisoned row (found by the adversarial embeddings fixture).
+    Every cosine-scored op builds on this; the DuckDB oracles carry the
+    same predicate.
 
     Also carries nq = ‖q‖² computed ONCE per vector (cosine_qn) and
     spreads a too-few-partition scan across the cluster first — a
@@ -157,30 +158,19 @@ def cosine_base(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
         F.col("q"), F.lit(0).cast("long"), lambda s, v: s + v * v
     )
     base = _ensure_parallelism(df).select(
-        F.col(id_col).alias("id"), quantized(F.col(vec_col)).alias("q")
+        F.col("vec_id").alias("id"), quantized(F.col("embedding")).alias("q")
     ).withColumn("nq", ssq)
     return base.where(F.col("nq") > 0)
 
 
-def cosine_topk(
-    df: DataFrame,
-    query_ids: list[int] | None = None,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_queries: int = 10,
-) -> DataFrame:
-    """Exact top-k cosine neighbors for each query vector (default: the
-    n_queries lowest ids).  Query side is broadcast; ranking is a
-    per-query window with (score desc, id) tie-break."""
+def cosine_topk(df: DataFrame, k: int = 5, n_queries: int = 10) -> DataFrame:
+    """Exact top-k cosine neighbors for each of the n_queries lowest-id
+    vectors.  Query side is broadcast; ranking is a per-query window
+    with (score desc, id) tie-break."""
     from pyspark.sql import Window
 
-    base = cosine_base(df, id_col, vec_col)
-    if query_ids is not None:
-        queries = base.where(F.col("id").isin(query_ids))
-    else:
-        queries = base.orderBy("id").limit(n_queries)
-    queries = queries.select(
+    base = cosine_base(df)
+    queries = base.orderBy("id").limit(n_queries).select(
         F.col("id").alias("query_id"), F.col("q").alias("qv"),
         F.col("nq").alias("nqv"),
     )
@@ -225,8 +215,6 @@ def _ivf_cells(
 def ivf_cell_assignments(
     df: DataFrame,
     n_cells: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     codebook: "np.ndarray | None" = None,
 ) -> DataFrame:
     """IVF coarse quantizer: the n_cells lowest-id vectors act as the
@@ -241,7 +229,7 @@ def ivf_cell_assignments(
     distributed step — has exactly this plan either way."""
     from pyspark.sql import Window
 
-    base = cosine_base(df, id_col, vec_col)
+    base = cosine_base(df)
     cells = _ivf_cells(base, n_cells, codebook)
     scored = base.join(F.broadcast(cells)).select(
         "id", "q", "nq", "cell_id",
@@ -263,8 +251,6 @@ def ivf_ann_topk(
     n_cells: int = 16,
     nprobe: int = 2,
     n_queries: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     codebook: "np.ndarray | None" = None,
 ) -> DataFrame:
     """IVF approximate top-k: each query probes its nprobe best cells
@@ -273,8 +259,8 @@ def ivf_ann_topk(
     end to end (quantized cosine, id tie-breaks) → DuckDB-checkable."""
     from pyspark.sql import Window
 
-    assigned = ivf_cell_assignments(df, n_cells, id_col, vec_col, codebook)
-    base = cosine_base(df, id_col, vec_col)
+    assigned = ivf_cell_assignments(df, n_cells, codebook)
+    base = cosine_base(df)
     cells = _ivf_cells(base, n_cells, codebook)
     queries = base.orderBy("id").limit(n_queries).select(
         F.col("id").alias("query_id"), F.col("q").alias("qv"),
@@ -334,38 +320,25 @@ def srp_bucket(vec_q: Column, planes: np.ndarray) -> Column:
     return bucket
 
 
-def srp_bucket_assignments(
-    df: DataFrame,
-    n_planes: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 42,
-) -> DataFrame:
-    planes = rademacher_hyperplanes(n_planes, 64, seed)
+def srp_bucket_assignments(df: DataFrame, n_planes: int = 8) -> DataFrame:
+    planes = rademacher_hyperplanes(n_planes, 64)
     # project the quantized vector ONCE, then bucket over the attribute:
     # inlining quantized(...) into srp_bucket would re-evaluate the
     # transform per plane per element under the unrolled dot (see
     # dot_long's caller contract)
     return df.select(
-        F.col(id_col).alias("id"), quantized(F.col(vec_col)).alias("q")
+        F.col("vec_id").alias("id"), quantized(F.col("embedding")).alias("q")
     ).select("id", srp_bucket(F.col("q"), planes).alias("bucket"))
 
 
-def srp_ann_topk(
-    df: DataFrame,
-    k: int = 3,
-    n_planes: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 42,
-) -> DataFrame:
+def srp_ann_topk(df: DataFrame, k: int = 3, n_planes: int = 8) -> DataFrame:
     """Approximate top-k: candidates share an SRP bucket; scoring and
     ranking as in cosine_topk.  Recall < 1 by construction — the scale
     path trades it for an equi-join instead of a cross join."""
     from pyspark.sql import Window
 
-    planes = rademacher_hyperplanes(n_planes, 64, seed)
-    base = cosine_base(df, id_col, vec_col).withColumn(
+    planes = rademacher_hyperplanes(n_planes, 64)
+    base = cosine_base(df).withColumn(
         "bucket", srp_bucket(F.col("q"), planes)
     )
     a = base.alias("a")
@@ -395,16 +368,12 @@ def srp_ann_topk(
     )
 
 
-def centroids_by_label(
-    df: DataFrame,
-    label_col: str = "label",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def centroids_by_label(df: DataFrame) -> DataFrame:
     """Per-label centroid in long form (label, dim, centroid): posexplode
     + sum of quantized components / count — exact int sums, one shuffle."""
     ex = df.select(
-        F.col(label_col).alias("label"),
-        F.posexplode(quantized(F.col(vec_col))).alias("dim", "qv"),
+        F.col("label"),
+        F.posexplode(quantized(F.col("embedding"))).alias("dim", "qv"),
     ).withColumn("dim", F.col("dim").cast("long"))
     # exact integer surrogates (sum of 1e-6-quantized components, count)
     # instead of a rounded mean: round() on an arbitrary ratio diverges
@@ -419,28 +388,23 @@ def centroids_by_label(
 def embedding_neardup_pairs(
     df: DataFrame,
     threshold: float = 0.35,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_planes: int = 6,
-    n_tables: int = 4,
-    seed: int = 42,
     exact: bool = False,
 ) -> DataFrame:
     """Pairs with quantized cosine ≥ threshold.
 
     DEFAULT is the multi-table SRP-blocked path (the 100-TB shape):
-    each vector hashes into one bucket per table (``n_tables``
-    independent sets of ``n_planes`` seeded hyperplanes), candidates are
+    each vector hashes into one bucket per table (4 independent sets of
+    6 hyperplanes seeded 42..45), candidates are
     the distinct pairs sharing ANY (table, bucket), and only candidates
     are scored — an equi-join, never the O(n²) self-join that r1 shipped
     as the default.  Collision probability per table is
-    (1 − θ/π)^n_planes, so recall rises with n_tables and approaches 1
+    (1 − θ/π)^6, so recall rises with the table count and approaches 1
     for true near-dups (θ→0); the recall-vs-exact metric at the fixture
     threshold is pinned in tests/test_training_ops.py.
 
     ``exact=True`` keeps the all-pairs form — the ground-truth oracle
     for those recall tests, deliberately not the default."""
-    base = cosine_base(df, id_col, vec_col)
+    base = cosine_base(df)
     if exact:
         a, b = base.alias("a"), base.alias("b")
         return (
@@ -457,9 +421,7 @@ def embedding_neardup_pairs(
         )
     from ts_process_spark.operators.dedup import _bucket_pairs
 
-    tables = [
-        rademacher_hyperplanes(n_planes, 64, seed + t) for t in range(n_tables)
-    ]
+    tables = [rademacher_hyperplanes(6, 64, 42 + t) for t in range(4)]
     bucketed = base.select(
         "id",
         F.explode(
@@ -649,15 +611,12 @@ def pq_encode(
     df: DataFrame,
     m: int = 8,
     n_codes: int = 16,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     codebook: "np.ndarray | None" = None,
 ) -> DataFrame:
     """Product-quantization encoder (Jégou et al., TPAMI 2011): the
-    vector splits into ``m`` subspaces of dim/m dims; each sub-vector is
-    replaced by the id of its nearest codeword (squared-L2 over the
-    QUANTIZED ints — exact int64, ties → lowest code).  Codebook =
+    64-dim vector splits into ``m`` subspaces of 64/m dims; each
+    sub-vector is replaced by the id of its nearest codeword (squared-L2
+    over the QUANTIZED ints — exact int64, ties → lowest code).  Codebook =
     sub-vectors of the ``n_codes`` lowest-id vectors, the same
     deterministic convention as the IVF coarse quantizer (at real scale
     both would come from sampled k-means; encode — the distributed
@@ -673,10 +632,11 @@ def pq_encode(
     replaces the first-N convention; same plan, literal instead of scan.
 
     Output: (id, q, nq, codes array<int> length m)."""
+    dim = 64
     if codebook is not None:
         n_codes, dim = codebook.shape
     ds = _pq_check(dim, m)
-    base = cosine_base(df, id_col, vec_col)
+    base = cosine_base(df)
     subdist = _pq_subdist(ds)
 
     def code(j: int) -> Column:
@@ -702,10 +662,7 @@ def pq_ann_topk(
     k: int = 3,
     m: int = 8,
     n_codes: int = 16,
-    dim: int = 64,
     n_queries: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     codebook: "np.ndarray | None" = None,
     arrow_encode: bool = False,
 ) -> DataFrame:
@@ -731,18 +688,17 @@ def pq_ann_topk(
     system, and the literal form also spares Catalyst the m×n_codes
     nested-HOF expression tree (measured: plan analysis of that tree
     dominated the fresh-query latency, not execution)."""
+    dim = 64
     if codebook is not None:
         n_codes, dim = codebook.shape
     ds = _pq_check(dim, m)
     from pyspark.sql import Window
 
-    base = cosine_base(df, id_col, vec_col)
+    base = cosine_base(df)
     if arrow_encode:
-        cb = codebook if codebook is not None else pq_train(
-            df, n_codes, id_col, vec_col
-        )
+        cb = codebook if codebook is not None else pq_train(df, n_codes)
         n_codes, dim = cb.shape
-        enc = pq_encode_arrow(df, cb, m, id_col, vec_col)
+        enc = pq_encode_arrow(df, cb, m)
         qrows = sorted(
             base.orderBy("id").limit(n_queries).select("id", "q").collect(),
             key=lambda r: r["id"],
@@ -757,7 +713,7 @@ def pq_ann_topk(
             "query_id bigint, lut array<array<bigint>>",
         )
     else:
-        enc = pq_encode(df, m, n_codes, dim, id_col, vec_col, codebook=codebook)
+        enc = pq_encode(df, m, n_codes, codebook=codebook)
         cbrow = (
             _pq_codebook_row(base, n_codes)
             if codebook is None
@@ -802,10 +758,7 @@ def ivfpq_ann_topk(
     nprobe: int = 4,
     m: int = 8,
     n_codes: int = 16,
-    dim: int = 64,
     n_queries: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     pq_codebook: "np.ndarray | None" = None,
     ivf_codebook: "np.ndarray | None" = None,
     arrow_encode: bool = False,
@@ -837,16 +790,15 @@ def ivfpq_ann_topk(
     ``pq_codebook`` / ``ivf_codebook`` swap either quantizer's first-N
     convention for trained arrays (pq_train_kmeans; m=1 for the coarse
     one) — plan literals, same shapes."""
+    dim = 64
     if pq_codebook is not None:
         n_codes, dim = pq_codebook.shape
     ds = _pq_check(dim, m)
     from pyspark.sql import Window
 
-    base = cosine_base(df, id_col, vec_col)
+    base = cosine_base(df)
     if arrow_encode:
-        pcb = pq_codebook if pq_codebook is not None else pq_train(
-            df, n_codes, id_col, vec_col
-        )
+        pcb = pq_codebook if pq_codebook is not None else pq_train(df, n_codes)
         n_codes, dim = pcb.shape
         if ivf_codebook is not None:
             # keep the ORIGINAL row index as cell_id (mirrors _ivf_cells:
@@ -855,8 +807,8 @@ def ivfpq_ann_topk(
             civ = ivf_codebook[keep]
             cid = np.nonzero(keep)[0].astype(np.int64)
         else:
-            cid, civ = ivf_train_cells(df, n_cells, id_col, vec_col)
-        corpus = ivfpq_attach_arrow(df, pcb, cid, civ, m, id_col, vec_col)
+            cid, civ = ivf_train_cells(df, n_cells)
+        corpus = ivfpq_attach_arrow(df, pcb, cid, civ, m)
         # query-side prep is driver work (the FAISS client shape): the
         # probe ranking and ADC LUTs come from exact NumPy replays of
         # the JVM semantics and ship as one tiny literal DataFrame —
@@ -877,9 +829,7 @@ def ivfpq_ann_topk(
             "query_id bigint, cell_id bigint, lut array<array<bigint>>",
         )
     else:
-        assigned = ivf_cell_assignments(
-            df, n_cells, id_col, vec_col, ivf_codebook
-        )
+        assigned = ivf_cell_assignments(df, n_cells, ivf_codebook)
         cbrow = (
             _pq_codebook_row(base, n_codes)
             if pq_codebook is None
@@ -953,15 +903,13 @@ def ivfpq_ann_topk(
 def pq_train(
     df: DataFrame,
     n_codes: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> "np.ndarray":
     """ACTION (the one deliberate driver round-trip in this module):
     materialize the deterministic PQ codebook as an (n_codes × dim)
     int64 array — the train/add split every PQ system has (FAISS
     train() is a separate job too); the returned array ships to
     executors inside the task closure, bytes not rows."""
-    base = cosine_base(df, id_col, vec_col)
+    base = cosine_base(df)
     rows = base.orderBy("id").limit(n_codes).select("id", "q").collect()
     rows = sorted(rows, key=lambda r: r["id"])
     return np.array([list(r["q"]) for r in rows], dtype=np.int64)
@@ -981,8 +929,6 @@ def pq_train_kmeans(
     m: int = 8,
     n_codes: int = 16,
     n_iters: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> "np.ndarray":
     """Distributed per-subspace Lloyd k-means over the quantized
     vectors — the trained replacement for pq_train's first-N
@@ -1011,10 +957,10 @@ def pq_train_kmeans(
     import pandas as pd
     from pyspark.sql import types as T
 
-    cb = pq_train(df, n_codes, id_col, vec_col)
+    cb = pq_train(df, n_codes)
     n_codes, dim = cb.shape
     ds = _pq_check(dim, m)
-    base = cosine_base(df, id_col, vec_col).select("id", "q")
+    base = cosine_base(df).select("id", "q")
     schema = T.StructType(
         [
             T.StructField("j", T.IntegerType(), False),
@@ -1071,8 +1017,6 @@ def pq_encode_arrow(
     df: DataFrame,
     codebook: "np.ndarray",
     m: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Throughput-path PQ encoder: one vectorized NumPy kernel per
     Arrow batch instead of interpreted array HOFs — BIT-IDENTICAL codes
@@ -1112,7 +1056,7 @@ def pq_encode_arrow(
                 }
             )
 
-    return cosine_base(df, id_col, vec_col).select("id", "q").mapInPandas(
+    return cosine_base(df).select("id", "q").mapInPandas(
         run, schema=schema
     )
 
@@ -1120,13 +1064,11 @@ def pq_encode_arrow(
 def ivf_train_cells(
     df: DataFrame,
     n_cells: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> "tuple[np.ndarray, np.ndarray]":
     """ACTION twin of pq_train for the coarse quantizer: materialize the
     deterministic first-N cell centroids as (cell_ids, vectors) int64
     arrays — the train/add split the Arrow attach kernel consumes."""
-    base = cosine_base(df, id_col, vec_col)
+    base = cosine_base(df)
     rows = base.orderBy("id").limit(n_cells).select("id", "q").collect()
     rows = sorted(rows, key=lambda r: r["id"])
     return (
@@ -1141,8 +1083,6 @@ def ivfpq_attach_arrow(
     cell_ids: "np.ndarray",
     cell_vecs: "np.ndarray",
     m: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """The production IVF×PQ corpus pass: ONE vectorized Arrow kernel
     attaches (cell_id, codes) to every vector — the map-side step whose
@@ -1197,7 +1137,7 @@ def ivfpq_attach_arrow(
                 }
             )
 
-    return cosine_base(df, id_col, vec_col).select("id", "q").mapInPandas(
+    return cosine_base(df).select("id", "q").mapInPandas(
         run, schema=schema
     )
 
@@ -1265,9 +1205,6 @@ def semantic_dedup_stats(
     df: DataFrame,
     n_cells: int = 16,
     threshold: float = 0.95,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    codebook: "np.ndarray | None" = None,
     arrow_pairwise: bool = True,
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, "SemDeDup: Data-efficient learning
@@ -1277,7 +1214,7 @@ def semantic_dedup_stats(
     as a semantic duplicate — the deterministic min-id-survives version
     of the paper's keep-one-per-epsilon-ball policy.
 
-    Returns one row per nonzero-norm vector: ``(id, cell_id,
+    Returns one row per nonzero-norm vector: ``(vec_id, cell_id,
     n_dup_neighbors, max_cos_lower, is_dup)`` where ``n_dup_neighbors``
     counts lower-id mates above threshold, ``max_cos_lower`` is the
     best lower-id cosine (rounded to 6 — the engine-wide oracle
@@ -1288,15 +1225,14 @@ def semantic_dedup_stats(
 
     Scale shape — the SemDeDup design IS the blocking: the O(n²)
     pairwise stage runs within clusters only, so per-cluster cost is
-    (n/n_cells)²·dim; production sizes the codebook at ~√n cells
-    (pass ``codebook`` from pq_train_kmeans(m=1)) precisely so that
-    quadratic stays bounded.  The plan: broadcast-codebook assignment
+    (n/n_cells)²·dim; sizing ``n_cells`` at ~√n keeps that quadratic
+    bounded.  The plan: broadcast-codebook assignment
     (no corpus shuffle), ONE equi-join exchange clustering both sides
     on cell_id (AQE skew-split is the backstop for a degenerate hot
     cluster), per-pair cosine on precomputed norms, then a
     clustering-compatible per-id aggregate.  No cartesian product, no
     Python."""
-    asg = ivf_cell_assignments(df, n_cells, id_col, vec_col, codebook)
+    asg = ivf_cell_assignments(df, n_cells)
     if arrow_pairwise:
         # PRODUCTION pairwise (r9): ONE hash exchange of (id, cell_id,
         # q) — 20-ish bytes + one vector per MEMBER — into a grouped
@@ -1345,7 +1281,7 @@ def semantic_dedup_stats(
             )
         )
         return out.select(
-            F.col("id").alias(id_col),
+            F.col("id").alias("vec_id"),
             "cell_id",
             "n_dup_neighbors",
             "max_cos_lower",
@@ -1389,7 +1325,7 @@ def semantic_dedup_stats(
         F.max("cos").alias("max_cos_lower"),
     )
     return per_id.select(
-        F.col("id_a").alias(id_col),
+        F.col("id_a").alias("vec_id"),
         "cell_id",
         "n_dup_neighbors",
         "max_cos_lower",
@@ -1398,19 +1334,12 @@ def semantic_dedup_stats(
 
 
 def semantic_dedup_keep(
-    df: DataFrame,
-    n_cells: int = 16,
-    threshold: float = 0.95,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    codebook: "np.ndarray | None" = None,
+    df: DataFrame, n_cells: int = 16, threshold: float = 0.95
 ) -> DataFrame:
     """Keep decision from semantic_dedup_stats: a vector survives when
     no lower-id cluster-mate sits at cosine ≥ threshold (the min-id
     representative of every semantic near-dup group survives)."""
-    stats = semantic_dedup_stats(
-        df, n_cells, threshold, id_col, vec_col, codebook
-    )
+    stats = semantic_dedup_stats(df, n_cells, threshold)
     return stats.select(
-        id_col, "cell_id", "n_dup_neighbors", (~F.col("is_dup")).alias("keep")
+        "vec_id", "cell_id", "n_dup_neighbors", (~F.col("is_dup")).alias("keep")
     )

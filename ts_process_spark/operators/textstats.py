@@ -70,13 +70,14 @@ def tokens(col: Column) -> Column:
     )
 
 
-def with_token_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """n_tokens, n_unique_tokens, total token chars, type/token ratio.
+def with_token_stats(df: DataFrame) -> DataFrame:
+    """n_tokens, n_unique_tokens, total token chars, type/token ratio of
+    ``text``.
 
     All counters are int64: int32 would overflow on 100 TB-scale corpus
     aggregates, and the driver's oracle hash is dtype-strict (DuckDB
     ``len()``/``list_aggregate 'sum'`` are BIGINT-kind)."""
-    toks = tokens(F.col(text_col))
+    toks = tokens(F.col("text"))
     return (
         _ensure_parallelism(df)
         .withColumn("_toks", toks)
@@ -98,12 +99,12 @@ def stopword_count(col: Column, lang: str) -> Column:
     ).cast("long")
 
 
-def with_quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
+def with_quality_score(df: DataFrame) -> DataFrame:
     """Heuristic doc-quality features: length band, mean token length,
     stopword ratio, repetition (1 - type/token).  Scores are exact
     rationals of integer counts — stable across engines."""
-    df = with_token_stats(df, text_col)
-    sw = stopword_count(F.col(text_col), "en")
+    df = with_token_stats(df)
+    sw = stopword_count(F.col("text"), "en")
     return (
         df.withColumn("stopword_hits", sw)
         .withColumn(
@@ -122,11 +123,11 @@ def with_quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def with_language_id(df: DataFrame, text_col: str = "text") -> DataFrame:
+def with_language_id(df: DataFrame) -> DataFrame:
     """Stopword-ratio language ID: argmax over per-language hit counts
     (ties broken by language code order) — the n-gram-free heuristic
     variant; deterministic and SQL-expressible."""
-    hits = {lang: stopword_count(F.col(text_col), lang) for lang in STOPWORDS}
+    hits = {lang: stopword_count(F.col("text"), lang) for lang in STOPWORDS}
     best = F.greatest(*[hits[lg] for lg in sorted(STOPWORDS)])
     pred = F.lit("und")
     for lg in sorted(STOPWORDS, reverse=True):
@@ -141,9 +142,7 @@ def with_language_id(df: DataFrame, text_col: str = "text") -> DataFrame:
 _FP_MOD = 2147483647  # 2^31 - 1 (Mersenne): acc*33 + h stays < 2^37, no overflow
 
 
-def with_fingerprint(
-    df: DataFrame, text_col: str = "text", hash_mode: str = "xxhash64"
-) -> DataFrame:
+def with_fingerprint(df: DataFrame, hash_mode: str = "xxhash64") -> DataFrame:
     """Order-sensitive rolling polynomial fingerprint of the token
     stream: acc = (acc*33 + pmod(hash(token), M)) % M.  A reordered
     document gets a different fingerprint (unlike bag-of-words hashes);
@@ -156,7 +155,7 @@ def with_fingerprint(
         from ts_process_spark.operators.dedup import hash60
 
         hfn = lambda w: hash60(w) % _FP_MOD  # noqa: E731
-    toks = tokens(F.col(text_col))
+    toks = tokens(F.col("text"))
     fp = F.aggregate(
         toks,
         F.lit(0).cast("long"),
@@ -173,8 +172,6 @@ def bm25_scores(
     query_terms: list[str],
     k1: float = 1.2,
     b: float = 0.75,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     idf_quant: int | None = None,
 ) -> DataFrame:
     """Okapi BM25 relevance of every document against a small fixed
@@ -222,10 +219,8 @@ def bm25_scores(
     # projection survives because CollapseProject keeps non-cheap
     # aliases referenced more than once.
     base = (
-        _ensure_parallelism(
-            df.select(F.col(id_col).alias("id"), F.col(text_col))
-        )
-        .select("id", tokens(F.col(text_col)).alias("_toks"))
+        _ensure_parallelism(df.select(F.col("doc_id").alias("id"), F.col("text")))
+        .select("id", tokens(F.col("text")).alias("_toks"))
         .select(
             "id",
             F.size("_toks").cast("long").alias("doc_len"),
@@ -269,9 +264,6 @@ def bm25_scores(
 def tfidf_top_terms(
     df: DataFrame,
     top_k: int = 5,
-    min_df: int = 1,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     quantize: int | None = None,
 ) -> DataFrame:
     """Per-document top-k terms by tf·idf (idf = ln(N/df), smooth-free
@@ -289,7 +281,7 @@ def tfidf_top_terms(
     dtype-strict oracle gate; ``scores`` becomes array<long>.
 
     Output: (id, terms array<string>, scores array<double|long>)."""
-    toks = tokens(F.col(text_col))
+    toks = tokens(F.col("text"))
     # r9: spread before the explode — the generator argument is
     # evaluated in the scan stage, which a single-row-group input pins
     # to one task — and spread KEYED BY id: hash(id) partitioning
@@ -298,7 +290,7 @@ def tfidf_top_terms(
     # (two token-volume shuffles removed at bench scale; no-op at real
     # scale where the partial+final plan returns)
     ex = _ensure_parallelism(
-        df.select(F.col(id_col).alias("id"), F.col(text_col)), "id"
+        df.select(F.col("doc_id").alias("id"), F.col("text")), "id"
     ).select("id", F.explode(toks).alias("w"))
     tf = ex.groupBy("id", "w").agg(F.count(F.lit(1)).alias("tf"))
     # N as a broadcast 1-row aggregate — query construction stays
@@ -308,7 +300,7 @@ def tfidf_top_terms(
     dfreq = (
         tf.groupBy("w")
         .agg(F.count(F.lit(1)).alias("df"))
-        .where(F.col("df") >= min_df)
+        .where(F.col("df") >= 1)
     )
     if quantize is None:
         s = F.col("tf") * F.log(F.col("_n") / F.col("df"))
@@ -347,8 +339,6 @@ def pack_documents(
     df: DataFrame,
     budget_tokens: int = 2048,
     n_shards: int = 64,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     hash_mode: str = "xxhash64",
 ) -> DataFrame:
     """Deterministic greedy sequence packing — the training-data prep
@@ -391,10 +381,10 @@ def pack_documents(
     # r9: spread before the tokenizing projection (single-row-group
     # inputs pin it to one task; no-op at real scale)
     base = _ensure_parallelism(
-        df.select(F.col(id_col).alias("id"), F.col(text_col))
+        df.select(F.col("doc_id").alias("id"), F.col("text"))
     ).select(
         "id",
-        F.size(tokens(F.col(text_col))).cast("long").alias("n_tokens"),
+        F.size(tokens(F.col("text"))).cast("long").alias("n_tokens"),
     ).withColumn("shard", F.pmod(shard_hash, F.lit(n_shards)).cast("int"))
     # ROWS frame explicitly (review r5): the default RANGE frame makes
     # duplicate ids frame PEERS, double-counting their tokens in the
@@ -423,16 +413,6 @@ def pack_documents(
 def gopher_quality_flags(
     df: DataFrame,
     text_col: str = "text",
-    min_tokens: int = 50,
-    max_tokens: int = 100_000,
-    min_mean_word_len: float = 3.0,
-    max_mean_word_len: float = 10.0,
-    max_symbol_ratio: float = 0.1,
-    max_bullet_frac: float = 0.9,
-    max_ellipsis_frac: float = 0.3,
-    min_alpha_word_frac: float = 0.8,
-    min_stopword_hits: int = 2,
-    max_dup_line_frac: float = 0.3,
 ) -> DataFrame:
     """Gopher-style document quality rules (Rae et al. 2021, published
     heuristics) as PURE column expressions — one scan, no shuffle, no
@@ -443,11 +423,12 @@ def gopher_quality_flags(
     you want the flags materialized once and reusable by many cuts.
 
     Rules (ratios are exact rationals of integer counts, so the flags
-    are engine-stable for oracle checks): token count band; mean word
-    length band; symbol-to-word ratio (# and … / ...); bulleted-line
-    fraction; ellipsis-terminated-line fraction; fraction of words
-    containing an alphabetic character; English stopword hits;
-    duplicate-line fraction."""
+    are engine-stable for oracle checks), with Gopher's thresholds:
+    token count in [50, 100000]; mean word length in [3, 10];
+    symbol-to-word ratio (# and … / ...) ≤ 0.1; bulleted-line fraction
+    ≤ 0.9; ellipsis-terminated-line fraction ≤ 0.3; fraction of words
+    containing an alphabetic character ≥ 0.8; ≥ 2 English stopword
+    hits; duplicate-line fraction ≤ 0.3."""
     txt = F.coalesce(F.col(text_col), F.lit(""))  # NULL text == empty doc
     # r9: tokenize and line-split ONCE into materialized columns — the
     # rule expressions each re-derived tokens()/split() from the raw
@@ -496,38 +477,38 @@ def gopher_quality_flags(
         .withColumn("mean_word_len", mean_wl)
         .withColumn(
             "ok_token_count",
-            (n_tokens >= min_tokens) & (n_tokens <= max_tokens),
+            (n_tokens >= 50) & (n_tokens <= 100_000),
         )
         .withColumn(
             "ok_mean_word_len",
-            (mean_wl >= min_mean_word_len) & (mean_wl <= max_mean_word_len),
+            (mean_wl >= 3.0) & (mean_wl <= 10.0),
         )
         .withColumn(
             "ok_symbol_ratio",
-            F.when(n_tokens > 0, n_symbols / n_tokens <= max_symbol_ratio)
+            F.when(n_tokens > 0, n_symbols / n_tokens <= 0.1)
             .otherwise(F.lit(True)),
         )
         .withColumn(
             "ok_bullet_lines",
-            F.when(n_lines > 0, n_bullet / n_lines <= max_bullet_frac)
+            F.when(n_lines > 0, n_bullet / n_lines <= 0.9)
             .otherwise(F.lit(True)),
         )
         .withColumn(
             "ok_ellipsis_lines",
-            F.when(n_lines > 0, n_ellipsis / n_lines <= max_ellipsis_frac)
+            F.when(n_lines > 0, n_ellipsis / n_lines <= 0.3)
             .otherwise(F.lit(True)),
         )
         .withColumn(
             "ok_alpha_words",
-            F.when(n_tokens > 0, n_alpha / n_tokens >= min_alpha_word_frac)
+            F.when(n_tokens > 0, n_alpha / n_tokens >= 0.8)
             .otherwise(F.lit(False)),
         )
-        .withColumn("ok_stopwords", sw >= min_stopword_hits)
+        .withColumn("ok_stopwords", sw >= 2)
         .withColumn(
             "ok_dup_lines",
             F.when(
                 n_lines > 0,
-                (n_lines - n_dist_lines) / n_lines <= max_dup_line_frac,
+                (n_lines - n_dist_lines) / n_lines <= 0.3,
             ).otherwise(F.lit(True)),
         )
     )
@@ -555,7 +536,7 @@ PII_PATTERNS: tuple[tuple[str, str, str], ...] = (
 )
 
 
-def with_pii_flags(df: DataFrame, text_col: str = "text") -> DataFrame:
+def with_pii_flags(df: DataFrame) -> DataFrame:
     """PII detection + redaction as pure column expressions (the
     standard pretraining-corpus scrub stage — C4/CCNet-style): per-doc
     match counts for emails, IPv4 literals, and phone numbers, plus a
@@ -579,7 +560,7 @@ def with_pii_flags(df: DataFrame, text_col: str = "text") -> DataFrame:
 
     Detection, not NER: the regex stage is the cheap hard filter; an
     ML-based pass would sit downstream on the survivors."""
-    txt = F.coalesce(F.col(text_col), F.lit(""))
+    txt = F.coalesce(F.col("text"), F.lit(""))
     out = df
     red = txt
     for name, pat, tag in PII_PATTERNS:
@@ -598,12 +579,7 @@ def with_pii_flags(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def dedup_lines(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    blank_lines: str = "keep",
-) -> DataFrame:
+def dedup_lines(df: DataFrame, blank_lines: str = "keep") -> DataFrame:
     """Within-document duplicate-line removal — the CCNet/RefinedWeb
     cleaning TRANSFORM behind the Gopher ``ok_dup_lines`` flag this
     module already computes: keep the FIRST occurrence of every
@@ -614,7 +590,7 @@ def dedup_lines(
     paragraph structure is meaning, and "" repeating is not
     boilerplate; ``'dedup'`` treats "" like any other line.
 
-    Returns ``(id_col, text)`` with the rewritten text for EVERY input
+    Returns ``(doc_id, text)`` with the rewritten text for EVERY input
     doc (NULL text → empty string, matching the engine-wide coalesce
     convention).
 
@@ -631,9 +607,9 @@ def dedup_lines(
     if blank_lines not in ("keep", "dedup"):
         raise ValueError("blank_lines must be 'keep' or 'dedup'")
     lines = df.select(
-        F.col(id_col).alias("id"),
+        F.col("doc_id").alias("id"),
         F.posexplode(
-            F.split(F.coalesce(F.col(text_col), F.lit("")), "\n", -1)
+            F.split(F.coalesce(F.col("text"), F.lit("")), "\n", -1)
         ).alias("pos", "line"),
     )
     # blanks in 'keep' mode get a per-position discriminator so the
@@ -659,9 +635,9 @@ def dedup_lines(
                     lambda s: s["line"],
                 ),
                 "\n",
-            ).alias(text_col)
+            ).alias("text")
         )
-        .select(F.col("id").alias(id_col), text_col)
+        .select(F.col("id").alias("doc_id"), "text")
     )
 
 
@@ -717,7 +693,6 @@ def hashed_count_features(
 def train_centroid_classifier(
     train_docs: DataFrame,
     label_col: str,
-    text_col: str = "text",
     n_features: int = 2**18,
     hash_mode: str = "xxhash64",
 ) -> dict:
@@ -767,8 +742,7 @@ def train_centroid_classifier(
         train_docs.where(F.col(label_col).isNotNull()),
         n_features,
         [label_col],
-        text_col,
-        hash_mode,
+        hash_mode=hash_mode,
     )
     model = cf.groupBy("feature").agg(
         F.array(
@@ -800,16 +774,11 @@ def train_centroid_classifier(
     }
 
 
-def centroid_classify(
-    docs: DataFrame,
-    clf: dict,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def centroid_classify(docs: DataFrame, clf: dict) -> DataFrame:
     """Score documents against a trained centroid classifier: per-doc
     cosine to EVERY class centroid, argmax with label-ASC tie-break.
 
-    Output: (id_col, n_tokens int64, pred_label string, max_cos
+    Output: (doc_id, n_tokens int64, pred_label string, max_cos
     double).  Zero-token documents get NULL pred_label/max_cos (cosine
     is undefined at zero norm) — every input row appears exactly once.
 
@@ -823,11 +792,11 @@ def centroid_classify(
     whose operand order matches the DuckDB oracle token-for-token."""
     labels, norms = clf["labels"], clf["norms"]
     x = hashed_count_features(
-        docs, clf["n_features"], [id_col], text_col, clf["hash_mode"],
+        docs, clf["n_features"], ["doc_id"], hash_mode=clf["hash_mode"],
         spread_by_ids=True,
     )
     joined = x.join(F.broadcast(clf["model"]), "feature", "left")
-    per_doc = joined.groupBy(id_col).agg(
+    per_doc = joined.groupBy("doc_id").agg(
         F.sum("x").alias("n_tokens"),
         F.sum(F.col("x") * F.col("x")).alias("_d2"),
         *[
@@ -847,7 +816,7 @@ def centroid_classify(
         ).alias(f"_cos{i}")
         for i in range(len(labels))
     ]
-    scored = per_doc.select(id_col, "n_tokens", *cos)
+    scored = per_doc.select("doc_id", "n_tokens", *cos)
     # argmax via struct max: (cos, -idx) — highest cosine, then LOWEST
     # label index (labels are sorted ASC at train time), so ties are
     # deterministic and engine-independent (cosines are bit-exact)
@@ -864,7 +833,7 @@ def centroid_classify(
     )
     lab_arr = F.array(*[F.lit(lab) for lab in labels])
     scored = scored.withColumn("_b", best).select(
-        id_col,
+        "doc_id",
         "n_tokens",
         F.element_at(lab_arr, -F.col("_b.ni") + 1).alias("pred_label"),
         F.col("_b.c").alias("max_cos"),
@@ -872,10 +841,10 @@ def centroid_classify(
     # reattach zero-token docs (they vanish at the explode): NULL
     # prediction, n_tokens 0 — every input row surfaces exactly once
     return (
-        docs.select(id_col)
-        .join(scored, id_col, "left")
+        docs.select("doc_id")
+        .join(scored, "doc_id", "left")
         .select(
-            id_col,
+            "doc_id",
             F.coalesce("n_tokens", F.lit(0).cast("long")).alias("n_tokens"),
             "pred_label",
             "max_cos",

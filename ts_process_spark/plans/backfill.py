@@ -16,10 +16,13 @@ per-partition lineage + metrics"):
   THEN append the lineage record.  A crash between the two leaves a
   partition without lineage — the re-run simply overwrites it.  Lineage
   is the source of truth for completeness, never the data files.
-- **Lineage row**: run_id, tier, bucket_id, rows_in, rows_out,
-  value_hash (xor-fold of row xxhash64s — order-independent, cheap to
-  verify), started/committed wall times.  ``resume`` = anti-join of the
-  pending set against committed lineage keys.
+- **Lineage row**: run_id, tier, bucket_id, n_buckets, rows_in,
+  rows_out, value_hash (xor-fold of row xxhash64s — order-independent,
+  cheap to verify), started/committed wall times.  ``resume`` =
+  anti-join of the pending set against committed lineage keys, which
+  is only sound under the same bucketing: a root whose records carry
+  another ``n_buckets`` (or none) is refused before anything is
+  written, since its committed buckets hold other conversations.
 - **Counters come from the write itself.**  ``rows_out`` and
   ``value_hash`` are ``DataFrame.observe`` aggregates on the frame being
   written (the same ``count(1)`` / ``bit_xor(xxhash64(HASH_COLS))`` that
@@ -160,15 +163,17 @@ def backfill(
     raw: DataFrame,
     tables: TableSet,
     n_buckets: int = 8,
-    max_units: int | None = None,
     fail_after: int | None = None,
     parallelism: int = 1,
 ) -> dict:
     """Run (or resume) the raw→1m→1h→1d cascade bucket by bucket.
 
-    ``max_units`` / ``fail_after`` exist for the resume tests: stop after
-    N (tier, bucket) commits, simulating a mid-backfill crash (serial
-    mode only).  Returns {"committed": k, "skipped": s}.
+    A resume must use the ``n_buckets`` the root was started with;
+    any other value raises ``ValueError`` before a write.
+    ``fail_after`` exists for the resume tests: the N-th (tier, bucket)
+    unit writes its data and stops before its lineage commit,
+    simulating a mid-backfill crash (serial mode only).  Returns
+    {"committed": k, "skipped": s}, plus "crashed" after such a stop.
 
     ``parallelism > 1`` runs BUCKET CHAINS concurrently (round-2 VERDICT
     #6): buckets are independent by construction (whole conversations
@@ -184,11 +189,19 @@ def backfill(
     import threading
 
     run_id = uuid.uuid4().hex[:12]
+    lineage = tables.read_lineage()
+    other = {r.get("n_buckets") for r in lineage} - {n_buckets}
+    if other:
+        raise ValueError(
+            f"{tables.root} holds units bucketed with n_buckets="
+            f"{sorted(other, key=str)}; resuming with n_buckets={n_buckets} "
+            "would duplicate rows"
+        )
+    if parallelism > 1 and fail_after is not None:
+        raise ValueError("crash simulation requires parallelism=1")
     os.makedirs(tables.root, exist_ok=True)
-    done = {(r["tier"], r["bucket_id"]): r for r in tables.read_lineage()}
+    done = {(r["tier"], r["bucket_id"]): r for r in lineage}
     bucketed = with_bucket(raw, n_buckets)
-    if parallelism > 1 and (max_units is not None or fail_after is not None):
-        raise ValueError("crash-simulation knobs require parallelism=1")
 
     lock = threading.Lock()
     counts = {"committed": 0, "skipped": 0}
@@ -207,8 +220,6 @@ def backfill(
                     counts["skipped"] += 1
                 parent_rows = done[key]["rows_out"]
                 continue
-            if max_units is not None and counts["committed"] >= max_units:
-                return False
             started = time.time()
             # observation names are unique per unit: bucket chains run
             # their writes concurrently on one session
@@ -248,6 +259,7 @@ def backfill(
                 "run_id": run_id,
                 "tier": tier,
                 "bucket_id": bucket_id,
+                "n_buckets": n_buckets,
                 "rows_in": rows_in,
                 "rows_out": stats["n"],
                 "value_hash": stats["x"],

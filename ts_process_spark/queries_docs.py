@@ -98,11 +98,13 @@ def q_minhash_md5_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _sql_minhash_md5(n_perm: int = 64, n_bands: int = 16, rpb: int = 4) -> str:
+def _sql_minhash_md5() -> str:
     # affine (a·h + b) mod P permutations, constants shared with the
     # Spark pipeline (dedup.minhash_affine_consts) — exact BIGINT both
     # engines; ONE md5 per shingle instead of n_perm (round-3 VERDICT #5)
     P = dedup.MINHASH_P
+    n_perm, n_bands = dedup.MINHASH_PERMS, dedup.MINHASH_BANDS
+    rpb = dedup.MINHASH_ROWS_PER_BAND
     perm_exprs = []
     for p in range(n_perm):
         a, b = dedup.minhash_affine_consts(p)
@@ -188,7 +190,8 @@ def q_simhash_md5_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.simhash_pairs(docs, max_hamming=3, hash_mode="md5")
 
 
-def _sql_simhash_md5(n_bits: int = 60, max_hamming: int = 3) -> str:
+def _sql_simhash_md5() -> str:
+    n_bits = 60
     votes = ",\n        ".join(
         f"sum(CASE WHEN (h >> {b}) & 1 = 1 THEN 1 ELSE -1 END) AS v{b}"
         for b in range(n_bits)
@@ -238,7 +241,7 @@ cand AS (
     )
 )
 SELECT id_a, id_b, CAST(bit_count(xor(sa, sb)) AS BIGINT) AS hamming
-FROM cand WHERE bit_count(xor(sa, sb)) <= {max_hamming}
+FROM cand WHERE bit_count(xor(sa, sb)) <= 3
 """
 
 
@@ -595,28 +598,28 @@ def q_emb_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.embedding_neardup_pairs(_embs(spark, sf_dir), 0.35)
 
 
-def _srp_bucket_expr_for(planes, col: str = "q") -> str:
+def _srp_bucket_expr_for(planes) -> str:
     terms = []
     for p, row in enumerate(planes):
         lit = "[" + ",".join(str(int(x)) for x in row) + "]"
         terms.append(
-            f"(CASE WHEN list_dot_product({col}, {lit}) >= 0 THEN 1 ELSE 0 END)"
+            f"(CASE WHEN list_dot_product(q, {lit}) >= 0 THEN 1 ELSE 0 END)"
             f" * {1 << p}"
         )
     return " + ".join(terms)
 
 
-def _sql_emb_neardup(
-    threshold: float = 0.35, n_planes: int = 6, n_tables: int = 4, seed: int = 42
-) -> str:
+def _sql_emb_neardup() -> str:
+    # the blocking lattice of similarity.embedding_neardup_pairs: 4
+    # tables of 6 hyperplanes seeded 42..45
     table_selects = "\n    UNION ALL ".join(
         "SELECT id, {t} AS tbl, {expr} AS bucket FROM e".format(
             t=t,
             expr=_srp_bucket_expr_for(
-                similarity.rademacher_hyperplanes(n_planes, 64, seed + t)
+                similarity.rademacher_hyperplanes(6, 64, 42 + t)
             ),
         )
-        for t in range(n_tables)
+        for t in range(4)
     )
     cos = (
         "round(list_dot_product(a.q, b.q)"
@@ -643,7 +646,7 @@ cand AS (
 )
 SELECT c.id_a, c.id_b, {cos} AS cosine
 FROM cand c JOIN e a ON a.id = c.id_a JOIN e b ON b.id = c.id_b
-WHERE {cos} >= {threshold}
+WHERE {cos} >= 0.35
 """
 
 
@@ -1156,10 +1159,9 @@ def q_pack_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _sql_pack_documents(budget: int = _PACK_BUDGET,
-                        n_shards: int = _PACK_SHARDS) -> str:
+def _sql_pack_documents() -> str:
     shard = (
-        f"CAST({_h60_sql('CAST(doc_id AS VARCHAR)')} % {n_shards} AS INTEGER)"
+        f"CAST({_h60_sql('CAST(doc_id AS VARCHAR)')} % {_PACK_SHARDS} AS INTEGER)"
     )
     return f"""
 WITH base AS (
@@ -1176,8 +1178,8 @@ r AS (
     FROM base
 )
 SELECT id, n_tokens, shard,
-       CAST(s // {budget} AS BIGINT) AS bin_id,
-       CAST(row_number() OVER (PARTITION BY shard, s // {budget}
+       CAST(s // {_PACK_BUDGET} AS BIGINT) AS bin_id,
+       CAST(row_number() OVER (PARTITION BY shard, s // {_PACK_BUDGET}
                                ORDER BY id, n_tokens) - 1 AS BIGINT)
            AS pos_in_bin
 FROM r
@@ -1195,9 +1197,8 @@ def q_doc_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.duplicated_span_stats(_docs(spark, sf_dir), hash_mode="md5")
 
 
-def _sql_doc_span_dedup(
-    k: int = dedup.SPAN_K, s: int = dedup.SPAN_STRIDE, min_count: int = 2
-) -> str:
+def _sql_doc_span_dedup() -> str:
+    k, s = dedup.SPAN_K, dedup.SPAN_STRIDE
     return f"""
 WITH d AS (SELECT doc_id, coalesce(text,'') AS t,
                   CAST(length(coalesce(text,'')) AS BIGINT) AS n_chars
@@ -1211,7 +1212,7 @@ w AS (
                       THEN (n_chars - {k}) // {s} ELSE -1 END)) AS i
         FROM d)
 ),
-dup AS (SELECT h FROM w GROUP BY h HAVING count(*) >= {min_count}),
+dup AS (SELECT h FROM w GROUP BY h HAVING count(*) >= 2),
 cov AS (
   SELECT doc_id, pos,
          (pos + {k}) - greatest(pos, coalesce(

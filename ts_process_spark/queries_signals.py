@@ -636,9 +636,7 @@ FROM grid g JOIN y2l z USING (series_id)
 """
 
 
-def _rotd50_replay_sql(
-    dt: float = 0.01, damping: float = 0.05, rn_cap: int = 64
-) -> str:
+def _rotd50_replay_sql() -> str:
     """DuckDB replay of q_signal_rotd50_grid63 (dsp.rotd50 +
     oscillator_response_seq + the Famp1.5 window) — see that query's
     docstring for why this is bit-exact.  All transcendental constants
@@ -653,7 +651,7 @@ def _rotd50_replay_sql(
     for pidx, period in enumerate(ps):
         w = 2.0 * np.pi / period
         (a11, a12, a21, a22), (b11, b12, b21, b22) = dsp.oscillator_coeffs(
-            w, damping, dt
+            w, 0.05, 0.01
         )
         t2 = w**2
         prow.append(
@@ -699,7 +697,7 @@ WITH RECURSIVE base AS (
                               ORDER BY ts NULLS FIRST, event_id) - 1 AS i,
            value AS x
     FROM events
-    QUALIFY i < {rn_cap}
+    QUALIFY i < 64
 ), l1 AS (
     SELECT station, count(*) AS n1, list(x ORDER BY i) AS lx1
     FROM base WHERE comp = 0 GROUP BY 1

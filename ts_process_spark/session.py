@@ -31,10 +31,16 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) the session.
 
-    ``cores=None`` → ``local[$SPARK_GRAFT_CPUS]`` (default 32).  The bench
-    harness calls this twice, at ``cores=8`` and ``cores=32``, to evidence
-    the two-cluster-size scaling rule on a single box.
+    ``cores=None`` → ``local[$SPARK_GRAFT_CPUS]`` (default 32).
+    ``tools/scaling_run.py`` calls this twice, at ``cores=8`` and
+    ``cores=32``, to evidence the two-cluster-size scaling rule on a
+    single box.
+
+    Shuffle and spill go to tmpfs (``/dev/shm/spark_local``) only when
+    the caller names no local dir, neither ``spark.local.dir`` in
+    ``extra_conf`` nor ``SPARK_LOCAL_DIRS`` in the environment.
     """
+    extra_conf = extra_conf or {}
     cores = cores or DEFAULT_CPUS
     shuffle_partitions = shuffle_partitions or max(cores, 8)
     builder = (
@@ -63,13 +69,14 @@ def get_spark(
     # shuffle/spill to tmpfs when available: local mode has one disk and
     # shuffle-file I/O was the measured scaling bottleneck on this box
     # (on a real cluster each executor has its own local dirs)
-    shm = "/dev/shm/spark_local"
-    try:
-        os.makedirs(shm, exist_ok=True)
-        builder = builder.config("spark.local.dir", shm)
-    except OSError:
-        pass
-    for k, v in (extra_conf or {}).items():
+    if "spark.local.dir" not in extra_conf and "SPARK_LOCAL_DIRS" not in os.environ:
+        shm = "/dev/shm/spark_local"
+        try:
+            os.makedirs(shm, exist_ok=True)
+            builder = builder.config("spark.local.dir", shm)
+        except OSError:
+            pass
+    for k, v in extra_conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -315,7 +315,6 @@ def write_bbp(
     pdf: pd.DataFrame,
     path: str,
     units: str = "cm",
-    orientation: str = "0,90,up",
     lp: float | None = None,
     hp: float | None = None,
     padding: int = 0,
@@ -331,7 +330,7 @@ def write_bbp(
     with open(path, "w") as f:
         f.write(f"# units={units}\n")
         f.write(f"# padding={padding}\n")
-        f.write(f"# orientation={orientation}\n")
+        f.write("# orientation=0,90,up\n")
         if lp is not None:
             f.write(f"# lp={lp}\n")
         if hp is not None:

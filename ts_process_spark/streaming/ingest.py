@@ -31,9 +31,9 @@ def stream_raw(spark: SparkSession, path: str) -> DataFrame:
     )
 
 
-def stream_rollup_1m(raw: DataFrame, watermark: str = "10 minutes") -> DataFrame:
-    """Windowed streaming aggregate; append output mode (finalized
-    windows only)."""
+def stream_rollup_1m(raw: DataFrame) -> DataFrame:
+    """Windowed streaming aggregate under a 10-minute watermark; append
+    output mode (finalized windows only)."""
     # NULL text normalizes to '' exactly like the batch tier
     # (rollup_raw_to_1m): both paths write the same keys, so they must
     # agree on NULL-text buckets or the batch compaction overwrites the
@@ -41,7 +41,7 @@ def stream_rollup_1m(raw: DataFrame, watermark: str = "10 minutes") -> DataFrame
     tlen = F.length(F.coalesce(F.col("text"), F.lit("")))
     return (
         raw.where(F.col("ts").isNotNull())
-        .withWatermark("ts", watermark)
+        .withWatermark("ts", "10 minutes")
         .groupBy("conv_id", F.window("ts", "1 minute").alias("win"))
         .agg(
             F.count(F.lit(1)).alias("n_turns"),
@@ -62,21 +62,19 @@ def stream_rollup_1m(raw: DataFrame, watermark: str = "10 minutes") -> DataFrame
     )
 
 
-def run_stream_to_memory(
-    spark: SparkSession, path: str, query_name: str = "tier_1m_stream"
-) -> DataFrame:
+def run_stream_to_memory(spark: SparkSession, path: str) -> DataFrame:
     """Drive the stream to completion over a static directory (test/demo
     harness): memory sink + processAllAvailable."""
     q = (
         stream_rollup_1m(stream_raw(spark, path))
         .writeStream.outputMode("append")
         .format("memory")
-        .queryName(query_name)
+        .queryName("tier_1m_stream")
         .start()
     )
     q.processAllAvailable()
     q.stop()
-    return spark.sql(f"SELECT * FROM {query_name}")
+    return spark.sql("SELECT * FROM tier_1m_stream")
 
 
 # --------------------------------------------------------------------------
@@ -90,15 +88,14 @@ SESSION_SCHEMA = (
 _SESSION_STATE_SCHEMA = "ts_buf array<long>, tl_buf array<long>"
 
 
-def stream_sessionize(
-    raw: DataFrame, gap_s: int = 1800, watermark: str = "10 minutes"
-) -> DataFrame:
+def stream_sessionize(raw: DataFrame, gap_s: int = 1800) -> DataFrame:
     """Streaming sessionization per conversation — the engine's custom
     STATEFUL operator (SURVEY §2.9 / task brief: applyInPandasWithState
     for semantics windowed aggs can't express: session boundaries depend
     on *neighboring* event times, not a fixed grid).
 
-    Protocol (correct under out-of-order arrival within the watermark):
+    Protocol (correct under out-of-order arrival within the 10-minute
+    watermark):
     buffer each conv's (ts, text_len) pairs in group state; whenever the
     group is invoked (new data OR event-time timeout), sort the buffer,
     greedily split into gap_s sessions, and EMIT exactly the sessions
@@ -177,7 +174,7 @@ def stream_sessionize(
     slim = (
         raw.where(F.col("ts").isNotNull())
         .select("conv_id", "ts", F.length("text").cast("long").alias("text_len"))
-        .withWatermark("ts", watermark)
+        .withWatermark("ts", "10 minutes")
     )
     return slim.groupBy("conv_id").applyInPandasWithState(
         fn,
@@ -189,21 +186,18 @@ def stream_sessionize(
 
 
 def run_sessionize_stream_to_memory(
-    spark: SparkSession,
-    path: str,
-    gap_s: int = 1800,
-    query_name: str = "sessions_stream",
+    spark: SparkSession, path: str, gap_s: int = 1800
 ) -> DataFrame:
     q = (
         stream_sessionize(stream_raw(spark, path), gap_s=gap_s)
         .writeStream.outputMode("append")
         .format("memory")
-        .queryName(query_name)
+        .queryName("sessions_stream")
         .start()
     )
     q.processAllAvailable()
     q.stop()
-    return spark.sql(f"SELECT * FROM {query_name}")
+    return spark.sql("SELECT * FROM sessions_stream")
 
 
 def stream_exact_dedup(
@@ -232,11 +226,10 @@ def stream_interval_join(
     turns: DataFrame,
     acks: DataFrame,
     max_delay_s: int = 120,
-    watermark: str = "10 minutes",
 ) -> DataFrame:
-    """Watermarked stream–stream INTERVAL join: each turn is matched to
-    acknowledgment events of the same conversation arriving within
-    (turn_ts, turn_ts + max_delay_s].
+    """Watermarked stream–stream INTERVAL join (a 10-minute watermark on
+    both sides): each turn is matched to acknowledgment events of the
+    same conversation arriving within (turn_ts, turn_ts + max_delay_s].
 
     This is the class of streaming operator the other entries don't
     cover: BOTH sides are unbounded, so correctness depends on the
@@ -254,7 +247,7 @@ def stream_interval_join(
             F.col("turn_idx"),
             F.col("ts").alias("turn_ts"),
         )
-        .withWatermark("turn_ts", watermark)
+        .withWatermark("turn_ts", "10 minutes")
     )
     a = (
         acks.where(F.col("ts").isNotNull())
@@ -263,7 +256,7 @@ def stream_interval_join(
             F.col("ts").alias("ack_ts"),
             F.col("role").alias("ack_role"),
         )
-        .withWatermark("ack_ts", watermark)
+        .withWatermark("ack_ts", "10 minutes")
     )
     return t.join(
         a,
@@ -281,7 +274,6 @@ def run_interval_join_to_memory(
     turns_path: str,
     acks_path: str,
     max_delay_s: int = 120,
-    query_name: str = "interval_join_stream",
 ) -> DataFrame:
     """Drive the interval join over static directories (test harness)."""
     q = (
@@ -292,9 +284,9 @@ def run_interval_join_to_memory(
         )
         .writeStream.outputMode("append")
         .format("memory")
-        .queryName(query_name)
+        .queryName("interval_join_stream")
         .start()
     )
     q.processAllAvailable()
     q.stop()
-    return spark.sql(f"SELECT * FROM {query_name}")
+    return spark.sql("SELECT * FROM interval_join_stream")
