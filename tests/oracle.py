@@ -13,34 +13,37 @@ import pandas as pd
 
 def gapfill_pdf(pdf: pd.DataFrame) -> pd.DataFrame:
     """Exact integer linear interpolation of null ts per conv (mirrors
-    operators/gapfill.py: floor division on int64 microseconds)."""
+    operators/gapfill.py: floor division on int64 microseconds).  Rows
+    are ordered by ``(turn_idx, ts)`` with null ts first, by a stable
+    sort, and the neighbours of a null row are the nearest known ROWS
+    before and after it — so a turn that arrives twice, once with ts
+    lost, fills toward its known copy whatever the input order."""
     out = []
     for _, g in pdf.groupby("conv_id", sort=True):
-        g = g.sort_values("turn_idx").reset_index(drop=True)
+        g = g.sort_values(
+            ["turn_idx", "ts"], na_position="first", kind="stable"
+        ).reset_index(drop=True)
         us = g["ts"].astype("datetime64[us]").astype("int64").where(g["ts"].notna())
-        idx = g["turn_idx"].astype("int64")
+        idx = g["turn_idx"].astype("int64").to_numpy()
         filled = np.empty(len(g), dtype="float64")
         gapped = np.zeros(len(g), dtype=bool)
         known = us.notna().to_numpy()
-        known_i = idx[known].to_numpy()
-        known_us = us[known].astype("int64").to_numpy()
+        known_rows = np.flatnonzero(known)
         for r in range(len(g)):
             if known[r]:
                 filled[r] = us.iloc[r]
                 continue
             gapped[r] = True
-            i = idx.iloc[r]
-            left = known_i[known_i < i]
-            right = known_i[known_i > i]
-            if len(left) and len(right):
-                pi, ni = left[-1], right[0]
-                pu = known_us[np.searchsorted(known_i, pi)]
-                nu = known_us[np.searchsorted(known_i, ni)]
-                filled[r] = pu + ((nu - pu) * (i - pi)) // (ni - pi)
+            left = known_rows[known_rows < r]
+            right = known_rows[known_rows > r]
+            if len(left) and len(right) and idx[right[0]] != idx[left[-1]]:
+                pi, ni = idx[left[-1]], idx[right[0]]
+                pu, nu = int(us.iloc[left[-1]]), int(us.iloc[right[0]])
+                filled[r] = pu + ((nu - pu) * (idx[r] - pi)) // (ni - pi)
             elif len(left):
-                filled[r] = known_us[np.searchsorted(known_i, left[-1])]
+                filled[r] = us.iloc[left[-1]]
             elif len(right):
-                filled[r] = known_us[np.searchsorted(known_i, right[0])]
+                filled[r] = us.iloc[right[0]]
             else:
                 filled[r] = np.nan
         g = g.copy()

@@ -8,12 +8,14 @@ from __future__ import annotations
 
 import numpy as np
 import pytest
-from hypothesis import given, settings
+import pyarrow as pa
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from ts_process_spark.functions.codecs import (
     decode_dod,
     decode_gorilla,
+    encode_arrow,
     encode_dod,
     encode_gorilla,
 )
@@ -154,3 +156,38 @@ def test_wav_roundtrip_property():
         assert r == rate and np.array_equal(got, pcm)
 
     prop()
+
+
+_BOUND = st.integers(0, 12)  # slice bounds: non-zero array offsets
+_I64 = st.integers(min_value=-(2**63), max_value=2**63 - 1)
+_F64 = st.one_of(
+    st.floats(allow_nan=True, allow_infinity=True, width=64),
+    st.sampled_from([float("nan"), float("inf"), float("-inf"), -0.0, 0.0]),
+)
+
+
+@settings(max_examples=80, deadline=None)
+@given(st.lists(st.lists(_I64, max_size=8), max_size=12), _BOUND, _BOUND)
+@example([[], [7], [-(2**63), 2**63 - 1, 0, -(2**63)], []], 1, 4)
+def test_encode_arrow_dod_matches_per_array(lists, start, stop):
+    """The Arrow encoder core (offsets + flatten in, one binary buffer
+    out) gives each list exactly encode_dod's bytes — empty and
+    single-point lists, slices with a non-zero offset, int64 extremes."""
+    arr = pa.array(lists, type=pa.list_(pa.int64()))[start:stop]
+    got = encode_arrow(arr, "dod")
+    assert got.type == pa.binary() and len(got) == len(arr)
+    want = [encode_dod(np.array(x, dtype=np.int64)) for x in arr.to_pylist()]
+    assert got.to_pylist() == want
+
+
+@settings(max_examples=80, deadline=None)
+@given(st.lists(st.lists(_F64, max_size=8), max_size=12), _BOUND, _BOUND)
+@example([[], [float("nan")], [-0.0, 0.0, float("inf"), float("-inf")], []], 1, 4)
+def test_encode_arrow_gorilla_matches_per_array(lists, start, stop):
+    """Same as the dod property for encode_gorilla's fast path,
+    including NaN, ±inf and −0.0."""
+    arr = pa.array(lists, type=pa.list_(pa.float64()))[start:stop]
+    got = encode_arrow(arr, "gorilla")
+    assert got.type == pa.binary() and len(got) == len(arr)
+    want = [encode_gorilla(np.array(x, dtype=np.float64)) for x in arr.to_pylist()]
+    assert got.to_pylist() == want

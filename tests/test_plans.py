@@ -101,12 +101,102 @@ def test_neardup_has_no_cartesian(spark):
 
 def test_gapfill_windows_are_growing_frames(spark):
     """The O(n²) regression guard: both gap-fill lookups must be
-    incremental growing frames, never unbounded-following re-scans."""
+    incremental (a growing frame and a lead), never unbounded-following
+    re-scans."""
     from ts_process_spark.operators.gapfill import gapfill_ts
 
     raw = datagen.transcripts(spark, n_convs=5, seed=3)
     plan = _plan(gapfill_ts(raw))
     assert "unboundedfollowing" not in plan.lower(), plan
+
+
+def _sorts(plan: str) -> int:
+    return len(re.findall(r"\bSort \[", plan))
+
+
+def test_full_cascade_builds_in_few_py4j_calls(spark, monkeypatch):
+    """Plan building runs before any job starts, and each Column-API
+    call costs ~13 py4j round trips: the tiers are built from SQL
+    strings, so building all three stays a few hundred calls (the
+    Column-API form took thousands)."""
+    raw = datagen.transcripts(spark, n_convs=5, seed=3)
+    full_cascade(raw)  # first build creates the encoder UDFs' JVM twins
+    client = type(spark.sparkContext._gateway._gateway_client)
+    send = client.send_command
+    calls = []
+
+    def counting(self, *args, **kwargs):
+        calls.append(1)
+        return send(self, *args, **kwargs)
+
+    monkeypatch.setattr(client, "send_command", counting)
+    full_cascade(raw)
+    monkeypatch.undo()
+    assert len(calls) <= 600, len(calls)
+
+
+def test_1m_plan_sorts_once_under_conv_exchange(spark):
+    """Gap-fill's two lookups (prev and next known) and the 1m
+    aggregate share ONE sort of each conversation, directly above the
+    conv_id exchange."""
+    raw = datagen.transcripts(spark, n_convs=5, seed=3)
+    plan = _plan(full_cascade(raw)["1m"])
+    assert _sorts(plan) == 1, plan
+    assert plan.count("Window [") == 1, plan
+    assert re.search(
+        r"Sort \[conv_id#\d+ ASC NULLS FIRST, turn_idx#\d+ ASC NULLS FIRST,"
+        r" ts#\d+ ASC NULLS FIRST\].*\n\s*\+- Exchange hashpartitioning\(conv_id#",
+        plan,
+    ), plan
+
+
+def test_gapfill_linear_sorts_once(spark):
+    """q_gapfill_linear numbers rows and finds both known neighbours
+    over one (ts, event_id) ordering: one Sort."""
+    import __spark_entry__ as E
+
+    plan = _plan(E.queries()["gapfill_linear"](spark, SF_DIR))
+    assert _sorts(plan) == 1, plan
+
+
+def test_cascade_containers_plan_no_lambda(spark, tmp_path):
+    """The 1h/1d containers are ordered listagg aggregates over parts
+    projected per child row: an uncapped rollup_cascade over a tier read
+    from parquet plans no lambda function and no Python."""
+    from ts_process_spark.operators.rollup import rollup_cascade
+
+    raw = datagen.transcripts(spark, n_convs=5, seed=3)
+    child = full_cascade(raw)["1m"]
+    for tier in ("1h", "1d"):
+        path = str(tmp_path / tier)
+        child.write.parquet(path)
+        child = rollup_cascade(spark.read.parquet(path), tier)
+        plan = _plan(child)
+        assert "lambdafunction" not in plan.lower(), plan
+        assert "EvalPython" not in plan, plan
+
+
+def test_gapfill_hot_conversation_stays_linear(spark):
+    """One conversation of 4× the turns takes well under 16× the time
+    (the O(n²) signature): both lookups are incremental."""
+    import time
+
+    from ts_process_spark.operators.gapfill import gapfill_ts
+
+    def seconds(n: int) -> float:
+        hot = spark.range(n).selectExpr(
+            "'hot' AS conv_id",
+            "CAST(id AS INT) AS turn_idx",
+            "CASE WHEN id % 7 != 3 THEN timestamp_micros(id * 1000000) END AS ts",
+        )
+        t0 = time.perf_counter()
+        gapfill_ts(hot).write.format("noop").mode("overwrite").save()
+        return time.perf_counter() - t0
+
+    seconds(200_000)  # warm-up: codegen and the first job
+    small = min(seconds(200_000) for _ in range(2))
+    big = seconds(800_000)
+    assert big < 8 * small, (small, big)
 
 
 def test_emb_neardup_default_is_blocked(spark):

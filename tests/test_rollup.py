@@ -344,12 +344,12 @@ def test_blob_chunks_dropped_counts_leaf_units(spark):
     assert d["blob_n_chunks"] == 120  # kept payload, leaf units
 
 
-def test_concat_blobs_expr_matches_python_form(spark, raw_df):
-    """r9: the cascade's container blobs are built by pure-JVM
-    expression (_concat_blobs_expr); pin them byte-equal to the scalar
+def test_listagg_containers_match_python_form(spark, raw_df):
+    """The cascade's container blobs are joined in the JVM by ordered
+    ``listagg`` over per-child parts; pin them byte-equal to the scalar
     codecs.concat_blobs reference for BOTH structural shapes — leaf
-    children (1m→1h: header lens synthesized from the map-side ltb/lvb
-    bytes) and container children (1h→1d: lens/body copied by
+    children (1m→1h: length entries from _le4 of each blob's length)
+    and container children (1h→1d: length table and body copied by
     byte-slicing, flattening exactly like the Python form) — plus the
     max_blob_bytes branch down to the empty-kept edge."""
     from ts_process_spark.functions.codecs import concat_blobs
@@ -421,10 +421,58 @@ def test_le4_fails_loudly_past_2_31_with_ansi_off(spark):
     spark.conf.set("spark.sql.ansi.enabled", "false")
     try:
         top = 2**31 - 1
-        got = spark.range(top, top + 1).select(_le4(F.col("id")).alias("b")).first()
+        got = spark.range(top, top + 1).select(F.expr(_le4("id")).alias("b")).first()
         assert bytes(got["b"]) == struct.pack("<I", top)
         for bad in (2**31, 2**32 + 5, -1):
             with pytest.raises(Exception, match="out of u32 range"):
-                spark.range(bad, bad + 1).select(_le4(F.col("id"))).collect()
+                spark.range(bad, bad + 1).select(F.expr(_le4("id"))).collect()
     finally:
         spark.conf.set("spark.sql.ansi.enabled", prev)
+
+
+def test_duplicate_turn_fills_the_same_in_every_layout(spark):
+    """A turn that arrives twice — once with its ts lost, once known —
+    gap-fills toward its known copy (order ``(turn_idx, ts NULLS
+    FIRST)``), whatever the input order and partition count: one
+    outcome over 2 orders × {1, 2, 4, 8} partitions, for gap-fill and
+    for the 1m tier, equal to the pandas oracle."""
+    import datetime as dt
+
+    from ts_process_spark.datagen import TRANSCRIPT_SCHEMA
+
+    t0 = dt.datetime(2024, 5, 1, 0, 0, 0)
+    rows = [
+        ("dup", 0, "user", "a", None, t0),
+        ("dup", 1, "assistant", "bb", None, None),
+        ("dup", 1, "assistant", "bb", None, t0 + dt.timedelta(seconds=50)),
+        ("dup", 2, "user", "ccc", None, t0 + dt.timedelta(seconds=10)),
+        ("dup", 3, "assistant", "dddd", None, None),
+        ("dup", 4, "user", "e", None, t0 + dt.timedelta(seconds=70)),
+    ]
+    pdf = pd.DataFrame(rows, columns=[f.name for f in TRANSCRIPT_SCHEMA])
+    exp = sorted(
+        (int(r.turn_idx), int(r.ts_filled_us), bool(r.gapfilled))
+        for r in gapfill_pdf(pdf).itertuples()
+    )
+    fills, tiers = set(), set()
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        for order in (rows, rows[::-1]):
+            for parts in (1, 2, 4, 8):
+                spark.conf.set("spark.sql.shuffle.partitions", str(parts))
+                raw = spark.createDataFrame(
+                    spark.sparkContext.parallelize(order, parts), TRANSCRIPT_SCHEMA
+                )
+                fills.add(tuple(sorted(
+                    (r["turn_idx"], r["us"], r["gapfilled"])
+                    for r in gapfill_ts(raw)
+                    .selectExpr("turn_idx", "unix_micros(ts_filled) AS us", "gapfilled")
+                    .collect()
+                )))
+                tiers.add(tuple(sorted(
+                    tuple(r) for r in rollup_raw_to_1m(raw).drop("conv_id").collect()
+                )))
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    assert fills == {tuple(exp)}, fills
+    assert len(tiers) == 1, tiers

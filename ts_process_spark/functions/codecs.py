@@ -28,6 +28,7 @@ from __future__ import annotations
 import struct
 
 import numpy as np
+import pyarrow as pa
 
 # ---------------------------------------------------------------------- bits
 
@@ -293,39 +294,46 @@ def _decode_any(buf: bytes, plain_decode) -> np.ndarray:
 # One vectorized pass over a whole Arrow batch of blobs (thousands of
 # buckets): identical bytes to the per-array encoders above, but the
 # per-blob Python/NumPy fixed overhead (~50µs × millions of buckets in
-# the tier cascade) collapses into ~15 array ops total.
+# the tier cascade) collapses into ~15 array ops total.  The core
+# returns ONE byte buffer holding every blob back to back (u32 count
+# header included) plus the blob offsets, which is exactly the layout
+# of an Arrow binary array: the tier cascade's encoder UDFs hand it to
+# Spark without building a Python object per blob.
 
 
 def _scatter_blobs(
-    vals: np.ndarray, lens: np.ndarray, seg_arr: np.ndarray,
-    n_arrays: int, counts: np.ndarray,
-) -> list[bytes]:
+    vals: np.ndarray, lens: np.ndarray, seg_arr: np.ndarray, counts: np.ndarray,
+) -> tuple[np.ndarray, np.ndarray]:
     """Pack variable-length big-endian codes into one bitstream per
     array.  vals/lens/seg_arr are parallel per-segment arrays (seg_arr =
     owning array id, non-decreasing); zero-length segments are allowed.
-    Returns the [n:uint32][bits] blob per array."""
+    Returns ``(data, offsets)``: blob ``a`` = ``[counts[a]:u32][bits]``
+    is ``data[offsets[a]:offsets[a + 1]]``."""
+    n_arrays = len(counts)
     vals = vals.astype(np.uint64)
     lens = lens.astype(np.int64)
     bits_per_array = np.bincount(seg_arr, weights=lens, minlength=n_arrays).astype(
         np.int64
     )
-    bytes_per_array = (bits_per_array + 7) // 8
-    byte_off = np.zeros(n_arrays + 1, dtype=np.int64)
-    np.cumsum(bytes_per_array, out=byte_off[1:])
+    offsets = np.zeros(n_arrays + 1, dtype=np.int64)
+    np.cumsum(4 + (bits_per_array + 7) // 8, out=offsets[1:])
     # global unpadded starts per segment and per-array unpadded bases
     seg_end = np.cumsum(lens)
     seg_start = seg_end - lens
     arr_base_unpadded = np.zeros(n_arrays, dtype=np.int64)
     arr_base_unpadded[1:] = np.cumsum(bits_per_array)[:-1]
     within = seg_start - arr_base_unpadded[seg_arr]
-    global_start = byte_off[seg_arr] * 8 + within
+    global_start = (offsets[seg_arr] + 4) * 8 + within
 
+    out_bytes = np.zeros(int(offsets[-1]), dtype=np.uint8)
+    out_bytes[(offsets[:-1, None] + np.arange(4)).ravel()] = (
+        np.asarray(counts).astype("<u4").view(np.uint8)
+    )
     keep = lens > 0
     v, l, gs = vals[keep], lens[keep], global_start[keep]
     # byte-level scatter: a segment of L ≤ 64 bits starting at bit gs
     # touches ≤ 9 bytes; 9 masked bitwise_or scatters replace per-bit
     # materialization (≈100× less memory traffic for tiny tier blobs)
-    out_bytes = np.zeros(int(byte_off[-1]), dtype=np.uint8)
     if len(v):
         B0 = (gs >> 3).astype(np.int64)
         o = (gs & 7).astype(np.int64)
@@ -342,20 +350,15 @@ def _scatter_blobs(
                 np.uint8
             )
             np.bitwise_or.at(out_bytes, B0[active] + k, byte_val)
-    packed = out_bytes.tobytes()
-    out = []
-    for a in range(n_arrays):
-        out.append(
-            struct.pack("<I", int(counts[a]))
-            + packed[byte_off[a] : byte_off[a + 1]]
-        )
-    return out
+    return out_bytes, offsets
 
 
-def encode_dod_batch(concat: np.ndarray, lengths: np.ndarray) -> list[bytes]:
-    """Batched ``encode_dod``: byte-identical blobs, one vectorized pass."""
+def _dod_blobs(
+    concat: np.ndarray, lengths: np.ndarray
+) -> tuple[np.ndarray, np.ndarray]:
+    """Delta-of-delta blobs of every segment, as ``_scatter_blobs``'s
+    ``(data, offsets)``."""
     concat = np.asarray(concat, dtype=np.int64)
-    lengths = np.asarray(lengths, dtype=np.int64)
     n_arrays = len(lengths)
     ends = np.cumsum(lengths)
     starts = ends - lengths
@@ -409,14 +412,15 @@ def encode_dod_batch(concat: np.ndarray, lengths: np.ndarray) -> list[bytes]:
         lens[ctrl_idx] = ctrl_l
         vals[ctrl_idx + 1] = zz
         lens[ctrl_idx + 1] = pay_l
-    return _scatter_blobs(vals, lens, seg_arr, n_arrays, lengths)
+    return _scatter_blobs(vals, lens, seg_arr, lengths)
 
 
-def encode_gorilla_batch(concat: np.ndarray, lengths: np.ndarray) -> list[bytes]:
-    """Batched fast-path ``encode_gorilla`` (always-'11' window codes):
-    byte-identical to encode_gorilla(..., optimal=False)."""
+def _gorilla_blobs(
+    concat: np.ndarray, lengths: np.ndarray
+) -> tuple[np.ndarray, np.ndarray]:
+    """Fast-path Gorilla blobs (always-'11' window codes) of every
+    segment, as ``_scatter_blobs``'s ``(data, offsets)``."""
     v = np.ascontiguousarray(concat, dtype=np.float64).view(np.uint64)
-    lengths = np.asarray(lengths, dtype=np.int64)
     n_arrays = len(lengths)
     ends = np.cumsum(lengths)
     starts = ends - lengths
@@ -469,7 +473,45 @@ def encode_gorilla_batch(concat: np.ndarray, lengths: np.ndarray) -> list[bytes]
         lens[base_idx + 1] = hdr_l
         vals[base_idx + 2] = pay_v
         lens[base_idx + 2] = pay_l
-    return _scatter_blobs(vals, lens, seg_arr, n_arrays, lengths)
+    return _scatter_blobs(vals, lens, seg_arr, lengths)
+
+
+_BLOB_CODECS = {"dod": _dod_blobs, "gorilla": _gorilla_blobs}
+
+
+def encode_arrow(lists: pa.ListArray, codec: str) -> pa.BinaryArray:
+    """One blob per list of an Arrow list array (``codec`` ∈ {'dod',
+    'gorilla'}), byte-identical to ``encode_dod`` / ``encode_gorilla``
+    of each list.  Lengths come from the list offsets and values from
+    ``flatten()`` (both honour a sliced array's offset); the encoded
+    buffer becomes the binary array's data buffer as is."""
+    lengths = np.diff(lists.offsets.to_numpy()).astype(np.int64)
+    values = lists.flatten().to_numpy(zero_copy_only=False)
+    data, offsets = _BLOB_CODECS[codec](values, lengths)
+    if offsets[-1] > np.iinfo(np.int32).max:
+        raise ValueError(f"{offsets[-1]} blob bytes overflow an Arrow binary batch")
+    return pa.BinaryArray.from_buffers(
+        pa.binary(),
+        len(lengths),
+        [None, pa.py_buffer(offsets.astype(np.int32)), pa.py_buffer(data)],
+    )
+
+
+def _split(data: np.ndarray, offsets: np.ndarray) -> list[bytes]:
+    packed = data.tobytes()
+    bounds = offsets.tolist()
+    return [packed[a:b] for a, b in zip(bounds[:-1], bounds[1:])]
+
+
+def encode_dod_batch(concat: np.ndarray, lengths: np.ndarray) -> list[bytes]:
+    """Batched ``encode_dod``: byte-identical blobs, one vectorized pass."""
+    return _split(*_dod_blobs(concat, np.asarray(lengths, dtype=np.int64)))
+
+
+def encode_gorilla_batch(concat: np.ndarray, lengths: np.ndarray) -> list[bytes]:
+    """Batched fast-path ``encode_gorilla`` (always-'11' window codes):
+    byte-identical to encode_gorilla(..., optimal=False)."""
+    return _split(*_gorilla_blobs(concat, np.asarray(lengths, dtype=np.int64)))
 
 
 def decode_gorilla(buf: bytes) -> np.ndarray:

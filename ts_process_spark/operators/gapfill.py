@@ -15,65 +15,64 @@ bit-stable regardless of partitioning and reproducible in the DuckDB
 oracle with the same integer expression.  Leading (no previous known) and
 trailing (no next known) nulls clamp to the nearest known timestamp.
 
+A turn that arrives twice (once with ``ts`` lost, once known) is ordered
+by ``(turn_idx, ts NULLS FIRST)``: the lost copy sits before the known
+one, so it interpolates toward it, whatever the input layout or
+partition count.
+
 Implementation is pure JVM window functions — no UDF, whole-stage
 codegen end to end; the only shuffle is the per-``conv_id`` exchange,
 which the downstream rollup's ``groupBy(conv_id, bucket)`` reuses
 (HashPartitioning(conv_id) satisfies the clustered distribution), so
-gap-fill + rollup is a single-shuffle plan at any scale.
+gap-fill + rollup is a single-shuffle plan at any scale.  Both lookups
+share ONE ordering, so the plan has one Sort and one Window:
+
+- "prev known" is ``last(..) IGNORE NULLS`` over the growing frame
+  (unbounded preceding → current row), which Spark evaluates
+  incrementally in O(n);
+- "next known" is ``lead(.., 1) IGNORE NULLS``, which walks forward
+  once per partition, also O(n).
+
+The tempting ``first(..) IGNORE NULLS`` over an unbounded-FOLLOWING
+frame re-aggregates the frame per row — O(n²) on a hot conversation.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
+
+_W = "PARTITION BY conv_id ORDER BY turn_idx, ts NULLS FIRST"
+_KNOWN = (
+    "CASE WHEN ts IS NOT NULL"
+    " THEN named_struct('i', turn_idx, 'us', unix_micros(ts)) END"
+)
+# interior: exact int64 interp with `div` (both operands positive, so
+# Spark's truncating div == DuckDB's `//`); edges: clamp to nearest.
+_INTERP_US = (
+    "CASE WHEN _prev.us IS NOT NULL AND _next.us IS NOT NULL"
+    " AND _next.i != _prev.i"
+    " THEN _prev.us + ((_next.us - _prev.us)"
+    " * (CAST(turn_idx AS BIGINT) - _prev.i)) div (_next.i - _prev.i)"
+    " ELSE coalesce(_prev.us, _next.us) END"
+)
 
 
 def gapfill_ts(df: DataFrame) -> DataFrame:
     """Add ``ts_filled`` (timestamp, never null if the conv has ≥1 known
     ts) and ``gapfilled`` (boolean) to a transcript DataFrame."""
-    # Both lookups use GROWING frames (unboundedPreceding → current row),
-    # which Spark evaluates incrementally in O(n); the tempting
-    # first(ignorenulls) over an unbounded-FOLLOWING frame re-aggregates
-    # the frame per row — O(n²) on a hot conversation — so "next known"
-    # is a last() over the reverse ordering instead.
-    w_fwd = Window.partitionBy("conv_id").orderBy("turn_idx").rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    w_bwd = Window.partitionBy("conv_id").orderBy(F.col("turn_idx").desc()).rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    known = F.when(
-        F.col("ts").isNotNull(),
-        F.struct(F.col("turn_idx").alias("i"), F.unix_micros("ts").alias("us")),
-    )
-    prev = F.last(known, ignorenulls=True).over(w_fwd)
-    nxt = F.last(known, ignorenulls=True).over(w_bwd)
-    out = (
-        df.withColumn("_prev_i", prev["i"])
-        .withColumn("_prev_us", prev["us"])
-        .withColumn("_next_i", nxt["i"])
-        .withColumn("_next_us", nxt["us"])
-    )
-    # interior: exact int64 interp with `div` (both operands positive, so
-    # Spark's truncating div == DuckDB's `//`); edges: clamp to nearest.
-    interp_us = F.when(
-        F.col("_prev_us").isNotNull()
-        & F.col("_next_us").isNotNull()
-        & (F.col("_next_i") != F.col("_prev_i")),
-        F.expr(
-            "_prev_us + ((_next_us - _prev_us) * (cast(turn_idx as bigint) - _prev_i))"
-            " div (_next_i - _prev_i)"
-        ),
-    ).otherwise(F.coalesce(F.col("_prev_us"), F.col("_next_us")))
     return (
-        out.withColumn(
-            "ts_filled",
-            F.when(F.col("ts").isNotNull(), F.col("ts")).otherwise(
-                F.timestamp_micros(interp_us)
-            ),
+        df.selectExpr(
+            "*",
+            f"last({_KNOWN}) IGNORE NULLS OVER ({_W}"
+            " ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS _prev",
+            f"lead({_KNOWN}, 1) IGNORE NULLS OVER ({_W}) AS _next",
         )
-        .withColumn("gapfilled", F.col("ts").isNull() & F.col("ts_filled").isNotNull())
-        .drop("_prev_i", "_prev_us", "_next_i", "_next_us")
+        .selectExpr(
+            "*",
+            f"coalesce(ts, timestamp_micros({_INTERP_US})) AS ts_filled",
+            "ts IS NULL AND coalesce(_prev.us, _next.us) IS NOT NULL AS gapfilled",
+        )
+        .drop("_prev", "_next")
     )
 
 

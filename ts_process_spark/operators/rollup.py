@@ -35,28 +35,30 @@ Execution shape (what survives a 1000-executor, 10^12-turn run):
 - Skew: bucket grain bounds group size at raw→1m (a hot conversation
   spreads over its minutes).  For the coarser tiers the group is
   (conv, hour|day) of *1m rows* (≤60/24 children), inherently bounded.
-- All aggregates are JVM/codegen (`F.sum/max/min/xxhash64`); the only
-  Arrow UDFs are the per-bucket blob ENCODERS at the 1m tier (scalar
-  pandas_udfs over pre-grouped arrays, vectorized NumPy inside, zero
-  per-row Python).  The coarser tiers are pure JVM end to end: the
-  container concat is built by expression (_concat_blobs_expr) — r9
-  measured the Python eval node itself at ~40% of the 1h/1d tier jobs.
+- All aggregates are JVM/codegen; the only Python is the pair of Arrow
+  UDFs that ENCODE the 1m blobs (``codecs.encode_arrow``: list offsets
+  and flattened values in, one binary buffer out — no per-bucket Python
+  object either way).  The coarser tiers are pure JVM end to end: each
+  child row's container parts (length-table bytes, body bytes) are
+  projected before the exchange and joined in bucket order by
+  ``listagg(.., X'') WITHIN GROUP (ORDER BY bucket_ts)`` — no lambda
+  functions, no Python.
+- Every tier is built from a few SQL strings (``selectExpr`` /
+  ``F.expr``): a Column-API call costs ~13 py4j round trips, all paid
+  before any job starts (tests/test_plans.py caps the three tiers).
 """
 
 from __future__ import annotations
 
-
-import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ts_process_spark.functions.codecs import encode_dod_batch, encode_gorilla_batch
+from ts_process_spark.functions.codecs import encode_arrow
 from ts_process_spark.operators.gapfill import gapfill_ts
 
 TIERS = {"1m": "minute", "1h": "hour", "1d": "day"}
-_SEP = "\x1f"
 
 TIER_SCHEMA = T.StructType(
     [
@@ -79,127 +81,44 @@ TIER_SCHEMA = T.StructType(
 )
 
 
-@F.pandas_udf(T.BinaryType())
-def _encode_dod_udf(ts_arrays: pd.Series) -> pd.Series:
-    # whole-Arrow-batch encode: one vectorized pass over every bucket in
-    # the batch (per-blob Python overhead was the cascade's hottest cost)
-    lengths = np.fromiter((len(a) for a in ts_arrays), dtype=np.int64,
-                          count=len(ts_arrays))
-    concat = (
-        np.concatenate([np.asarray(a, dtype=np.int64) for a in ts_arrays])
-        if lengths.sum()
-        else np.array([], dtype=np.int64)
-    )
-    return pd.Series(encode_dod_batch(concat, lengths), index=ts_arrays.index)
+@F.arrow_udf(T.BinaryType())
+def _encode_dod_udf(ts_lists: pa.Array) -> pa.Array:
+    return encode_arrow(ts_lists, "dod")
 
 
-@F.pandas_udf(T.BinaryType())
-def _encode_gorilla_udf(val_arrays: pd.Series) -> pd.Series:
-    lengths = np.fromiter((len(a) for a in val_arrays), dtype=np.int64,
-                          count=len(val_arrays))
-    concat = (
-        np.concatenate([np.asarray(a, dtype=np.float64) for a in val_arrays])
-        if lengths.sum()
-        else np.array([], dtype=np.float64)
-    )
-    return pd.Series(encode_gorilla_batch(concat, lengths), index=val_arrays.index)
+@F.arrow_udf(T.BinaryType())
+def _encode_gorilla_udf(val_lists: pa.Array) -> pa.Array:
+    return encode_arrow(val_lists, "gorilla")
 
 
-_SENTINEL_LE = b"\xff\xff\xff\xff"  # struct.pack('<I', codecs._CHUNK_SENTINEL)
-
-
-def _le4(x, checked: bool = True) -> F.Column:
-    """Little-endian uint32 bytes of a non-negative int column —
-    byte-identical to ``struct.pack('<I', x)`` for 0 <= x < 2^31 (all
-    chunk counts/lengths here).  hex() of the int, zero-padded to 8
+def _le4(x: str) -> str:
+    """SQL text: the little-endian uint32 bytes of the integer expression
+    ``x`` — byte-identical to ``struct.pack('<I', x)`` for 0 <= x < 2^31
+    (all chunk counts/lengths here).  hex() of the int, zero-padded to 8
     nibbles, decoded big-endian, then byte-reversed — every step a
-    codegen built-in (guide §4.1), no Python.
+    codegen built-in, no Python.
 
-    Out of that range the padding would truncate to wrong bytes, so a
-    ``checked`` column fails the row with ``raise_error`` instead,
-    whatever the session's ANSI setting.  ``checked=False`` is for blob
-    lengths only: ``F.length`` of a binary is an int below 2^31 by type,
-    and the test would run interpreted per child row inside
-    collect_list's struct."""
-    be = F.to_binary(F.lpad(F.hex(x), 8, "0"), F.lit("hex"))
-    le = F.concat(*[F.substring(be, i, 1) for i in (4, 3, 2, 1)])
-    if not checked:
-        return le
-    return F.when(F.shiftright(x, 31) == 0, le).otherwise(F.raise_error(F.concat(
-        F.lit("blob container length or chunk count out of u32 range: "),
-        x.cast("string"),
-    )))
-
-
-def _concat_blobs_expr(children, field: str, container: bool) -> F.Column:
-    """JVM twin of ``codecs.concat_blobs`` over the cascade's collected
-    child array — emits the identical ``[0xFFFFFFFF:u32][n_chunks:u32]
-    [len_i:u32]*[chunk bytes]`` container, flattening child containers
-    exactly as the Python form does, without the blob bytes (or any
-    per-row work) ever crossing the JVM↔Python boundary.
-
-    ``children``: array<struct> in bucket order carrying ``field`` (the
-    blob) and ``n`` (the child's leaf-chunk count).  ``container`` is
-    the tier-structural fact concat_blobs discovers per blob from the
-    sentinel: a cascade child (has ``blob_n_chunks``) is ALWAYS a
-    container, a 1m child NEVER is (leaf blobs start with the bucket's
-    point count, which cannot be 0xFFFFFFFF).  For containers the
-    merged header's length table is the byte-level concatenation of the
-    children's length tables (substring(blob, 9, 4n) — no u32 decode
-    needed) and the body is the children's bodies (substring past the
-    8+4n header); for leaves it is the map-side-precomputed ``ltb`` /
-    ``lvb`` length bytes (see the collect_list struct) and the blob
-    itself.  Byte-parity with the Python form is pinned in
-    tests/test_rollup.py for both shapes plus the empty-array edge
-    (max_blob_bytes can empty ``kept``: header with zero chunks)."""
-    bcat = lambda arr: F.aggregate(  # noqa: E731
-        arr, F.lit(b""), lambda acc, x: F.concat(acc, x)
-    )
-    if container:
-        total_n = F.aggregate(
-            children, F.lit(0).cast("long"), lambda acc, c: acc + c["n"]
-        )
-        lens = bcat(
-            F.transform(
-                children,
-                lambda c: F.substring(
-                    c[field], F.lit(9), (c["n"] * 4).cast("int")
-                ),
-            )
-        )
-        body = bcat(
-            F.transform(
-                children,
-                lambda c: F.substring(
-                    c[field],
-                    (c["n"] * 4 + 9).cast("int"),
-                    F.length(c[field]),
-                ),
-            )
-        )
-    else:
-        # one chunk per leaf child; its 4 length bytes were precomputed
-        # map-side into the struct (see the collect_list above)
-        total_n = F.size(children).cast("long")
-        lens = bcat(
-            F.transform(children, lambda c: c["ltb" if field == "tb" else "lvb"])
-        )
-        body = bcat(F.transform(children, lambda c: c[field]))
-    return F.concat(
-        F.lit(_SENTINEL_LE), _le4(total_n), lens, body
+    Out of that range the padding would truncate to wrong bytes, so the
+    row fails with ``raise_error`` instead, whatever the session's ANSI
+    setting.  ``x`` is spelled out five times: pass a column or a cheap
+    expression."""
+    be = f"unhex(lpad(hex({x}), 8, '0'))"
+    le = ", ".join(f"substring({be}, {i}, 1)" for i in (4, 3, 2, 1))
+    return (
+        f"CASE WHEN shiftright({x}, 31) = 0 THEN concat({le})"
+        " ELSE raise_error(concat('blob container length or chunk count"
+        f" out of u32 range: ', CAST({x} AS STRING))) END"
     )
 
 
-def _hash_fn(hash_name: str):
+def _hash_sql(hash_name: str) -> str:
     """Engine hash for per-turn text surrogates and tier chain-hashes.
     ``xxhash64`` (long) is the production default; ``md5`` (hex string)
     produces the same lattice with a hash DuckDB can replicate, making
     the whole cascade oracle-checkable (see queries_ts.cascade_*)."""
-    if hash_name == "xxhash64":
-        return F.xxhash64
-    if hash_name == "md5":
-        return F.md5
-    raise ValueError(f"unknown hash {hash_name!r}")
+    if hash_name not in ("xxhash64", "md5"):
+        raise ValueError(f"unknown hash {hash_name!r}")
+    return hash_name
 
 
 def rollup_raw_to_1m(raw: DataFrame, hash_name: str = "xxhash64") -> DataFrame:
@@ -214,67 +133,64 @@ def rollup_raw_to_1m(raw: DataFrame, hash_name: str = "xxhash64") -> DataFrame:
     the raw-grain per-turn text equality check stays at raw grain,
     tests/test_rollup.py::test_generator_matches_oracle_frame).
     """
-    hfn = _hash_fn(hash_name)
+    h = _hash_sql(hash_name)
     # NULL text normalizes to '' AT THE OPERATOR (not just in callers):
     # otherwise the turn stays in n_turns but drops out of sum/peak,
     # sum_text_len can go NULL against the non-null tier schema, and a
     # None text_len reaches the Gorilla blob as NaN (review finding)
-    text = F.coalesce(F.col("text"), F.lit(""))
-    slim = raw.select(
+    slim = raw.selectExpr(
         "conv_id",
         "turn_idx",
         "ts",
-        F.length(text).cast("long").alias("text_len"),
-        hfn(text).alias("th"),
+        "CAST(length(coalesce(text, '')) AS BIGINT) AS text_len",
+        f"{h}(coalesce(text, '')) AS th",
     )
-    filled = gapfill_ts(slim).where(F.col("ts_filled").isNotNull())
-    pts = filled.select(
+    pts = gapfill_ts(slim).where("ts_filled IS NOT NULL").selectExpr(
         "conv_id",
-        F.col("turn_idx").cast("long").alias("turn_idx"),
-        F.date_trunc("minute", "ts_filled").alias("bucket_ts"),
-        F.unix_micros("ts_filled").alias("ts_us"),
-        F.col("gapfilled").cast("long").alias("gf"),
+        "CAST(turn_idx AS BIGINT) AS turn_idx",
+        "date_trunc('minute', ts_filled) AS bucket_ts",
+        "unix_micros(ts_filled) AS ts_us",
+        "CAST(gapfilled AS BIGINT) AS gf",
         "text_len",
         "th",
     )
     # one hash-aggregate; collect_list + array_sort pins the in-bucket
     # order to turn_idx so hashes and blobs are partition-count-invariant
     grouped = pts.groupBy("conv_id", "bucket_ts").agg(
-        F.count(F.lit(1)).alias("n_turns"),
-        F.sum("gf").alias("n_gapfilled"),
-        F.sum("text_len").alias("sum_text_len"),
-        F.max("text_len").alias("peak_text_len"),
-        F.min("turn_idx").cast("int").alias("first_turn_idx"),
-        F.max("turn_idx").cast("int").alias("last_turn_idx"),
-        F.min("ts_us").alias("first_us"),
-        F.max("ts_us").alias("last_us"),
-        F.array_sort(
-            F.collect_list(F.struct("turn_idx", "ts_us", "text_len", "th"))
-        ).alias("pts"),
+        F.expr("count(1) AS n_turns"),
+        F.expr("sum(gf) AS n_gapfilled"),
+        F.expr("sum(text_len) AS sum_text_len"),
+        F.expr("max(text_len) AS peak_text_len"),
+        F.expr("CAST(min(turn_idx) AS INT) AS first_turn_idx"),
+        F.expr("CAST(max(turn_idx) AS INT) AS last_turn_idx"),
+        F.expr("min(ts_us) AS first_us"),
+        F.expr("max(ts_us) AS last_us"),
+        F.expr("array_sort(collect_list(struct(turn_idx, ts_us, text_len, th))) AS pts"),
     )
-    return grouped.select(
+    return grouped.selectExpr(
         "conv_id",
         "bucket_ts",
         "n_turns",
         "n_gapfilled",
         "sum_text_len",
         "peak_text_len",
-        (F.col("sum_text_len") / F.col("n_turns")).alias("mean_text_len"),
+        "sum_text_len / n_turns AS mean_text_len",
         "first_turn_idx",
         "last_turn_idx",
-        F.timestamp_micros("first_us").alias("first_ts"),
-        F.timestamp_micros("last_us").alias("last_ts"),
-        F.when(
-            F.col("n_turns") > 1,
-            (F.col("last_us") - F.col("first_us")) / 1e6 / (F.col("n_turns") - 1),
-        ).alias("mean_gap_s"),
-        hfn(
-            F.concat_ws(_SEP, F.transform("pts", lambda p: p["th"].cast("string")))
-        ).alias("text_hash"),
-        _encode_dod_udf(F.transform("pts", lambda p: p["ts_us"])).alias("ts_blob"),
-        _encode_gorilla_udf(
-            F.transform("pts", lambda p: p["text_len"].cast("double"))
-        ).alias("val_blob"),
+        "timestamp_micros(first_us) AS first_ts",
+        "timestamp_micros(last_us) AS last_ts",
+        "CASE WHEN n_turns > 1"
+        " THEN (last_us - first_us) / 1e6 / (n_turns - 1) END AS mean_gap_s",
+        f"{h}(concat_ws(char(31), CAST(pts.th AS ARRAY<STRING>))) AS text_hash",
+        # the blob columns hold the point lists until the encoders
+        # below replace them in place
+        "pts.ts_us AS ts_blob",
+        "CAST(pts.text_len AS ARRAY<DOUBLE>) AS val_blob",
+    ).withColumns(
+        {
+            "ts_blob": _encode_dod_udf("ts_blob"),
+            "val_blob": _encode_gorilla_udf("val_blob"),
+        }
     )
 
 
@@ -286,13 +202,25 @@ def rollup_cascade(
 ) -> DataFrame:
     """Aggregate a finer tier (1m→1h or 1h→1d). ``tier`` ∈ {'1h','1d'}.
 
+    Containers: a parent blob is ``[0xFFFFFFFF][n_chunks:u32][len_i:u32
+    ...][chunks...]`` with child containers flattened, byte-identical to
+    ``codecs.concat_blobs`` of the children in bucket order.  Each child
+    row contributes two parts, projected before the exchange: its length
+    bytes and its body.  A 1m child (no ``blob_n_chunks``) is one leaf
+    chunk: its length entry is ``_le4(length(blob))`` and its body the
+    blob.  A cascade child is a container: its length table and body are
+    byte slices of the blob past the 8-byte header.  The aggregate joins
+    each kind of part in bucket order with ``listagg``.
+
     ``max_blob_bytes`` bounds the pathological hot-conversation row: a
     conv whose day concatenates gigabytes of child blobs would otherwise
     make one giant row.  When set, child blob chunks are kept in bucket
-    order until the byte budget is reached and the drop is SURFACED as a
-    ``blob_chunks_dropped`` column (the no-silent-caps rule — aggregates
-    stay exact either way; only replay payload is truncated).  Default
-    None = lossless.
+    order until the byte budget is reached (a running-sum window over
+    the children of each parent bucket nulls the later parts, which
+    ``listagg`` skips; keeping none still yields a zero-chunk header) and
+    the drop is SURFACED as a ``blob_chunks_dropped`` column (the
+    no-silent-caps rule — aggregates stay exact either way; only replay
+    payload is truncated).  Default None = lossless.
 
     Drop accounting is in LEAF (1m-chunk) units at every tier (ADVICE
     r4: summing "own drops" in immediate-child units with propagated
@@ -301,136 +229,112 @@ def rollup_cascade(
     chunks inside its blob (a 1m child without the column counts 1), a
     dropped child is weighted by ITS leaf count, and the propagated
     child counters are already leaf-unit by induction."""
-    hfn = _hash_fn(hash_name)
-    trunc = TIERS[tier]
-    has_child_chunks = "blob_n_chunks" in child.columns
-    child_n = (
-        F.col("blob_n_chunks")
-        if has_child_chunks
-        else F.lit(1).cast("long")
-    )
-    grouped = child.groupBy(
-        "conv_id", F.date_trunc(trunc, "bucket_ts").alias("bucket_ts")
-    ).agg(
-        F.sum("n_turns").alias("n_turns"),
-        F.sum("n_gapfilled").alias("n_gapfilled"),
-        F.sum("sum_text_len").alias("sum_text_len"),
-        F.max("peak_text_len").alias("peak_text_len"),
-        F.min("first_turn_idx").alias("first_turn_idx"),
-        F.max("last_turn_idx").alias("last_turn_idx"),
-        F.min("first_ts").alias("first_ts"),
-        F.max("last_ts").alias("last_ts"),
-        F.array_sort(
-            F.collect_list(
-                F.struct(
-                    F.col("bucket_ts").alias("b"),
-                    F.col("text_hash").alias("h"),
-                    F.col("ts_blob").alias("tb"),
-                    F.col("val_blob").alias("vb"),
-                    child_n.alias("n"),
-                    # leaf children: the container header's per-chunk
-                    # length entries, precomputed HERE — a plain codegen
-                    # projection per input row, map-side before the
-                    # exchange — because the same le4() inside an
-                    # interpreted post-aggregation HOF costs ~10µs per
-                    # element (measured: it alone matched the whole
-                    # Python-boundary cost it was meant to remove).
-                    # +8 bytes/child through the shuffle (§2.3: shuffle
-                    # metadata, not payloads).  Container children copy
-                    # their length tables by byte-slicing instead.
-                    # Appended LAST so array_sort ordering is untouched
-                    # (and both are functions of tb/vb anyway).
-                    *(
-                        []
-                        if has_child_chunks
-                        else [
-                            _le4(F.length("ts_blob"), checked=False).alias("ltb"),
-                            _le4(F.length("val_blob"), checked=False).alias("lvb"),
-                        ]
-                    ),
-                )
-            )
-        ).alias("children"),
-        *(
-            [F.sum("blob_chunks_dropped").alias("_child_dropped")]
-            if "blob_chunks_dropped" in child.columns
-            else []
-        ),
-    )
-    children = F.col("children")
-    leaf_sum = lambda arr: F.aggregate(  # noqa: E731
-        arr, F.lit(0).cast("long"), lambda acc, c: acc + c["n"]
-    )
-    if max_blob_bytes is not None:
-        # keep chunks in bucket order while the cumulative (tb+vb) size
-        # fits the budget; per-group children count is bounded (≤60/24),
-        # so the prefix-sum-via-slice is cheap
-        lens = F.transform(children, lambda c: F.length(c["tb"]) + F.length(c["vb"]))
-        kept = F.filter(
-            children,
-            lambda c, i: F.aggregate(
-                F.slice(lens, F.lit(1), i + 1),
-                F.lit(0).cast("long"),
-                lambda acc, x: acc + x,
-            )
-            <= F.lit(max_blob_bytes),
-        )
-        own_dropped = leaf_sum(children) - leaf_sum(kept)  # leaf units
-        blob_src = kept
+    h = _hash_sql(hash_name)
+    parent = f"date_trunc('{TIERS[tier]}', bucket_ts)"
+    child_cols = set(child.columns)
+    has_child_drops = "blob_chunks_dropped" in child_cols
+    if "blob_n_chunks" in child_cols:
+        # a cascade child's blob is a container: byte slices past its
+        # 8-byte header are its length table and its body
+        n = "blob_n_chunks"
+        parts = {
+            "ts_lens": "substring(ts_blob, 9, CAST(blob_n_chunks * 4 AS INT))",
+            "ts_body": "substring(ts_blob, CAST(blob_n_chunks * 4 + 9 AS INT))",
+            "val_lens": "substring(val_blob, 9, CAST(blob_n_chunks * 4 AS INT))",
+            "val_body": "substring(val_blob, CAST(blob_n_chunks * 4 + 9 AS INT))",
+        }
     else:
-        own_dropped = None
-        blob_src = children
-    # no-silent-caps, transitively: a capped child tier's drop counter
-    # (already leaf-unit) survives further cascading
-    has_child_drops = "blob_chunks_dropped" in child.columns
-    if own_dropped is not None or has_child_drops:
-        parts = []
-        if own_dropped is not None:
-            parts.append(own_dropped)
-        if has_child_drops:
-            parts.append(
-                F.coalesce(F.col("_child_dropped"), F.lit(0).cast("long"))
-            )
-        total = parts[0]
-        for x in parts[1:]:
-            total = total + x
-        dropped = [total.alias("blob_chunks_dropped")]
-    else:
-        dropped = []
-    return grouped.select(
+        # a 1m child's blob is one leaf chunk
+        n = "CAST(1 AS BIGINT)"
+        parts = {
+            "ts_lens": _le4("length(ts_blob)"),
+            "ts_body": "ts_blob",
+            "val_lens": _le4("length(val_blob)"),
+            "val_body": "val_blob",
+        }
+    keep = (
+        "true"
+        if max_blob_bytes is None
+        else "sum(length(ts_blob) + length(val_blob)) OVER (PARTITION BY"
+        f" conv_id, {parent} ORDER BY bucket_ts ROWS UNBOUNDED PRECEDING)"
+        f" <= {int(max_blob_bytes)}"
+    )
+    rows = child.selectExpr(
         "conv_id",
+        f"{parent} AS parent_ts",
         "bucket_ts",
         "n_turns",
         "n_gapfilled",
         "sum_text_len",
         "peak_text_len",
-        (F.col("sum_text_len") / F.col("n_turns")).alias("mean_text_len"),
         "first_turn_idx",
         "last_turn_idx",
         "first_ts",
         "last_ts",
-        F.when(
-            F.col("n_turns") > 1,
-            (F.unix_micros("last_ts") - F.unix_micros("first_ts"))
-            / 1e6
-            / (F.col("n_turns") - 1),
-        ).alias("mean_gap_s"),
-        hfn(
-            F.concat_ws(
-                _SEP, F.transform("children", lambda c: c["h"].cast("string"))
-            )
-        ).alias("text_hash"),
-        # r9: JVM container build (see _concat_blobs_expr) — a child
-        # with blob_n_chunks is a cascade output, i.e. every blob is a
-        # container to flatten; a 1m child's blobs are all leaves
-        _concat_blobs_expr(blob_src, "tb", container=has_child_chunks).alias(
-            "ts_blob"
+        "text_hash",
+        f"{n} AS n",
+        *(["blob_chunks_dropped"] if has_child_drops else []),
+        f"{keep} AS keep",
+        *(f"{e} AS {k}" for k, e in parts.items()),
+    )
+    # uncapped, keep is the literal true and these CASEs fold away
+    rows = rows.selectExpr(
+        "*",
+        "CASE WHEN keep THEN n ELSE 0 END AS n_kept",
+        *(f"CASE WHEN keep THEN {k} END AS {k}_kept" for k in parts),
+    )
+    # no-silent-caps, transitively: a capped child tier's drop counter
+    # (already leaf-unit) survives further cascading
+    dropped = ([] if max_blob_bytes is None else ["sum(n - n_kept)"]) + (
+        ["coalesce(sum(blob_chunks_dropped), 0)"] if has_child_drops else []
+    )
+    in_order = "WITHIN GROUP (ORDER BY bucket_ts)"
+    grouped = rows.groupBy("conv_id", "parent_ts").agg(
+        F.expr("sum(n_turns) AS n_turns"),
+        F.expr("sum(n_gapfilled) AS n_gapfilled"),
+        F.expr("sum(sum_text_len) AS sum_text_len"),
+        F.expr("max(peak_text_len) AS peak_text_len"),
+        F.expr("min(first_turn_idx) AS first_turn_idx"),
+        F.expr("max(last_turn_idx) AS last_turn_idx"),
+        F.expr("min(first_ts) AS first_ts"),
+        F.expr("max(last_ts) AS last_ts"),
+        F.expr(
+            f"{h}(listagg(CAST(text_hash AS STRING), char(31)) {in_order})"
+            " AS text_hash"
         ),
-        _concat_blobs_expr(blob_src, "vb", container=has_child_chunks).alias(
-            "val_blob"
+        *(
+            F.expr(f"coalesce(listagg({k}_kept, X'') {in_order}, X'') AS {k}")
+            for k in parts
         ),
-        leaf_sum(blob_src).alias("blob_n_chunks"),
-        *dropped,
+        F.expr("sum(n_kept) AS blob_n_chunks"),
+        *(
+            [F.expr(" + ".join(dropped) + " AS blob_chunks_dropped")]
+            if dropped
+            else []
+        ),
+    )
+    return grouped.selectExpr(
+        "conv_id",
+        "parent_ts AS bucket_ts",
+        "n_turns",
+        "n_gapfilled",
+        "sum_text_len",
+        "peak_text_len",
+        "sum_text_len / n_turns AS mean_text_len",
+        "first_turn_idx",
+        "last_turn_idx",
+        "first_ts",
+        "last_ts",
+        "CASE WHEN n_turns > 1 THEN (unix_micros(last_ts) - unix_micros(first_ts))"
+        " / 1e6 / (n_turns - 1) END AS mean_gap_s",
+        "text_hash",
+        *(
+            f"concat(X'FFFFFFFF', {_le4('blob_n_chunks')}, {b}_lens, {b}_body)"
+            f" AS {b}_blob"
+            for b in ("ts", "val")
+        ),
+        "blob_n_chunks",
+        *(["blob_chunks_dropped"] if dropped else []),
     )
 
 

@@ -229,32 +229,27 @@ def q_gapfill_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Linear-interp gap fill (ts_library.py:896-962 linear mode /
     rotd50.f:284-305 InterpTime): null out value on every 50th event,
     reconstruct between prev/next known per user in (ts, event_id) order."""
-    ev = _events(spark, sf_dir).withColumn(
-        "v", F.when(F.col("event_id") % 50 != 0, F.col("value"))
+    # one (ts, event_id) ordering for rn and both lookups: one Sort;
+    # "next known" is lead(.., 1) IGNORE NULLS, O(n) like the growing
+    # frame (see operators/gapfill.py)
+    w = "PARTITION BY user_id ORDER BY ts, event_id"
+    known = "CASE WHEN v IS NOT NULL THEN named_struct('rn', rn, 'v', v) END"
+    ev = (
+        _events(spark, sf_dir)
+        .selectExpr("*", "CASE WHEN event_id % 50 != 0 THEN value END AS v")
+        .selectExpr("*", f"row_number() OVER ({w}) AS rn")
+        .selectExpr(
+            "*",
+            f"last({known}) IGNORE NULLS OVER ({w}"
+            " ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS prev",
+            f"lead({known}, 1) IGNORE NULLS OVER ({w}) AS nxt",
+        )
     )
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    rn = F.row_number().over(w)
-    ev = ev.withColumn("rn", rn)
-    known = F.when(F.col("v").isNotNull(), F.struct("rn", "v"))
-    # growing frames in both directions — O(n), see operators/gapfill.py
-    prev = F.last(known, ignorenulls=True).over(
-        Window.partitionBy("user_id")
-        .orderBy("rn")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    nxt = F.last(known, ignorenulls=True).over(
-        Window.partitionBy("user_id")
-        .orderBy(F.col("rn").desc())
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    filled = F.when(F.col("v").isNotNull(), F.col("v")).otherwise(
-        F.when(
-            prev.isNotNull() & nxt.isNotNull(),
-            prev["v"]
-            + (nxt["v"] - prev["v"])
-            * (F.col("rn") - prev["rn"])
-            / (nxt["rn"] - prev["rn"]),
-        ).otherwise(F.coalesce(prev["v"], nxt["v"]))
+    filled = F.expr(
+        "CASE WHEN v IS NOT NULL THEN v"
+        " WHEN prev IS NOT NULL AND nxt IS NOT NULL"
+        " THEN prev.v + (nxt.v - prev.v) * (rn - prev.rn) / (nxt.rn - prev.rn)"
+        " ELSE coalesce(prev.v, nxt.v) END"
     )
     return ev.select(
         "event_id",
@@ -1150,9 +1145,9 @@ WITH raw AS (
             OVER w_b AS next_us
     FROM raw
     WINDOW
-        w_f AS (PARTITION BY conv_id ORDER BY turn_idx
+        w_f AS (PARTITION BY conv_id ORDER BY turn_idx, us NULLS FIRST
                 ROWS UNBOUNDED PRECEDING),
-        w_b AS (PARTITION BY conv_id ORDER BY turn_idx
+        w_b AS (PARTITION BY conv_id ORDER BY turn_idx, us NULLS FIRST
                 ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING)
 ), filled AS (
     SELECT conv_id, turn_idx, text_len, th,
