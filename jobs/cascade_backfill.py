@@ -12,12 +12,15 @@ cluster sizes.  Package and run:
         --root   <output tables root> \\
         --buckets 64
 
-Re-running with the same --root resumes: (tier, bucket) units already in
-the lineage log are skipped; a unit whose data was written but whose
-lineage commit did not land is redone idempotently (overwrite).
+Each tier (1m, 1h, 1d) is one partitioned write over its pending
+buckets, followed by one lineage append.  Re-running with the same
+--root resumes: (tier, bucket) units already in the lineage log are
+skipped; a unit whose data was written but whose lineage commit did not
+land is redone idempotently (dynamic partition overwrite, which leaves
+committed buckets untouched).
 
-The session comes from spark-submit (no master/parallelism hardcoded
-here); only shuffle partitioning is derived from the cluster it lands on.
+The session comes from spark-submit: no master, parallelism or shuffle
+partition count is hardcoded here (AQE sizes the shuffles at run time).
 """
 
 from __future__ import annotations
@@ -35,25 +38,15 @@ def main() -> None:
                          "for the seeded generator")
     ap.add_argument("--root", required=True, help="tier-table output root")
     ap.add_argument("--buckets", type=int, default=64,
-                    help="conv_id hash buckets = resume/commit granularity; "
-                         "a resume must reuse the root's value (any other "
-                         "is refused)")
+                    help="conv_id hash buckets = resume granularity and "
+                         "output partitions per tier; a resume must reuse "
+                         "the root's value (any other is refused)")
     ap.add_argument("--seed", type=int, default=42)
-    ap.add_argument("--parallelism", type=int, default=4,
-                    help="concurrent bucket chains (1 = serial); the "
-                         "commit protocol is per unit, so resume "
-                         "semantics are identical at any setting")
     args = ap.parse_args()
 
     from pyspark.sql import SparkSession
 
-    spark = (
-        SparkSession.builder.appName("ts-cascade-backfill")
-        # FAIR mode so the per-bucket scheduler pools actually isolate
-        # straggler chains (pool names are inert under FIFO)
-        .config("spark.scheduler.mode", "FAIR")
-        .getOrCreate()
-    )
+    spark = SparkSession.builder.appName("ts-cascade-backfill").getOrCreate()
     spark.conf.set("spark.sql.session.timeZone", "UTC")
 
     from ts_process_spark.plans.backfill import TableSet, backfill, verify_lineage
@@ -69,8 +62,7 @@ def main() -> None:
     tables = TableSet(args.root)
     earlier_runs = {r["run_id"] for r in tables.read_lineage()}
     t0 = time.time()
-    result = backfill(spark, raw, tables, n_buckets=args.buckets,
-                      parallelism=args.parallelism)
+    result = backfill(spark, raw, tables, n_buckets=args.buckets)
     wall = time.time() - t0
     problems = verify_lineage(spark, tables)
     # count only this run's commits: on resume, turns that earlier runs

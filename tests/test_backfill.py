@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 
 import pandas as pd
 import pytest
@@ -17,6 +18,7 @@ from ts_process_spark.plans.backfill import (
     TIER_ORDER,
     TableSet,
     backfill,
+    count_and_hash,
     verify_lineage,
     with_bucket,
 )
@@ -34,6 +36,18 @@ def raw(spark, tmp_path_factory):
     return spark.read.parquet(path)
 
 
+@pytest.fixture(scope="module")
+def direct(spark, raw, tmp_path_factory):
+    """The single-job cascade's tiers, written once: the reference the
+    bucketed backfill is checked against."""
+    root = tmp_path_factory.mktemp("direct")
+    out = {}
+    for tier, df in full_cascade(raw).items():
+        df.write.parquet(str(root / tier))
+        out[tier] = spark.read.parquet(str(root / tier))
+    return out
+
+
 def _tier_frame(df):
     return (
         df.select(
@@ -45,20 +59,35 @@ def _tier_frame(df):
     )
 
 
-def test_backfill_crash_and_resume(spark, raw, tmp_path):
+def test_backfill_crash_and_resume(spark, raw, direct, tmp_path):
     tables = TableSet(str(tmp_path / "t"))
-    # crash after 5 units, after the 5th data write but before its lineage
+    # crash at the 5th unit: the 1h tier's write holds it, so the 4 units
+    # of the 1m tier are committed and the 1h tier is written but not
     r1 = backfill(spark, raw, tables, n_buckets=N_BUCKETS, fail_after=5)
     assert r1.get("crashed")
     assert r1["committed"] == 4
     assert len(tables.committed()) == 4
+    recs = tables.read_lineage()
+    assert [r["tier"] for r in recs] == ["1m"] * N_BUCKETS
 
-    # resume: must redo the uncommitted 5th unit, skip the 4 committed
+    # and a crash in the middle of the 1m tier's lineage append: only 2
+    # of its 4 records landed
+    with open(tables.lineage_path, "w") as f:
+        f.writelines(json.dumps(r) + "\n" for r in recs[:2])
+    kept = {r["bucket_id"] for r in recs[:2]}
+    kept_files = {b: _tree(tables.partition_dir("1m", b)) for b in kept}
+    assert all(kept_files.values())
+
+    # resume: must redo the 2 uncommitted 1m units and every 1h/1d unit,
+    # skip the 2 committed
     earlier_runs = {r["run_id"] for r in tables.read_lineage()}
     r2 = backfill(spark, raw, tables, n_buckets=N_BUCKETS)
-    assert r2["skipped"] == 4
-    assert r2["committed"] == 3 * N_BUCKETS - 4
+    assert r2["skipped"] == 2
+    assert r2["committed"] == 3 * N_BUCKETS - 2
     assert len(tables.committed()) == 3 * N_BUCKETS
+    # the dynamic overwrite left the committed partitions' files as
+    # they were
+    assert {b: _tree(tables.partition_dir("1m", b)) for b in kept} == kept_files
 
     # the resumed run's records carry one new run_id (what
     # jobs/cascade_backfill.py counts throughput by), and their 1m
@@ -68,15 +97,17 @@ def test_backfill_crash_and_resume(spark, raw, tmp_path):
     assert len({r["run_id"] for r in mine}) == 1
     mine_1m = {r["bucket_id"]: r["rows_in"] for r in mine if r["tier"] == "1m"}
     assert 0 < len(mine_1m) < N_BUCKETS
+    assert set(mine_1m) == set(range(N_BUCKETS)) - kept
     want = (
         with_bucket(raw, N_BUCKETS)
         .where(F.col("bucket_id").isin(list(mine_1m)))
         .count()
     )
     assert sum(mine_1m.values()) == want
+    raw_rows = dict(with_bucket(raw, N_BUCKETS).groupBy("bucket_id").count().collect())
+    assert mine_1m == {b: raw_rows[b] for b in mine_1m}
 
     # final tiers == direct full cascade (blobs and hashes included)
-    direct = full_cascade(raw)
     for tier in ("1m", "1h", "1d"):
         got = _tier_frame(tables.read_tier(spark, tier))
         exp = _tier_frame(direct[tier])
@@ -138,33 +169,45 @@ def test_lineage_detects_tamper(spark, raw, tmp_path):
     tables.read_tier(spark, "1d").limit(1).write.mode("overwrite").parquet(victim)
     problems = verify_lineage(spark, tables)
     assert any("1d/0" in p for p in problems)
+    # a committed partition whose directory is gone is reported, not a
+    # crash of the sweep
+    lost = next(r["bucket_id"] for r in tables.read_lineage()
+                if r["tier"] == "1m" and r["rows_out"])
+    shutil.rmtree(tables.partition_dir("1m", lost))
+    assert f"1m/{lost}: rowcount drift" in verify_lineage(spark, tables)
+    # so is a whole tier whose directory is gone
+    shutil.rmtree(tables.tier_dir("1h"))
+    want = {f"1h/{r['bucket_id']}: rowcount drift" for r in tables.read_lineage()
+            if r["tier"] == "1h" and r["rows_out"]}
+    assert want and want <= set(verify_lineage(spark, tables))
+    # and a resume that would read it as the input of a pending 1h
+    # bucket fails instead of committing that bucket empty
+    recs = tables.read_lineage()
+    with open(tables.lineage_path, "w") as f:
+        f.writelines(json.dumps(r) + "\n" for r in recs
+                     if r["tier"] == "1m" or r["bucket_id"] != lost)
+    with pytest.raises(FileNotFoundError, match="tier_1m"):
+        backfill(spark, raw, tables, n_buckets=2)
 
 
-def test_backfill_parallel_matches_serial(spark, raw, tmp_path):
-    """parallelism=4 must produce the SAME committed set and per-unit
-    value hashes as the serial run (bucket chains are independent; the
-    commit protocol is per unit), and resuming a parallel backfill must
-    skip everything."""
-    ser = TableSet(str(tmp_path / "ser"))
-    par = TableSet(str(tmp_path / "par"))
-    backfill(spark, raw, ser, n_buckets=N_BUCKETS)
-    r = backfill(spark, raw, par, n_buckets=N_BUCKETS, parallelism=4)
-    assert r["committed"] == 3 * N_BUCKETS
-
-    def key_hashes(t):
-        return {
-            (rec["tier"], rec["bucket_id"]): (rec["rows_out"], rec["value_hash"])
-            for rec in t.read_lineage()
-        }
-
-    assert key_hashes(par) == key_hashes(ser)
-    assert verify_lineage(spark, par) == []
-
-    r2 = backfill(spark, raw, par, n_buckets=N_BUCKETS, parallelism=4)
-    assert r2["skipped"] == 3 * N_BUCKETS and r2["committed"] == 0
-
-    with pytest.raises(ValueError):
-        backfill(spark, raw, par, n_buckets=N_BUCKETS, parallelism=2, fail_after=1)
+@pytest.mark.parametrize("n_buckets", [N_BUCKETS, N_CONVS + 4])
+def test_lineage_matches_direct_cascade(spark, raw, direct, tmp_path, n_buckets):
+    """Each record's (rows_out, value_hash) is count_and_hash of its
+    bucket of the single-job cascade: an oracle that shares neither the
+    backfill's per-tier writes, its partition reads nor its per-bucket
+    observation.  With more buckets than conversations some are empty."""
+    tables = TableSet(str(tmp_path / "t"))
+    r = backfill(spark, raw, tables, n_buckets=n_buckets)
+    assert r == {"committed": 3 * n_buckets, "skipped": 0}
+    recs = {(r["tier"], r["bucket_id"]): r for r in tables.read_lineage()}
+    assert set(recs) == {(t, b) for t in TIER_ORDER for b in range(n_buckets)}
+    for tier, df in direct.items():
+        bucketed = with_bucket(df, n_buckets)
+        for b in range(n_buckets):
+            rec = recs[(tier, b)]
+            want = count_and_hash(bucketed.where(F.col("bucket_id") == b), HASH_COLS)
+            assert (rec["rows_out"], rec["value_hash"]) == want, (tier, b)
+    assert verify_lineage(spark, tables) == []
 
 
 def _assert_counters_match_disk(spark, raw, tables, n_buckets):
@@ -180,11 +223,17 @@ def _assert_counters_match_disk(spark, raw, tables, n_buckets):
         with_bucket(raw, n_buckets).groupBy("bucket_id").count().collect()
     )
     for (tier, b), rec in recs.items():
-        n, x = (
-            spark.read.parquet(tables.partition_dir(tier, b))
-            .agg(F.count(F.lit(1)), F.bit_xor(F.xxhash64(*HASH_COLS)))
-            .first()
-        )
+        pdir = tables.partition_dir(tier, b)
+        if os.path.exists(pdir):
+            n, x = (
+                spark.read.parquet(pdir)
+                .agg(F.count(F.lit(1)), F.bit_xor(F.xxhash64(*HASH_COLS)))
+                .first()
+            )
+        else:
+            # an empty bucket writes no partition directory
+            assert rec["rows_out"] == 0, (tier, b)
+            n, x = 0, 0
         assert (rec["rows_out"], rec["value_hash"]) == (n, x or 0), (tier, b)
         if tier == "1m":
             assert rec["rows_in"] == raw_rows.get(b, 0), (tier, b)
@@ -193,12 +242,12 @@ def _assert_counters_match_disk(spark, raw, tables, n_buckets):
             assert rec["rows_in"] == recs[(parent, b)]["rows_out"], (tier, b)
 
 
-@pytest.mark.parametrize("mode", ["serial", "parallel4", "resume"])
+@pytest.mark.parametrize("mode", ["serial", "resume"])
 def test_lineage_counters_match_read_back(spark, raw, tmp_path, mode):
     """The counters observed during each write are the numbers the old
-    read-back/count passes produced — at parallelism 1 and 4, and when a
-    resume after a crash redoes a unit whose parent it skipped (that
-    unit's rows_in comes from the parent's lineage record)."""
+    read-back/count passes produced — in one run, and when a resume
+    after a crash redoes units whose parents it skipped (their rows_in
+    come from the parents' lineage records)."""
     tables = TableSet(str(tmp_path / mode))
     if mode == "resume":
         assert backfill(spark, raw, tables, n_buckets=N_BUCKETS, fail_after=5)[
@@ -207,32 +256,46 @@ def test_lineage_counters_match_read_back(spark, raw, tmp_path, mode):
         r = backfill(spark, raw, tables, n_buckets=N_BUCKETS)
         assert r == {"committed": 3 * N_BUCKETS - 4, "skipped": 4}
     else:
-        par = 4 if mode == "parallel4" else 1
-        r = backfill(spark, raw, tables, n_buckets=N_BUCKETS, parallelism=par)
+        r = backfill(spark, raw, tables, n_buckets=N_BUCKETS)
         assert r == {"committed": 3 * N_BUCKETS, "skipped": 0}
     _assert_counters_match_disk(spark, raw, tables, N_BUCKETS)
 
 
 def test_lineage_counters_with_empty_buckets(spark, raw, tmp_path):
     """More buckets than conversations: an empty bucket's units commit
-    zero counters (AQE prunes the empty input stage together with its
-    observed row count, so the empty unit counts its input directly)."""
+    zero counters.  Then a resume in which every pending bucket is
+    empty: AQE prunes the empty 1m input stage together with its
+    observed row counts, so that tier counts its input directly."""
     n_buckets = N_CONVS + 4
     tables = TableSet(str(tmp_path / "sparse"))
-    backfill(spark, raw, tables, n_buckets=n_buckets, parallelism=4)
+    backfill(spark, raw, tables, n_buckets=n_buckets)
     _assert_counters_match_disk(spark, raw, tables, n_buckets)
-    empty = [r for r in tables.read_lineage() if r["rows_out"] == 0]
+    recs = tables.read_lineage()
+    empty = [r for r in recs if r["rows_out"] == 0]
     assert empty and all(r["value_hash"] == 0 for r in empty)
 
+    empty_1m = {r["bucket_id"] for r in empty if r["tier"] == "1m"}
+    assert empty_1m
+    with open(tables.lineage_path, "w") as f:
+        f.writelines(json.dumps(r) + "\n" for r in recs
+                     if r["bucket_id"] not in empty_1m)
+    r = backfill(spark, raw, tables, n_buckets=n_buckets)
+    assert r["committed"] == 3 * len(empty_1m)
+    _assert_counters_match_disk(spark, raw, tables, n_buckets)
+    assert verify_lineage(spark, tables) == []
 
-def test_backfill_jobs_per_unit(spark, raw, tmp_path):
-    """A unit is its write: lineage counters are observed during the
-    write, nothing is read back and no partition read infers a schema,
-    so a serial backfill runs at most 2 Spark jobs (the shuffle map stage
-    and the write) per (tier, bucket) unit, and verify_lineage 1."""
+
+@pytest.mark.parametrize("n_buckets", [N_BUCKETS, N_CONVS + 4])
+def test_backfill_jobs_per_tier(spark, raw, tmp_path, n_buckets):
+    """A tier is one write over all its pending buckets: lineage
+    counters are observed during the write, nothing is read back and no
+    tier read infers a schema, so a backfill runs at most 3 Spark jobs
+    per tier (the two shuffle map stages and the write) and
+    verify_lineage 1, whatever the bucket count up to 32 (past Spark's
+    parallel-listing threshold a tier read adds a listing job)."""
     sc = spark.sparkContext
     tables = TableSet(str(tmp_path / "t"))
-    units = 3 * N_BUCKETS
+    units = 3 * n_buckets
 
     def jobs(name, fn):
         group = f"{name}-{tmp_path.name}"
@@ -243,15 +306,15 @@ def test_backfill_jobs_per_unit(spark, raw, tmp_path):
             sc.setLocalProperty("spark.jobGroup.id", None)
         return result, len(sc.statusTracker().getJobIdsForGroup(group))
 
-    r, n_jobs = jobs("backfill", lambda: backfill(spark, raw, tables, n_buckets=N_BUCKETS))
+    r, n_jobs = jobs("backfill", lambda: backfill(spark, raw, tables, n_buckets=n_buckets))
     assert r["committed"] == units
-    assert n_jobs <= 2 * units
+    assert n_jobs <= 3 * len(TIER_ORDER)
     problems, n_jobs = jobs("verify", lambda: verify_lineage(spark, tables))
-    assert problems == [] and n_jobs <= units
+    assert problems == [] and n_jobs <= len(TIER_ORDER)
 
 
 def test_lineage_detects_schema_drift(spark, raw, tmp_path):
-    """verify_lineage reads partitions with the explicit tier schema; a
+    """verify_lineage reads tiers with the explicit tier schema; a
     partition whose columns differ from it is still caught: a missing
     hashed column reads as NULL and is reported, a column of another
     type fails the read."""
@@ -260,7 +323,7 @@ def test_lineage_detects_schema_drift(spark, raw, tmp_path):
     assert verify_lineage(spark, tables) == []
     victim = tables.partition_dir("1h", 0)
     original = str(tmp_path / "original")
-    tables.read_partition(spark, "1h", 0).write.parquet(original)
+    spark.read.parquet(victim).write.parquet(original)
     spark.read.parquet(original).drop("text_hash").write.mode("overwrite").parquet(victim)
     assert any("1h/0" in p for p in verify_lineage(spark, tables))
     spark.read.parquet(original).withColumn(

@@ -5,9 +5,10 @@ at the reference's working scale (2M samples — its hard cap,
 response-spectrum grid) and verify output equality.
 
 Writes one JSON line per kernel to stdout and appends a summary to
-BENCH/DSP.md.  The Spark-level bench (bench.py / scaling_run.py) uses
-fixture-sized series where group/shuffle overheads dominate; this bench
-isolates the kernel cost that dominates at the reference's real sizes.
+BENCH/DSP.md.  The Spark-level benchmarks (perfbench/run.py, bench.py)
+use fixture-sized series where group/shuffle overheads dominate; this
+bench isolates the kernel cost that dominates at the reference's real
+sizes.
 """
 
 from __future__ import annotations

@@ -18,15 +18,20 @@ Layout
 - ``datagen``            deterministic distributed synthetic-data generators
 - ``functions.codecs``   Gorilla XOR + delta-of-delta NumPy bit codecs
 - ``functions.dsp``      pure-NumPy signal kernels (butter/filtfilt/taper/...)
+- ``functions.{jpeg,flac,mp3,avi}`` native media codecs (NumPy, no codec library)
 - ``operators.gapfill``  linear-interp gap fill of missing turn timestamps
 - ``operators.rollup``   the raw→1m→1h→1d tier cascade
 - ``operators.analytics``ts-process kernel surface as DataFrame transforms
 - ``operators.dedup``    exact/MinHash-LSH/SimHash/Jaccard dedup
 - ``operators.similarity`` embedding ANN (brute-force + LSH-bucketed)
 - ``operators.textstats`` language-ID, quality score, token count, fingerprints
-- ``plans.catalog``      snapshot/manifest table layer (Iceberg-style, parquet)
+- ``operators.{multimodal,sampling,skew}`` media payloads + features,
+                         id-keyed sampling / mixing, chunked grouped kernels
+- ``sources.formats``    seismogram interchange formats as Spark sources/sinks
 - ``plans.backfill``     lineage-tracked, resumable tier backfill driver
-- ``streaming.ingest``   Structured Streaming raw→1m path
+- ``plans.curation``     stage-resumable curation pipeline with lineage
+- ``streaming.ingest``   Structured Streaming raw→1m path + sessionization
+- ``queries_*``          the query registry and its DuckDB oracles
 """
 
 __version__ = "0.1.0"

@@ -5,40 +5,37 @@ per-partition lineage + metrics"):
 
 - **Partition unit = conversation hash-bucket**
   ``bucket_id = pmod(xxhash64(conv_id), n_buckets)`` — each unit holds
-  *whole* conversations, so gap-fill (which needs a conv's neighbor
-  turns) is self-contained per unit: no cross-partition overlap reads,
-  no day-boundary interpolation hazards.  This is the local emulation of
-  Iceberg's ``bucket(N, conv_id)`` partition transform; time-range
-  pruning inside a bucket comes from parquet row-group stats after
-  ``sortWithinPartitions(conv_id, bucket_ts)``.
-- **Commit protocol**: for each pending (tier, bucket): write the tier
-  partition directory (an idempotent full overwrite of that directory),
-  THEN append the lineage record.  A crash between the two leaves a
-  partition without lineage — the re-run simply overwrites it.  Lineage
-  is the source of truth for completeness, never the data files.
+  *whole* conversations, so gap-fill is self-contained per unit: the
+  local emulation of Iceberg's ``bucket(N, conv_id)`` transform.
+- **One write per tier** over its pending buckets (no lineage record
+  yet): the 1m tier from their raw rows, 1h/1d from one read of the
+  parent tier pruned to them.  The write is partitioned by
+  ``bucket_id`` (``tier_X/bucket_id=k/``) with dynamic partition
+  overwrite, so committed buckets are never touched; a rebalance on
+  ``bucket_id`` gives one file per bucket, sorted by (conv_id,
+  bucket_ts) for row-group time pruning.
+- **Commit protocol**: write the tier, THEN append its buckets' lineage
+  records in one append.  A crash between the two leaves partitions
+  without lineage, which the re-run overwrites: lineage, never the data
+  files, is the source of truth for completeness.
 - **Lineage row**: run_id, tier, bucket_id, n_buckets, rows_in,
   rows_out, value_hash (xor-fold of row xxhash64s — order-independent,
-  cheap to verify), started/committed wall times.  ``resume`` =
-  anti-join of the pending set against committed lineage keys, which
-  is only sound under the same bucketing: a root whose records carry
-  another ``n_buckets`` (or none) is refused before anything is
-  written, since its committed buckets hold other conversations.
-- **Counters come from the write itself.**  ``rows_out`` and
-  ``value_hash`` are ``DataFrame.observe`` aggregates on the frame being
-  written (the same ``count(1)`` / ``bit_xor(xxhash64(HASH_COLS))`` that
-  ``count_and_hash`` computes on a read-back); a 1m unit's ``rows_in``
-  is observed on its bucket's raw rows, a 1h/1d unit's is its parent
-  unit's ``rows_out``.  No unit reads back what it wrote, and every
-  partition read (the next tier's input, the resume path, the verify
-  sweep) carries the explicit tier schema, so no schema-inference job
-  runs: a unit is its write's two Spark jobs.  ``verify_lineage``
-  stays the on-disk integrity check — it re-hashes every committed
-  partition against its record.
+  cheap to verify), the tier's started/committed wall times.  A root
+  whose records carry another ``n_buckets`` (or none) is refused before
+  anything is written: its committed keys name other conversations.
+- **Counters come from the write itself**: two conditional aggregates
+  per pending bucket in one ``DataFrame.observe`` on the written frame
+  (per bucket, what ``count_and_hash`` gives on a read-back); 1m
+  ``rows_in`` is observed the same way on the raw rows, 1h/1d
+  ``rows_in`` is the parent record's ``rows_out``.  Nothing is read
+  back and tier reads carry the explicit tier schema, so a tier is its
+  write's Spark jobs (past 32 buckets Spark lists a tier read's
+  directories in one more job).  ``verify_lineage`` re-hashes every
+  committed partition on disk.
 
 On a real cluster this layer sits on Iceberg (snapshot ids instead of
-directory overwrites); the jar is not in this sandbox, so the same
-protocol is implemented over partitioned parquet directories — the
-commit-ordering and resume logic is identical.
+directory overwrites); without the Iceberg runtime the same protocol
+runs over partitioned parquet directories.
 """
 
 from __future__ import annotations
@@ -61,8 +58,8 @@ from ts_process_spark.operators.rollup import (
 
 TIER_ORDER = ["1m", "1h", "1d"]
 
-# on-disk schema of each tier's partitions: every partition read carries
-# it, so reading one never runs a parquet schema-inference job.  The
+# on-disk schema of each tier's partitions: every tier read carries it,
+# so reading one never runs a parquet schema-inference job.  The
 # coarser tiers append rollup_cascade's leaf-chunk count (backfill never
 # caps blobs, so there is no blob_chunks_dropped column)
 _CASCADE_SCHEMA = T.StructType(
@@ -77,26 +74,19 @@ def with_bucket(df: DataFrame, n_buckets: int) -> DataFrame:
     )
 
 
-def _count_and_hash_aggs(cols: list[str]) -> list[Column]:
-    """The (row count, value_hash) aggregates: an order-independent
+def count_and_hash(df: DataFrame, cols: list[str]) -> tuple[int, int]:
+    """(row count, value_hash) in ONE Spark job: an order-independent
     bit-xor fold of per-row xxhash64 over the checked columns (blob
     columns excluded — codec correctness is tested separately, SURVEY
-    §7.4.5).  Shared by the read-back check and the observed write, so
-    the two give identical values."""
-    return [
+    §7.4.5).  The aggregates are observed on a no-op write of the
+    checked columns, so no shuffle stage runs (a global ``agg`` is two
+    jobs)."""
+    seen = Observation()
+    df.select(*cols).observe(
+        seen,
         F.count(F.lit(1)).alias("n"),
         F.coalesce(F.bit_xor(F.xxhash64(*cols)), F.lit(0)).alias("x"),
-    ]
-
-
-def count_and_hash(df: DataFrame, cols: list[str]) -> tuple[int, int]:
-    """(row count, value_hash) in ONE Spark job: the aggregates are
-    observed on a no-op write of the checked columns, so no shuffle
-    stage runs (a global ``agg`` is two jobs)."""
-    seen = Observation()
-    df.select(*cols).observe(seen, *_count_and_hash_aggs(cols)).write.format(
-        "noop"
-    ).mode("overwrite").save()
+    ).write.format("noop").mode("overwrite").save()
     m = seen.get
     return int(m["n"]), int(m["x"])
 
@@ -114,6 +104,30 @@ HASH_COLS = [
     "last_ts",
     "text_hash",
 ]
+
+
+def _bucket_counts(buckets: list[int]) -> list[Column]:
+    """Each bucket's row count, one conditional aggregate per bucket."""
+    return [F.expr(f"count_if(bucket_id = {b}) AS n{b}") for b in buckets]
+
+
+def _observe_buckets(df: DataFrame, buckets: list[int]) -> tuple[DataFrame, Observation]:
+    """``df`` observed with each bucket's (row count, value_hash): per
+    bucket, what ``count_and_hash(df restricted to it, HASH_COLS)``
+    gives, for every bucket in the one pass.  The per-row hash is
+    computed once and dropped after ``observe``."""
+    seen = Observation()
+    hashes = [
+        F.expr(f"coalesce(bit_xor(CASE WHEN bucket_id = {b} THEN _h END), 0) AS x{b}")
+        for b in buckets
+    ]
+    hashed = df.selectExpr("*", f"xxhash64({', '.join(HASH_COLS)}) AS _h")
+    return hashed.observe(seen, *_bucket_counts(buckets), *hashes).drop("_h"), seen
+
+
+def _bucket_stats(seen: Observation, buckets: list[int]) -> dict[int, tuple[int, int]]:
+    m = seen.get
+    return {b: (int(m[f"n{b}"]), int(m[f"x{b}"])) for b in buckets}
 
 
 @dataclass
@@ -141,20 +155,32 @@ class TableSet:
     def committed(self) -> set[tuple[str, int]]:
         return {(r["tier"], r["bucket_id"]) for r in self.read_lineage()}
 
-    def append_lineage(self, rec: dict) -> None:
-        # single-writer append; on Iceberg this is the snapshot commit
+    def append_lineage(self, recs: list[dict]) -> None:
+        # single-writer append; on Iceberg this is the snapshot commit.
+        # Serialized before the file opens: a record that fails to encode
+        # commits none of the tier's records
+        lines = "".join(json.dumps(r) + "\n" for r in recs)
         with open(self.lineage_path, "a") as f:
-            f.write(json.dumps(rec) + "\n")
+            f.write(lines)
 
     def read_tier(self, spark: SparkSession, tier: str) -> DataFrame:
         return spark.read.parquet(self.tier_dir(tier))
 
-    def read_partition(self, spark: SparkSession, tier: str, bucket_id: int) -> DataFrame:
-        """One (tier, bucket) partition under the explicit tier schema.
-        A file column whose type differs from the schema fails the read;
-        a missing one reads as NULL, which changes the value hash."""
-        return spark.read.schema(TIER_SCHEMAS[tier]).parquet(
-            self.partition_dir(tier, bucket_id)
+    def read_buckets(self, spark: SparkSession, tier: str, buckets: list[int]) -> DataFrame:
+        """The tier's rows in ``buckets``, with their ``bucket_id``, under
+        the explicit tier schema; partition pruning skips every other
+        bucket.  A file column whose type differs from the schema fails
+        the read; a missing one reads as NULL, which changes the value
+        hash.  A bucket (or tier) without a directory reads as no rows."""
+        schema = T.StructType(
+            TIER_SCHEMAS[tier].fields + [T.StructField("bucket_id", T.IntegerType())]
+        )
+        if not os.path.isdir(self.tier_dir(tier)):
+            return spark.createDataFrame([], schema)
+        return (
+            spark.read.schema(schema)
+            .parquet(self.tier_dir(tier))
+            .where(F.col("bucket_id").isin(buckets))
         )
 
 
@@ -166,28 +192,17 @@ def backfill(
     fail_after: int | None = None,
     parallelism: int = 1,
 ) -> dict:
-    """Run (or resume) the raw→1m→1h→1d cascade bucket by bucket.
+    """Run (or resume) the raw→1m→1h→1d cascade: one write per tier over
+    that tier's pending buckets, then one lineage append for them.
 
     A resume must use the ``n_buckets`` the root was started with;
     any other value raises ``ValueError`` before a write.
-    ``fail_after`` exists for the resume tests: the N-th (tier, bucket)
-    unit writes its data and stops before its lineage commit,
-    simulating a mid-backfill crash (serial mode only).  Returns
-    {"committed": k, "skipped": s}, plus "crashed" after such a stop.
-
-    ``parallelism > 1`` runs BUCKET CHAINS concurrently (round-2 VERDICT
-    #6): buckets are independent by construction (whole conversations
-    per bucket), so each worker thread drives its own chain of Spark
-    jobs — tiers stay ordered within a bucket, the lineage append is the
-    only serialized step (one lock), and each thread tags its jobs with
-    a scheduler pool so a straggler bucket can't starve the rest.  The
-    commit protocol (overwrite THEN lineage) is per unit and unchanged,
-    so crash-resume semantics are identical at any parallelism.
-
-    Each unit's lineage counters are observed during its write (see the
-    module docstring), so a unit runs only its write's Spark jobs."""
-    import threading
-
+    ``fail_after`` exists for the resume tests: the tier whose write
+    holds the N-th pending (tier, bucket) unit writes its data and stops
+    before its lineage commit, simulating a mid-backfill crash.  Returns
+    {"committed": k, "skipped": s} in units, plus "crashed" after such a
+    stop.  ``parallelism`` is ignored: a tier is one write whatever its
+    bucket count (the keyword stays for callers that pass it)."""
     run_id = uuid.uuid4().hex[:12]
     lineage = tables.read_lineage()
     other = {r.get("n_buckets") for r in lineage} - {n_buckets}
@@ -197,104 +212,91 @@ def backfill(
             f"{sorted(other, key=str)}; resuming with n_buckets={n_buckets} "
             "would duplicate rows"
         )
-    if parallelism > 1 and fail_after is not None:
-        raise ValueError("crash simulation requires parallelism=1")
     os.makedirs(tables.root, exist_ok=True)
-    done = {(r["tier"], r["bucket_id"]): r for r in lineage}
-    bucketed = with_bucket(raw, n_buckets)
-
-    lock = threading.Lock()
+    rows_out = {(r["tier"], r["bucket_id"]): r["rows_out"] for r in lineage}
     counts = {"committed": 0, "skipped": 0}
 
-    def run_bucket(bucket_id: int) -> bool:
-        """One bucket's tier chain; returns False on early stop."""
-        if parallelism > 1:
-            spark.sparkContext.setLocalProperty(
-                "spark.scheduler.pool", f"backfill-{bucket_id % parallelism}"
+    for i, tier in enumerate(TIER_ORDER):
+        pending = [b for b in range(n_buckets) if (tier, b) not in rows_out]
+        counts["skipped"] += n_buckets - len(pending)
+        if not pending:
+            continue
+        started = time.time()
+        if tier == "1m":
+            seen = Observation()
+            src = (
+                with_bucket(raw, n_buckets)
+                .observe(seen, *_bucket_counts(pending))
+                .where(F.col("bucket_id").isin(pending))
             )
-        parent_rows = 0  # rows_out of the previous tier's unit
-        for i, tier in enumerate(TIER_ORDER):
-            key = (tier, bucket_id)
-            if key in done:
-                with lock:
-                    counts["skipped"] += 1
-                parent_rows = done[key]["rows_out"]
-                continue
-            started = time.time()
-            # observation names are unique per unit: bucket chains run
-            # their writes concurrently on one session
-            tag = f"backfill:{run_id}:{tier}:{bucket_id}"
-            if tier == "1m":
-                seen = Observation(f"{tag}:in")
-                src = bucketed.where(F.col("bucket_id") == bucket_id).drop("bucket_id")
-                out = rollup_raw_to_1m(src.observe(seen, F.count(F.lit(1)).alias("n")))
-            else:
-                # the parent partition is read only here, where a tier
-                # consumes it — never after the last tier's write
-                seen = None
-                parent = tables.read_partition(spark, TIER_ORDER[i - 1], bucket_id)
-                out = rollup_cascade(parent, tier)
-            written = Observation(f"{tag}:out")
-            out = out.sortWithinPartitions("conv_id", "bucket_ts").observe(
-                written, *_count_and_hash_aggs(HASH_COLS)
-            )
-            pdir = tables.partition_dir(tier, bucket_id)
-            out.write.mode("overwrite").parquet(pdir)  # idempotent overwrite
-            if fail_after is not None and counts["committed"] + 1 >= fail_after:
-                # simulate a crash AFTER data write, BEFORE lineage commit:
-                # the resume run must redo this unit
-                counts["crashed"] = True
-                return False
-            stats = written.get
-            if seen is None:
-                rows_in = parent_rows
-            elif stats["n"]:
-                rows_in = seen.get["n"]
-            else:
-                # AQE replaces an input stage that produced no rows by an
-                # empty relation, and drops its observed metrics with it:
-                # count an empty unit's input directly
-                rows_in = src.count()
-            rec = {
-                "run_id": run_id,
-                "tier": tier,
-                "bucket_id": bucket_id,
-                "n_buckets": n_buckets,
-                "rows_in": rows_in,
-                "rows_out": stats["n"],
-                "value_hash": stats["x"],
-                "started_at": started,
-                "committed_at": time.time(),
-            }
-            with lock:
-                tables.append_lineage(rec)
-                counts["committed"] += 1
-            parent_rows = stats["n"]
-        return True
-
-    if parallelism <= 1:
-        for bucket_id in range(n_buckets):
-            if not run_bucket(bucket_id):
-                break
-    else:
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=parallelism) as pool:
-            list(pool.map(run_bucket, range(n_buckets)))
-    return dict(counts)
+            out = rollup_raw_to_1m(src)
+        else:
+            # a lost parent partition would read as an empty bucket
+            parent = TIER_ORDER[i - 1]
+            lost = [b for b in pending if rows_out[(parent, b)]
+                    and not os.path.isdir(tables.partition_dir(parent, b))]
+            if lost:
+                raise FileNotFoundError(f"{tables.tier_dir(parent)}: buckets {lost} lost")
+            out = rollup_cascade(tables.read_buckets(spark, parent, pending), tier)
+        out, written = _observe_buckets(
+            with_bucket(out, n_buckets)
+            .hint("rebalance", "bucket_id")
+            .sortWithinPartitions("bucket_id", "conv_id", "bucket_ts"),
+            pending,
+        )
+        # dynamic overwrite replaces only the partitions this write holds
+        # rows for: committed buckets are never touched
+        out.write.partitionBy("bucket_id").mode("overwrite").option(
+            "partitionOverwriteMode", "dynamic"
+        ).parquet(tables.tier_dir(tier))
+        if fail_after is not None and counts["committed"] + len(pending) >= fail_after:
+            # simulate a crash AFTER the data write, BEFORE the lineage
+            # commit: the resume run must redo this tier's buckets
+            counts["crashed"] = True
+            break
+        stats = _bucket_stats(written, pending)
+        if tier != "1m":
+            rows_in = {b: rows_out[(parent, b)] for b in pending}
+        elif any(n for n, _ in stats.values()):
+            m = seen.get
+            rows_in = {b: m[f"n{b}"] for b in pending}
+        else:
+            # AQE replaces an input stage that produced no rows by an empty
+            # relation and drops its observed metrics: count it directly
+            rows_in = dict(src.groupBy("bucket_id").count().collect())
+        committed_at = time.time()
+        tables.append_lineage([
+            dict(run_id=run_id, tier=tier, bucket_id=b, n_buckets=n_buckets,
+                 rows_in=rows_in.get(b, 0), rows_out=n, value_hash=x,
+                 started_at=started, committed_at=committed_at)
+            for b, (n, x) in stats.items()
+        ])
+        rows_out.update(((tier, b), n) for b, (n, _) in stats.items())
+        counts["committed"] += len(pending)
+    return counts
 
 
 def verify_lineage(spark: SparkSession, tables: TableSet) -> list[str]:
     """Re-hash every committed partition against its lineage record —
-    the post-backfill on-disk integrity sweep, one Spark job per
-    partition (the read carries the tier schema, so no schema-inference
-    job runs)."""
+    the post-backfill on-disk integrity sweep.  Each tier is one
+    observed no-op pass over its committed buckets (the read carries the
+    tier schema, so no schema-inference job runs).  A committed bucket
+    without a directory hashes as (0, 0): a lost partition reports as
+    rowcount drift, an empty bucket (which writes no directory) passes."""
+    recs = {(r["tier"], r["bucket_id"]): r for r in tables.read_lineage()}
     problems = []
-    for rec in tables.read_lineage():
-        part = tables.read_partition(spark, rec["tier"], rec["bucket_id"])
-        n, vhash = count_and_hash(part, HASH_COLS)
-        if n != rec["rows_out"]:
-            problems.append(f"{rec['tier']}/{rec['bucket_id']}: rowcount drift")
-        elif vhash != rec["value_hash"]:
-            problems.append(f"{rec['tier']}/{rec['bucket_id']}: value hash drift")
+    for tier in TIER_ORDER:
+        buckets = sorted(b for t, b in recs if t == tier)
+        if not buckets:
+            continue
+        part, seen = _observe_buckets(
+            tables.read_buckets(spark, tier, buckets).select("bucket_id", *HASH_COLS),
+            buckets,
+        )
+        part.write.format("noop").mode("overwrite").save()
+        for b, (n, x) in _bucket_stats(seen, buckets).items():
+            if n != recs[(tier, b)]["rows_out"]:
+                problems.append(f"{tier}/{b}: rowcount drift")
+            elif x != recs[(tier, b)]["value_hash"]:
+                problems.append(f"{tier}/{b}: value hash drift")
     return problems

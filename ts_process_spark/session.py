@@ -2,10 +2,9 @@
 
 One place to pin every config the engine depends on:
 
-- AQE on (runtime coalesce + skew-join splitting) — the engine's answer to
-  hot-conversation skew at 10^12-turn scale, together with explicit salting
-  in ``operators.rollup`` (the reference has no parallelism at all; see
-  /root/reference/ts_process/process_timeseries.py — single thread).
+- AQE on (runtime coalesce + skew-join splitting).  It splits skewed joins
+  only: ``operators.rollup`` has no salting, so the gap-fill window runs a
+  hot conversation in one task (``operators.skew`` bounds grouped kernels).
 - Arrow execution on — every heavy kernel is a pandas/Arrow UDF
   (grouped-map ``applyInPandas`` / ``mapInPandas``); zero per-row Python.
 - UTC session timezone — deterministic bucket boundaries and a stable
@@ -31,10 +30,8 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) the session.
 
-    ``cores=None`` → ``local[$SPARK_GRAFT_CPUS]`` (default 32).
-    ``tools/scaling_run.py`` calls this twice, at ``cores=8`` and
-    ``cores=32``, to evidence the two-cluster-size scaling rule on a
-    single box.
+    ``cores=None`` → ``local[$SPARK_GRAFT_CPUS]`` (default 32); the
+    benchmark (``perfbench/run.py``) and the tests pass ``cores``.
 
     Shuffle and spill go to tmpfs (``/dev/shm/spark_local``) only when
     the caller names no local dir, neither ``spark.local.dir`` in
@@ -56,12 +53,6 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.compression.codec", "zstd")
-        # FAIR job scheduling: the parallel backfill tags each bucket
-        # chain with a scheduler pool; pool names are INERT under the
-        # default FIFO mode (review finding), so the straggler-isolation
-        # the backfill documents requires this to be set at context
-        # start.  Sequentially submitted jobs are unaffected
-        .config("spark.scheduler.mode", "FAIR")
         # local mode: all "executors" share the driver JVM; keep result
         # collection bounded anyway.
         .config("spark.driver.maxResultSize", "4g")
