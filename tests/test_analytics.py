@@ -309,23 +309,22 @@ def test_asof_join_grouped_matches_window_form(spark):
 
 def test_synchronization_plan_df_matches_dict_plan(spark):
     """The distributed plan DataFrame is bit-identical to the driver
-    dict plan across all three obs-stamp branches + end-sync + the
-    one-sample repair (round-3 VERDICT ask #7)."""
+    dict plan across all three obs-stamp branches + the one-sample
+    repair (round-3 VERDICT ask #7)."""
     info = {"sta": (0.01, 1000), "stb": (0.02, 480), "stc": (0.01, 961)}
     cases = [
         dict(obs_station="sta", stamp_s=5.0, eq_time_s=6.0, leading=2.0),
         dict(obs_station="sta", stamp_s=3.0, eq_time_s=6.0, leading=2.0),
         dict(obs_station="sta", stamp_s=7.0, eq_time_s=6.0, leading=2.0),
         dict(obs_station=None, stamp_s=None),
-        dict(obs_station="stb", stamp_s=7.5, eq_time_s=6.0, leading=2.0,
-             sync_end_time=False),
+        dict(obs_station="stb", stamp_s=7.5, eq_time_s=6.0, leading=2.0),
     ]
     per = spark.createDataFrame(
         [(s, d, n) for s, (d, n) in info.items()], "station string, dt double, n long"
     )
     for kw in cases:
         want = analytics.plan_synchronization(info, **dict(
-            {"eq_time_s": 0.0, "leading": 0.0, "sync_end_time": True}, **kw
+            {"eq_time_s": 0.0, "leading": 0.0}, **kw
         ))
         got_rows = analytics.synchronization_plan_df(per, **kw).collect()
         got = {

@@ -161,6 +161,22 @@ def test_resume_with_other_bucket_count_refused(spark, raw, tmp_path):
     assert _tree(tables.root) == before
 
 
+def test_null_key_fails_backfill_before_commit(spark, raw, tmp_path):
+    """Raw turns with a NULL ``conv_id`` or ``turn_idx`` fail the 1m
+    write, so no tier commits a lineage record."""
+    import datetime as dt
+
+    t0 = dt.datetime(2024, 5, 1)
+    bad = spark.createDataFrame(
+        [(None, 0, "user", "a", None, t0), ("c1", None, "user", "b", None, t0)],
+        raw.schema,
+    )
+    tables = TableSet(str(tmp_path / "t"))
+    with pytest.raises(Exception, match="NULL (conv_id|turn_idx)"):
+        backfill(spark, raw.unionByName(bad), tables, n_buckets=N_BUCKETS)
+    assert tables.read_lineage() == []
+
+
 def test_lineage_detects_tamper(spark, raw, tmp_path):
     tables = TableSet(str(tmp_path / "t2"))
     backfill(spark, raw, tables, n_buckets=2)

@@ -21,32 +21,40 @@ from ts_process_spark.functions.codecs import (
 )
 
 
-def _roundtrip_f64(v: np.ndarray, optimal: bool) -> None:
-    dec = decode_gorilla(encode_gorilla(v, optimal=optimal))
+def _roundtrip_f64(v: np.ndarray) -> None:
+    dec = decode_gorilla(encode_gorilla(v))
     assert v.view(np.uint64).tolist() == dec.view(np.uint64).tolist()
 
 
-@pytest.mark.parametrize("optimal", [False, True])
-def test_gorilla_empty_and_single(optimal):
-    _roundtrip_f64(np.array([], dtype=np.float64), optimal)
-    _roundtrip_f64(np.array([3.14159]), optimal)
+def test_gorilla_empty_and_single():
+    _roundtrip_f64(np.array([], dtype=np.float64))
+    _roundtrip_f64(np.array([3.14159]))
 
 
-@pytest.mark.parametrize("optimal", [False, True])
-def test_gorilla_specials(optimal):
+def test_gorilla_specials():
     v = np.array([0.0, -0.0, np.inf, -np.inf, np.nan, 1.0, 1.0, -1.0, 5e-324])
-    _roundtrip_f64(v, optimal)
+    _roundtrip_f64(v)
 
 
 @settings(max_examples=60, deadline=None)
 @given(
     st.lists(
         st.floats(allow_nan=True, allow_infinity=True, width=64), max_size=200
-    ),
-    st.booleans(),
+    )
 )
-def test_gorilla_property(vals, optimal):
-    _roundtrip_f64(np.array(vals, dtype=np.float64), optimal)
+def test_gorilla_property(vals):
+    _roundtrip_f64(np.array(vals, dtype=np.float64))
+
+
+def test_gorilla_window_reuse_code_is_rejected():
+    """No encoder writes the '10' (window reuse) code, so a blob that
+    holds one is corrupt or foreign: decoding it raises, naming the
+    code.  Hand-built: n=2, the first value, then '10'."""
+    import struct
+
+    blob = struct.pack("<I", 2) + struct.pack(">d", 1.0) + bytes([0b10000000])
+    with pytest.raises(ValueError, match="'10'"):
+        decode_gorilla(blob)
 
 
 def test_gorilla_compresses_repeats():

@@ -215,33 +215,30 @@ def test_cascade_edge_convs(spark):
     assert sd.peak_text_len.tolist() == [10, 20]
 
 
-def test_cascade_blob_cap_surfaces_drops(spark):
-    """max_blob_bytes bounds the hot-conversation tier row: chunks kept
-    in bucket order within budget, the drop count surfaced (never
-    silent), and every non-blob aggregate identical to the lossless
-    run."""
-    from ts_process_spark.operators.rollup import rollup_cascade
+def test_blob_chunks_dropped_counts_leaf_units(spark):
+    """``blob_n_chunks`` counts leaf (1m) chunks at every tier, not
+    children: each 1h row of a conv with a turn in every minute holds
+    60, and the 1d row over three such hours holds 180."""
+    import datetime as dt
 
-    raw = transcripts(spark, n_convs=6, seed=9)
-    t1m = rollup_raw_to_1m(raw)
-    full = rollup_cascade(t1m, "1d").orderBy("conv_id", "bucket_ts").collect()
-    capped = (
-        rollup_cascade(t1m, "1d", max_blob_bytes=64)
-        .orderBy("conv_id", "bucket_ts")
-        .collect()
+    from ts_process_spark.operators.rollup import (
+        rollup_cascade,
+        rollup_raw_to_1m,
     )
-    assert len(full) == len(capped)
-    assert any(r["blob_chunks_dropped"] > 0 for r in capped)  # cap bites
-    for a, b in zip(full, capped):
-        for c in ("conv_id", "n_turns", "sum_text_len", "peak_text_len",
-                  "text_hash", "first_ts", "last_ts"):
-            assert a[c] == b[c], c
-        assert len(b["ts_blob"]) <= len(a["ts_blob"])
-        # capped blob decodes to a prefix of the lossless blob's points
-        # (chunk order is bucket order in both)
-        da = list(decode_dod(bytes(a["ts_blob"])))
-        db = list(decode_dod(bytes(b["ts_blob"])))
-        assert da[: len(db)] == db
+
+    t0 = dt.datetime(2024, 5, 1, 0, 0, 0)
+    rows = [
+        ("c1", m, "user", "x" * 50, None, t0 + dt.timedelta(minutes=m))
+        for m in range(180)  # three full hours, one conv
+    ]
+    raw = spark.createDataFrame(
+        rows, "conv_id string, turn_idx int, role string, text string, "
+        "tool string, ts timestamp"
+    )
+    t1h = rollup_cascade(rollup_raw_to_1m(raw), "1h")
+    assert [r["blob_n_chunks"] for r in t1h.collect()] == [60, 60, 60]
+    d = rollup_cascade(t1h, "1d").collect()
+    assert [r["blob_n_chunks"] for r in d] == [180]
 
 
 def test_null_text_normalizes_at_operator(spark):
@@ -277,71 +274,26 @@ def test_null_text_normalizes_at_operator(spark):
     assert not np.isnan(vals).any()
 
 
-def test_blob_chunks_dropped_propagates_through_cascade(spark):
-    """A capped tier's drop counter survives further cascading: the 1d
-    row reports its own drops PLUS the summed 1h drops (the transitive
-    no-silent-caps rule)."""
+def test_null_key_fails_the_cascade(spark):
+    """A raw turn with a NULL ``conv_id`` or ``turn_idx`` has no tier
+    key: the cascade fails naming the column instead of writing a row
+    under a NULL key (or a turn outside first/last_turn_idx)."""
     import datetime as dt
 
-    from ts_process_spark.operators.rollup import (
-        rollup_cascade,
-        rollup_raw_to_1m,
-    )
-
     t0 = dt.datetime(2024, 5, 1, 0, 0, 0)
-    rows = []
-    for m in range(120):  # two hours of minutes, one conv
-        rows.append(("c1", m, "user", "x" * 50, None,
-                     t0 + dt.timedelta(minutes=m)))
-    raw = spark.createDataFrame(
-        rows, "conv_id string, turn_idx int, role string, text string, "
-        "tool string, ts timestamp"
-    )
-    t1m = rollup_raw_to_1m(raw)
-    t1h = rollup_cascade(t1m, "1h", max_blob_bytes=200)  # forces 1h drops
-    h = {r["bucket_ts"]: r for r in t1h.collect()}
-    h_drops = sum(r["blob_chunks_dropped"] for r in h.values())
-    assert h_drops > 0
-    t1d = rollup_cascade(t1h, "1d", max_blob_bytes=10**9)  # no own drops
-    d = t1d.collect()[0]
-    assert d["blob_chunks_dropped"] == h_drops  # child drops propagated
-    # uncapped cascade of a capped child still carries the counter
-    t1d2 = rollup_cascade(t1h, "1d")
-    assert t1d2.collect()[0]["blob_chunks_dropped"] == h_drops
-
-
-def test_blob_chunks_dropped_counts_leaf_units(spark):
-    """ADVICE r4: a 1d cap that drops ONE 1h child whose blob holds 60
-    minute-chunks must report 60 leaf chunks lost, not 1 — the counter
-    is leaf-(1m-chunk)-unit at every tier, and blob_n_chunks tracks the
-    kept payload the same way."""
-    import datetime as dt
-
-    from ts_process_spark.operators.rollup import (
-        rollup_cascade,
-        rollup_raw_to_1m,
-    )
-
-    t0 = dt.datetime(2024, 5, 1, 0, 0, 0)
-    rows = [
-        ("c1", m, "user", "x" * 50, None, t0 + dt.timedelta(minutes=m))
-        for m in range(180)  # three full hours, one conv
-    ]
-    raw = spark.createDataFrame(
-        rows, "conv_id string, turn_idx int, role string, text string, "
-        "tool string, ts timestamp"
-    )
-    t1h = rollup_cascade(rollup_raw_to_1m(raw), "1h")  # lossless
-    hrows = t1h.collect()
-    assert all(r["blob_n_chunks"] == 60 for r in hrows)
-    blob_len = (
-        len(bytes(hrows[0]["ts_blob"])) + len(bytes(hrows[0]["val_blob"]))
-    )
-    # budget for exactly two of the three 1h children
-    t1d = rollup_cascade(t1h, "1d", max_blob_bytes=2 * blob_len)
-    d = t1d.collect()[0]
-    assert d["blob_chunks_dropped"] == 60  # leaf units, not "1 child"
-    assert d["blob_n_chunks"] == 120  # kept payload, leaf units
+    ok = [("c1", 0, "user", "hi", None, t0)]
+    null_conv = [(None, 0, "user", "a", None, t0)]
+    null_turn = [("c1", None, "user", "b", None, t0)]
+    schema = ("conv_id string, turn_idx int, role string, text string, "
+              "tool string, ts timestamp")
+    for rows, match in (
+        (ok + null_conv + null_turn, "NULL (conv_id|turn_idx)"),
+        (ok + null_conv, "NULL conv_id"),
+        (ok + null_turn, "NULL turn_idx"),
+    ):
+        raw = spark.createDataFrame(rows, schema)
+        with pytest.raises(Exception, match=match):
+            full_cascade(raw)["1d"].collect()
 
 
 def test_listagg_containers_match_python_form(spark, raw_df):
@@ -350,15 +302,14 @@ def test_listagg_containers_match_python_form(spark, raw_df):
     codecs.concat_blobs reference for BOTH structural shapes — leaf
     children (1m→1h: length entries from _le4 of each blob's length)
     and container children (1h→1d: length table and body copied by
-    byte-slicing, flattening exactly like the Python form) — plus the
-    max_blob_bytes branch down to the empty-kept edge."""
+    byte-slicing, flattening exactly like the Python form)."""
     from ts_process_spark.functions.codecs import concat_blobs
     from ts_process_spark.operators.rollup import rollup_cascade
 
     t1m = rollup_raw_to_1m(raw_df)
     t1h = rollup_cascade(t1m, "1h")
 
-    def expected(child_df, tier, **kw):
+    def expected(child_df, tier):
         # reference: python concat_blobs over the child blobs collected
         # in bucket order, grouped by the parent bucket
         trunc = {"1h": "hour", "1d": "day"}[tier]
@@ -378,16 +329,8 @@ def test_listagg_containers_match_python_form(spark, raw_df):
             groups.setdefault((r["conv_id"], r["pb"]), []).append(
                 (bytes(r["ts_blob"]), bytes(r["val_blob"]))
             )
-        cap = kw.get("max_blob_bytes")
         out = {}
         for k, blobs in groups.items():
-            if cap is not None:
-                kept, tot = [], 0
-                for tb, vb in blobs:
-                    tot += len(tb) + len(vb)
-                    if tot <= cap:
-                        kept.append((tb, vb))
-                blobs = kept
             out[k] = (
                 concat_blobs([b[0] for b in blobs]),
                 concat_blobs([b[1] for b in blobs]),
@@ -395,18 +338,17 @@ def test_listagg_containers_match_python_form(spark, raw_df):
         return out
 
     for child, tier in ((t1m, "1h"), (t1h, "1d")):
-        for kw in ({}, {"max_blob_bytes": 0}, {"max_blob_bytes": 900}):
-            got = {
-                (r["conv_id"], r["bucket_ts"]): (
-                    bytes(r["ts_blob"]),
-                    bytes(r["val_blob"]),
-                )
-                for r in rollup_cascade(child, tier, **kw).collect()
-            }
-            exp = expected(child, tier, **kw)
-            assert set(got) == set(exp)
-            bad = [k for k in got if got[k] != exp[k]]
-            assert not bad, (tier, kw, bad[:3])
+        got = {
+            (r["conv_id"], r["bucket_ts"]): (
+                bytes(r["ts_blob"]),
+                bytes(r["val_blob"]),
+            )
+            for r in rollup_cascade(child, tier).collect()
+        }
+        exp = expected(child, tier)
+        assert set(got) == set(exp)
+        bad = [k for k in got if got[k] != exp[k]]
+        assert not bad, (tier, bad[:3])
 
 
 def test_le4_fails_loudly_past_2_31_with_ansi_off(spark):

@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 
 from ts_process_spark.datagen import gen_signal_pdf, signals
 from ts_process_spark.functions import dsp
-from ts_process_spark.operators.skew import chunked_apply, salted_repartition
+from ts_process_spark.operators.skew import chunked_apply
 
 
 def test_chunked_filter_close_to_whole_series(spark):
@@ -54,24 +54,6 @@ def test_chunked_apply_preserves_rows(spark):
     # exactly one copy of every (series, i)
     dup = got.groupBy("series_id", "i").count().where(F.col("count") > 1).count()
     assert dup == 0
-
-
-def test_salted_repartition_spreads_hot_key(spark):
-    pdf = pd.DataFrame({"k": ["hot"] * 1000 + ["cold"] * 10, "v": range(1010)})
-    df = spark.createDataFrame(pdf)
-    # AQE's partition coalescing would re-merge this tiny shuffle and
-    # hide the salting; disable it for the assertion only
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-    try:
-        salted = salted_repartition(df, "k", salt_n=8)
-        parts = salted.rdd.glom().map(len).collect()
-        nonempty = [p for p in parts if p > 0]
-        # the hot key must not land in a single partition
-        assert max(nonempty) < 1000
-        assert len(nonempty) > 1
-        assert salted.count() == 1010
-    finally:
-        spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
 
 
 def test_filter_signals_auto_chunks_oversized_groups(spark):

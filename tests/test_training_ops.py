@@ -537,7 +537,7 @@ def test_bm25_matches_duckdb_oracle(spark):
     terms = ["the", "data", "zyzzyx"]  # common, mid, absent
     got = {
         r["id"]: r
-        for r in textstats.bm25_scores(docs, terms, k1=1.2, b=0.75).collect()
+        for r in textstats.bm25_scores(docs, terms).collect()
     }
     con = duckdb.connect()
     con.execute(
@@ -1291,9 +1291,9 @@ def test_gopher_quality_flags(spark):
     # independent Python replica over the shared fixture
     sf = "/root/testdata/sf0.001"
     fix = spark.read.parquet(f"{sf}/documents.parquet")
-    rows = {r["doc_id"]: r for r in textstats.gopher_quality_flags(
-        fix, text_col="text"
-    ).collect()}
+    rows = {
+        r["doc_id"]: r for r in textstats.gopher_quality_flags(fix).collect()
+    }
     stops = set(textstats.STOPWORDS["en"])
     for r in fix.select("doc_id", "text").collect():
         text = r["text"] or ""
@@ -1940,9 +1940,8 @@ def test_span_dedup_hot_gram_skew(spark):
     boilerplate gram repeated in EVERY doc, many times per doc — the
     worst-case key for any plan that hash-partitions raw windows by
     content.  Value contract: results are exact (vs an independent
-    per-doc computation of the interval union) and IDENTICAL between
-    the AQE-managed default and the forced broadcast attach
-    (``broadcast_dup=True``), across partitionings."""
+    per-doc computation of the interval union) and IDENTICAL across
+    partitionings."""
     import pandas as pd
 
     boiler = "COMMON-FOOTER-BOILERPLATE"[:24]
@@ -1970,14 +1969,12 @@ def test_span_dedup_hot_gram_skew(spark):
         assert n_chars == len(rows[d][1]), got[d]
         assert dup_chars >= 144, got[d]
     assert got[40][3] == 0 and got[40][4] == 0
-    # forced-broadcast mode and a hostile partitioning agree exactly
-    fb = sorted(
+    # a hostile partitioning agrees exactly
+    spread = sorted(
         tuple(r)
-        for r in dedup.duplicated_span_stats(
-            docs.repartition(13), broadcast_dup=True
-        ).collect()
+        for r in dedup.duplicated_span_stats(docs.repartition(13)).collect()
     )
-    assert fb == base
+    assert spread == base
 
 
 # ------------------------------------------------- duplicate-line removal
@@ -1985,9 +1982,8 @@ def test_span_dedup_hot_gram_skew(spark):
 
 def test_dedup_lines_crafted(spark):
     """Hand-checkable semantics: first occurrence kept in order, later
-    repeats dropped; blank lines preserved under the default (paragraph
-    structure is meaning) and collapsible under blank_lines='dedup';
-    empty/NULL docs normalize to ''."""
+    repeats dropped; blank lines preserved (paragraph structure is
+    meaning); empty/NULL docs normalize to ''."""
     rows = [
         (0, "a\nb\na\nc\nb\nd"),
         (1, "x\n\n\nx\n\ny"),
@@ -2004,13 +2000,6 @@ def test_dedup_lines_crafted(spark):
         3: "",
         4: "footer\nbody",
     }
-    blanks = {
-        r["doc_id"]: r["text"]
-        for r in textstats.dedup_lines(df, blank_lines="dedup").collect()
-    }
-    assert blanks[1] == "x\n\ny"
-    with pytest.raises(ValueError, match="blank_lines"):
-        textstats.dedup_lines(df, blank_lines="drop")
 
 
 DEDUP_LINES_SQL = """
@@ -2611,7 +2600,7 @@ def test_centroid_classifier_rejects_bad_input(spark):
     with pytest.raises(ValueError, match="empty centroids"):
         textstats.train_centroid_classifier(docs2, "lab", n_features=64)
     with pytest.raises(ValueError, match="hash_mode"):
-        textstats.hashed_count_features(docs2, 64, ["doc_id"], "text", "crc")
+        textstats.hashed_count_features(docs2, 64, ["doc_id"], "crc")
 
 
 # ------------------------------------------------------- image resize

@@ -12,7 +12,8 @@ Schema (BASELINE.json input_hint):
 
 Skew + gap features (FIXTURES.md F1):
 - heavy-tailed conv lengths — a few "hot" conversations are 100–1000×
-  longer than the median, exercising the salted-repartition path;
+  longer than the median (a hot conversation's gap-fill runs in one
+  task, ROADMAP direction 3);
 - ~2% of turns have ``ts = NULL`` → linear-interpolation gap-fill
   (reference analog: resampling to a common dt,
   /root/reference/ts_process/ts_library.py:896-962);

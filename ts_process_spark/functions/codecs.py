@@ -8,9 +8,9 @@ Scalable, In-Memory Time Series Database", VLDB 2015):
   (the paper's buckets assume seconds): 0 bits, 7, 9, 12, 32, 64 —
   delta-of-deltas are zigzag-encoded so negative gaps pack tight.
 - ``encode_gorilla`` / ``decode_gorilla``: XOR float64 compression —
-  '0' for identical value, '10' + meaningful bits when they fit the
-  previous leading/length window, '11' + 5-bit leading + 6-bit length +
-  bits otherwise.
+  '0' for identical value, '11' + 5-bit leading + 6-bit length +
+  meaningful bits otherwise.  The paper's '10' (reuse the previous
+  leading/length window) is never written; the decoder rejects it.
 
 Encoding is fully vectorized (the variable-length codes are expanded with
 a repeat/cumsum bit-scatter, then ``np.packbits``) — no per-element
@@ -33,25 +33,6 @@ import pyarrow as pa
 # ---------------------------------------------------------------------- bits
 
 
-def _bit_scatter(vals: np.ndarray, lens: np.ndarray) -> np.ndarray:
-    """Expand variable-length big-endian codes into a flat bit array.
-
-    vals[i] is emitted as lens[i] bits (MSB first). Fully vectorized.
-    """
-    vals = vals.astype(np.uint64)
-    lens = lens.astype(np.int64)
-    keep = lens > 0
-    vals, lens = vals[keep], lens[keep]
-    if len(vals) == 0:
-        return np.zeros(0, dtype=np.uint8)
-    total = int(lens.sum())
-    seg_id = np.repeat(np.arange(len(vals)), lens)
-    offsets = np.concatenate([[0], np.cumsum(lens)[:-1]])
-    j = np.arange(total) - offsets[seg_id]
-    shift = (lens[seg_id] - 1 - j).astype(np.uint64)
-    return ((vals[seg_id] >> shift) & np.uint64(1)).astype(np.uint8)
-
-
 def _clz64(x: np.ndarray) -> np.ndarray:
     """Vectorized count-leading-zeros for uint64 (no float round-trip)."""
     x = x.astype(np.uint64).copy()
@@ -70,10 +51,6 @@ def _ctz64(x: np.ndarray) -> np.ndarray:
 def _popcount64(x: np.ndarray) -> np.ndarray:
     b = np.frombuffer(np.ascontiguousarray(x, dtype=np.uint64).tobytes(), dtype=np.uint8)
     return np.unpackbits(b).reshape(-1, 8).sum(axis=1).reshape(-1, 8).sum(axis=1)
-
-
-def _pack(bits: np.ndarray, n_items: int) -> bytes:
-    return struct.pack("<I", n_items) + np.packbits(bits).tobytes()
 
 
 class _BitReader:
@@ -173,73 +150,17 @@ def _decode_dod_plain(buf: bytes) -> np.ndarray:
 # ------------------------------------------------------------------- gorilla
 
 
-def encode_gorilla(values: np.ndarray, optimal: bool = False) -> bytes:
+def encode_gorilla(values: np.ndarray) -> bytes:
     """float64 array → bytes. Layout: [n:uint32][v0:64][codes].
 
-    ``optimal=False`` (default, the hot path in the tier cascade) always
-    emits the '11' new-window code for a changed value — fully vectorized,
-    no per-element Python, a few % worse ratio than the window-reuse
-    variant.  ``optimal=True`` runs the paper's sequential window-reuse
-    chain (inherently order-dependent).  Both produce bitstreams the same
-    ``decode_gorilla`` reads.
+    A changed value always takes the '11' new-window code, never the
+    paper's '10' window reuse: the encode is fully vectorized, with no
+    per-element Python, at a few % worse ratio.  One segment of
+    ``encode_gorilla_batch`` (one copy of the bitstream layout, see
+    encode_dod).
     """
     arr = np.asarray(values, dtype=np.float64)
-    if not optimal:
-        # fast path delegates to the batch twin with one segment — one
-        # copy of the bitstream layout (see encode_dod)
-        return encode_gorilla_batch(
-            arr, np.array([len(arr)], dtype=np.int64)
-        )[0]
-    v = np.ascontiguousarray(arr).view(np.uint64)
-    n = len(v)
-    if n == 0:
-        return _pack(np.zeros(0, np.uint8), 0)
-    xors = v[1:] ^ v[:-1]
-    m = len(xors)
-    lz = np.minimum(_clz64(xors), 31)  # 5-bit field
-    tz = np.minimum(_ctz64(xors), 63)
-    sig = np.where(xors == 0, 0, 64 - lz - tz).astype(np.int64)
-
-    ctrl_v = np.zeros(m, np.uint64)
-    ctrl_l = np.zeros(m, np.int64)
-    hdr_v = np.zeros(m, np.uint64)
-    hdr_l = np.zeros(m, np.int64)
-    pay_v = np.zeros(m, np.uint64)
-    pay_l = np.zeros(m, np.int64)
-    # paper-faithful sequential window-reuse chain
-    prev_lz, prev_sig = -1, -1
-    lz_l, tz_l, sig_l, xors_l = lz.tolist(), tz.tolist(), sig.tolist(), xors.tolist()
-    for i in range(m):
-        x = xors_l[i]
-        if x == 0:
-            ctrl_v[i], ctrl_l[i] = 0, 1
-            continue
-        li, ti, si = lz_l[i], tz_l[i], sig_l[i]
-        if (
-            prev_lz >= 0
-            and prev_sig > 0
-            and li >= prev_lz
-            and ti >= 64 - prev_lz - prev_sig
-        ):
-            ctrl_v[i], ctrl_l[i] = 0b10, 2
-            shift = 64 - prev_lz - prev_sig
-            pay_v[i] = (x >> shift) & ((1 << prev_sig) - 1)
-            pay_l[i] = prev_sig
-        else:
-            ctrl_v[i], ctrl_l[i] = 0b11, 2
-            hdr_v[i] = (li << 6) | (si & 0x3F)  # 5b leading + 6b (len mod 64)
-            hdr_l[i] = 11
-            pay_v[i] = (x >> ti) & ((1 << si) - 1) if si < 64 else x
-            pay_l[i] = si
-            prev_lz, prev_sig = li, si
-    inter = np.empty(3 * m + 1, np.uint64)
-    inter_l = np.empty(3 * m + 1, np.int64)
-    inter[0], inter_l[0] = v[0], 64
-    inter[1::3], inter_l[1::3] = ctrl_v, ctrl_l
-    inter[2::3], inter_l[2::3] = hdr_v, hdr_l
-    inter[3::3], inter_l[3::3] = pay_v, pay_l
-    bits = _bit_scatter(inter, inter_l)
-    return _pack(bits, n)
+    return encode_gorilla_batch(arr, np.array([len(arr)], dtype=np.int64))[0]
 
 
 # -------------------------------------------------- chunked container
@@ -509,8 +430,8 @@ def encode_dod_batch(concat: np.ndarray, lengths: np.ndarray) -> list[bytes]:
 
 
 def encode_gorilla_batch(concat: np.ndarray, lengths: np.ndarray) -> list[bytes]:
-    """Batched fast-path ``encode_gorilla`` (always-'11' window codes):
-    byte-identical to encode_gorilla(..., optimal=False)."""
+    """Batched ``encode_gorilla`` (always-'11' window codes): one
+    vectorized pass, byte-identical blobs."""
     return _split(*_gorilla_blobs(concat, np.asarray(lengths, dtype=np.int64)))
 
 
@@ -527,22 +448,20 @@ def _decode_gorilla_plain(buf: bytes) -> np.ndarray:
     r = _BitReader(buf, 4)
     out[0] = r.read(64)
     prev = int(out[0])
-    lz = sig = 0
     for i in range(1, n):
-        c = r.read(1)
-        if c == 0:
+        if r.read(1) == 0:
             out[i] = prev
             continue
-        if r.read(1) == 0:  # '10' → reuse window
-            bits = r.read(sig)
-            x = bits << (64 - lz - sig)
-        else:  # '11' → new window
-            lz = r.read(5)
-            sig = r.read(6)
-            if sig == 0:
-                sig = 64
-            bits = r.read(sig)
-            x = bits << ((64 - lz - sig) if lz + sig < 64 else 0)
+        if r.read(1) == 0:
+            # no encoder here writes window reuse: in a stored blob the
+            # code means corruption or a foreign writer
+            raise ValueError(f"gorilla code '10' (window reuse) at value {i}")
+        lz = r.read(5)  # '11' → new window
+        sig = r.read(6)
+        if sig == 0:
+            sig = 64
+        bits = r.read(sig)
+        x = bits << ((64 - lz - sig) if lz + sig < 64 else 0)
         prev ^= x
         out[i] = prev
     return out.view(np.float64)

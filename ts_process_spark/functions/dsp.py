@@ -97,38 +97,30 @@ def _geo_scan(lam: complex, f: np.ndarray) -> np.ndarray:
     return out
 
 
-def linear_recurrence2(
-    c1: float, c2: float, f: np.ndarray, y1: float = 0.0, y2: float = 0.0
-) -> np.ndarray:
-    """y[n] = c1·y[n-1] + c2·y[n-2] + f[n] with y[-1]=y1, y[-2]=y2 —
+def linear_recurrence2(c1: float, c2: float, f: np.ndarray) -> np.ndarray:
+    """y[n] = c1·y[n-1] + c2·y[n-2] + f[n] with y[-1] = y[-2] = 0 —
     vectorized via the characteristic roots l1,l2 of z² − c1·z − c2:
-    the zero-state response is (l1·G1 − l2·G2)/(l1 − l2) with G_i the
-    geometric scan of f under l_i, and the initial state folds into
-    f[0], f[1] exactly.  Falls back to the literal loop when the roots
+    the response is (l1·G1 − l2·G2)/(l1 − l2) with G_i the geometric
+    scan of f under l_i.  Falls back to the literal loop when the roots
     (nearly) coincide (the split would cancel catastrophically)."""
     f = np.asarray(f, dtype=np.float64)
-    n = len(f)
-    if n == 0:
+    if len(f) == 0:
         return f.copy()
-    g = f.copy()
-    g[0] += c1 * y1 + c2 * y2
-    if n > 1:
-        g[1] += c2 * y1
     if c2 == 0.0:  # first-order
-        return np.real(_geo_scan(c1, g))
+        return np.real(_geo_scan(c1, f))
     disc = c1 * c1 + 4.0 * c2
     rt = np.sqrt(complex(disc))
     l1 = (c1 + rt) / 2.0
     l2 = (c1 - rt) / 2.0
     if abs(l1 - l2) < 1e-7 * max(1.0, abs(l1)):
-        return _linrec2_seq(c1, c2, g)
+        return _linrec2_seq(c1, c2, f)
     if disc < 0.0:
         # conjugate roots + real forcing ⇒ G2 = conj(G1):
         # y = (l1·G1 − l2·G2)/(l1 − l2) = Im(l1·G1)/Im(l1) — one scan
-        g1 = _geo_scan(l1, g)
+        g1 = _geo_scan(l1, f)
         return np.imag(l1 * g1) / l1.imag
-    g1 = _geo_scan(l1, g)
-    g2 = _geo_scan(l2, g)
+    g1 = _geo_scan(l1, f)
+    g2 = _geo_scan(l2, f)
     return np.real((l1 * g1 - l2 * g2) / (l1 - l2))
 
 
@@ -679,18 +671,6 @@ def _zpk2sos_paired(z: np.ndarray, p: np.ndarray, k: float) -> np.ndarray:
         sos[i, 3:] = a
     sos[0, :3] *= k
     return sos
-
-
-def sos_freq_response(sos: np.ndarray, w: np.ndarray) -> np.ndarray:
-    """|H(e^{jw})| of an SOS cascade (w in rad/sample) — used by the
-    design tests to pin passband ripple / stopband attenuation."""
-    ejw = np.exp(-1j * np.asarray(w, dtype=np.float64))
-    h = np.ones(len(ejw), dtype=complex)
-    for s in sos:
-        num = s[0] + s[1] * ejw + s[2] * ejw**2
-        den = s[3] + s[4] * ejw + s[5] * ejw**2
-        h *= num / den
-    return np.abs(h)
 
 
 import functools

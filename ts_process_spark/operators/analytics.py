@@ -254,7 +254,6 @@ def plan_synchronization(
     stamp_s: float | None,
     eq_time_s: float,
     leading: float,
-    sync_end_time: bool = True,
 ) -> dict[str, list[tuple[str, int]]]:
     """Reference synchronize_all_stations
     (process_timeseries.py:45-141) as a pure plan: given per-station
@@ -292,14 +291,13 @@ def plan_synchronization(
             n[o] += num
 
     # 2. truncate everyone to the min common duration
-    if sync_end_time:
-        target = min(dt[s] * n[s] for s in info)
-        for s in info:
-            excess = dt[s] * n[s] - target
-            num = int(excess / dt[s])
-            if 0 < num < n[s]:
-                ops[s].append(("cut_end", num))
-                n[s] -= num
+    target = min(dt[s] * n[s] for s in info)
+    for s in info:
+        excess = dt[s] * n[s] - target
+        num = int(excess / dt[s])
+        if 0 < num < n[s]:
+            ops[s].append(("cut_end", num))
+            n[s] -= num
 
     # 3. one-sample repair: pad any station 1 short of the longest
     total = max(n.values())
@@ -316,7 +314,6 @@ def synchronization_plan_df(
     stamp_s: float | None = None,
     eq_time_s: float = 0.0,
     leading: float = 0.0,
-    sync_end_time: bool = True,
 ) -> DataFrame:
     """plan_synchronization as a DataFrame over a per-station (station,
     dt, n) table — NO driver collect (round-3 VERDICT ask #7): which
@@ -364,20 +361,19 @@ def synchronization_plan_df(
             ops = F.when(is_obs, mk("pad_front", num)).otherwise(empty)
             n1 = F.when(is_obs, F.col("n") + num).otherwise(F.col("n"))
     p1 = per.select("station", "dt", ops.alias("ops"), n1.alias("n"))
-    if sync_end_time:
-        tgt = p1.agg(F.min(F.col("dt") * F.col("n")).alias("_target"))
-        p1 = p1.crossJoin(F.broadcast(tgt))
-        excess = F.col("dt") * F.col("n") - F.col("_target")
-        num = (excess / F.col("dt")).cast("int")
-        hit = (num > 0) & (num < F.col("n"))
-        p1 = p1.select(
-            "station",
-            "dt",
-            F.when(
-                hit, F.concat(F.col("ops"), mk("cut_end", num))
-            ).otherwise(F.col("ops")).alias("ops"),
-            F.when(hit, F.col("n") - num).otherwise(F.col("n")).alias("n"),
-        )
+    tgt = p1.agg(F.min(F.col("dt") * F.col("n")).alias("_target"))
+    p1 = p1.crossJoin(F.broadcast(tgt))
+    excess = F.col("dt") * F.col("n") - F.col("_target")
+    num = (excess / F.col("dt")).cast("int")
+    hit = (num > 0) & (num < F.col("n"))
+    p1 = p1.select(
+        "station",
+        "dt",
+        F.when(
+            hit, F.concat(F.col("ops"), mk("cut_end", num))
+        ).otherwise(F.col("ops")).alias("ops"),
+        F.when(hit, F.col("n") - num).otherwise(F.col("n")).alias("n"),
+    )
     tot = p1.agg(F.max("n").alias("_total"))
     p1 = p1.crossJoin(F.broadcast(tot))
     one_short = F.col("n") == F.col("_total") - 1

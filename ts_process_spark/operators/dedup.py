@@ -785,7 +785,6 @@ def span_windows(df: DataFrame, hash_mode: str) -> DataFrame:
 def duplicated_span_stats(
     df: DataFrame,
     hash_mode: str = "xxhash64",
-    broadcast_dup: bool = False,
 ) -> DataFrame:
     """Per-document duplicated-span statistics: which fraction of each
     doc's characters is covered by SPAN_K-char windows whose content
@@ -805,22 +804,17 @@ def duplicated_span_stats(
     counting is a partial-agg groupBy on a 64-bit hash — a boilerplate
     gram occurring 10⁸ times is collapsed to ONE row per map task
     before the exchange, so the agg side never skews; (3) the dup-flag
-    attach: by default a join AQE manages at runtime — when the
-    distinct duplicated-hash set turns out small (post-shuffle stats),
-    AQE converts it to a broadcast join on its own, and when it is
+    attach is a join AQE manages at runtime — when the distinct
+    duplicated-hash set turns out small (post-shuffle stats), AQE
+    converts it to a broadcast join on its own, and when it is
     data-sized (real web corpora: every shared template gram
     qualifies, easily 10⁹+ hashes — too big to broadcast), it stays a
-    shuffle join with AQE's skew-split as the hot-gram backstop.
-    ``broadcast_dup=True`` FORCES the map-side broadcast attach — the
-    window stream is then never exchanged on ``h`` at all (a hot gram
-    costs one hash probe per window) — for callers that KNOW their
-    duplicated-hash set fits executor memory; forcing it on an
-    unbounded corpus is an OOM, which is why it is not the default
-    (review r7); (4) totals and the interval union ride ONE
-    id-partitioned pass (a conditional running-max window plus a
-    clustering-satisfied groupBy — no separate ``tot`` aggregate, no
-    second consumer scan); (5) the per-doc sort is bounded by
-    len/stride rows.  No collect, no Python, no all-pairs."""
+    shuffle join with AQE's skew-split as the hot-gram backstop; (4)
+    totals and the interval union ride ONE id-partitioned pass (a
+    conditional running-max window plus a clustering-satisfied groupBy —
+    no separate ``tot`` aggregate, no second consumer scan); (5) the
+    per-doc sort is bounded by len/stride rows.  No collect, no Python,
+    no all-pairs."""
     # Parallelism comes from span_windows' own round-robin spread of the
     # (id, text) rows BEFORE the explode+hash (r9 — the old post-explode
     # spread here parallelized only the consumers of already-hashed
@@ -837,8 +831,6 @@ def duplicated_span_stats(
         .where(F.col("occ") >= 2)
         .select("h", F.lit(True).alias("is_dup"))
     )
-    if broadcast_dup:
-        dup = F.broadcast(dup)
     from pyspark.sql.window import Window
 
     prev = (

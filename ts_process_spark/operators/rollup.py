@@ -132,6 +132,11 @@ def rollup_raw_to_1m(raw: DataFrame, hash_name: str = "xxhash64") -> DataFrame:
     collision-resistant surrogate for hashing the concatenated texts;
     the raw-grain per-turn text equality check stays at raw grain,
     tests/test_rollup.py::test_generator_matches_oracle_frame).
+
+    A raw row with a NULL ``conv_id`` or ``turn_idx`` fails the job
+    with ``raise_error`` naming the column: such a row has no tier key
+    and no place in its conversation's turn order.  The check rides the
+    scan's projection and keeps each column's nullability.
     """
     h = _hash_sql(hash_name)
     # NULL text normalizes to '' AT THE OPERATOR (not just in callers):
@@ -139,8 +144,11 @@ def rollup_raw_to_1m(raw: DataFrame, hash_name: str = "xxhash64") -> DataFrame:
     # sum_text_len can go NULL against the non-null tier schema, and a
     # None text_len reaches the Gorilla blob as NaN (review finding)
     slim = raw.selectExpr(
-        "conv_id",
-        "turn_idx",
+        *(
+            f"coalesce({c}, raise_error('rollup_raw_to_1m: raw row with NULL"
+            f" {c}')) AS {c}"
+            for c in ("conv_id", "turn_idx")
+        ),
         "ts",
         "CAST(length(coalesce(text, '')) AS BIGINT) AS text_len",
         f"{h}(coalesce(text, '')) AS th",
@@ -198,7 +206,6 @@ def rollup_cascade(
     child: DataFrame,
     tier: str,
     hash_name: str = "xxhash64",
-    max_blob_bytes: int | None = None,
 ) -> DataFrame:
     """Aggregate a finer tier (1m→1h or 1h→1d). ``tier`` ∈ {'1h','1d'}.
 
@@ -212,28 +219,14 @@ def rollup_cascade(
     byte slices of the blob past the 8-byte header.  The aggregate joins
     each kind of part in bucket order with ``listagg``.
 
-    ``max_blob_bytes`` bounds the pathological hot-conversation row: a
-    conv whose day concatenates gigabytes of child blobs would otherwise
-    make one giant row.  When set, child blob chunks are kept in bucket
-    order until the byte budget is reached (a running-sum window over
-    the children of each parent bucket nulls the later parts, which
-    ``listagg`` skips; keeping none still yields a zero-chunk header) and
-    the drop is SURFACED as a ``blob_chunks_dropped`` column (the
-    no-silent-caps rule — aggregates stay exact either way; only replay
-    payload is truncated).  Default None = lossless.
-
-    Drop accounting is in LEAF (1m-chunk) units at every tier (ADVICE
-    r4: summing "own drops" in immediate-child units with propagated
-    grandchild counts produced a mixed-unit number that under-read real
-    data loss): every cascade row carries ``blob_n_chunks`` = leaf
-    chunks inside its blob (a 1m child without the column counts 1), a
-    dropped child is weighted by ITS leaf count, and the propagated
-    child counters are already leaf-unit by induction."""
+    Every cascade row carries ``blob_n_chunks``, the leaf (1m) chunks
+    inside its blob: a 1m child counts 1.  Blobs are never capped, so a
+    parent blob holds every point of its bucket; what bounds one is
+    ``_le4`` (a chunk count or length past 2^31 raises) and Spark's
+    binary ``concat``, which refuses a result past its array limit."""
     h = _hash_sql(hash_name)
     parent = f"date_trunc('{TIERS[tier]}', bucket_ts)"
-    child_cols = set(child.columns)
-    has_child_drops = "blob_chunks_dropped" in child_cols
-    if "blob_n_chunks" in child_cols:
+    if "blob_n_chunks" in child.columns:
         # a cascade child's blob is a container: byte slices past its
         # 8-byte header are its length table and its body
         n = "blob_n_chunks"
@@ -252,13 +245,6 @@ def rollup_cascade(
             "val_lens": _le4("length(val_blob)"),
             "val_body": "val_blob",
         }
-    keep = (
-        "true"
-        if max_blob_bytes is None
-        else "sum(length(ts_blob) + length(val_blob)) OVER (PARTITION BY"
-        f" conv_id, {parent} ORDER BY bucket_ts ROWS UNBOUNDED PRECEDING)"
-        f" <= {int(max_blob_bytes)}"
-    )
     rows = child.selectExpr(
         "conv_id",
         f"{parent} AS parent_ts",
@@ -273,20 +259,7 @@ def rollup_cascade(
         "last_ts",
         "text_hash",
         f"{n} AS n",
-        *(["blob_chunks_dropped"] if has_child_drops else []),
-        f"{keep} AS keep",
         *(f"{e} AS {k}" for k, e in parts.items()),
-    )
-    # uncapped, keep is the literal true and these CASEs fold away
-    rows = rows.selectExpr(
-        "*",
-        "CASE WHEN keep THEN n ELSE 0 END AS n_kept",
-        *(f"CASE WHEN keep THEN {k} END AS {k}_kept" for k in parts),
-    )
-    # no-silent-caps, transitively: a capped child tier's drop counter
-    # (already leaf-unit) survives further cascading
-    dropped = ([] if max_blob_bytes is None else ["sum(n - n_kept)"]) + (
-        ["coalesce(sum(blob_chunks_dropped), 0)"] if has_child_drops else []
     )
     in_order = "WITHIN GROUP (ORDER BY bucket_ts)"
     grouped = rows.groupBy("conv_id", "parent_ts").agg(
@@ -303,15 +276,10 @@ def rollup_cascade(
             " AS text_hash"
         ),
         *(
-            F.expr(f"coalesce(listagg({k}_kept, X'') {in_order}, X'') AS {k}")
+            F.expr(f"coalesce(listagg({k}, X'') {in_order}, X'') AS {k}")
             for k in parts
         ),
-        F.expr("sum(n_kept) AS blob_n_chunks"),
-        *(
-            [F.expr(" + ".join(dropped) + " AS blob_chunks_dropped")]
-            if dropped
-            else []
-        ),
+        F.expr("sum(n) AS blob_n_chunks"),
     )
     return grouped.selectExpr(
         "conv_id",
@@ -334,7 +302,6 @@ def rollup_cascade(
             for b in ("ts", "val")
         ),
         "blob_n_chunks",
-        *(["blob_chunks_dropped"] if dropped else []),
     )
 
 

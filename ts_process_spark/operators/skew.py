@@ -2,11 +2,8 @@
 
 AQE's skew-join splitting fixes skewed *joins*, but a skewed
 ``applyInPandas`` group (one hot conversation with 10⁸ turns) still
-lands on one task and can exceed executor memory.  Two tools:
+lands on one task and can exceed executor memory.  The tool for that:
 
-- ``salted_repartition``: spread a hot key over ``salt_n`` partitions
-  for *associative* downstream work (the classic salt; pair with a
-  second-stage combine).
 - ``chunked_apply``: split each group into fixed-size chunks **with
   overlap regions on both sides**, run a sequential kernel per chunk,
   discard the overlap, and reassemble.  For IIR-style kernels
@@ -28,14 +25,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
-
-
-def salted_repartition(df: DataFrame, key: str, salt_n: int) -> DataFrame:
-    """Repartition by (key, random-but-deterministic salt) — the salt is
-    a hash of a row-identifying column set, not rand(), so re-runs are
-    stable."""
-    salt = F.pmod(F.xxhash64(*df.columns), F.lit(salt_n))
-    return df.repartition(F.col(key), salt)
 
 
 def chunked_apply(

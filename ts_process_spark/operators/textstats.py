@@ -170,14 +170,12 @@ def with_fingerprint(df: DataFrame, hash_mode: str = "xxhash64") -> DataFrame:
 def bm25_scores(
     df: DataFrame,
     query_terms: list[str],
-    k1: float = 1.2,
-    b: float = 0.75,
     idf_quant: int | None = None,
 ) -> DataFrame:
     """Okapi BM25 relevance of every document against a small fixed
     query-term list — the standard retrieval/curation scorer (published
     formula; idf = ln(1 + (N − df + 0.5)/(df + 0.5)), the Lucene
-    non-negative variant).
+    non-negative variant, with the usual k1 = 1.2 and b = 0.75).
 
     Scale shape: per-term tf is `size(filter(tokens, = term))` — pure
     array expressions in the scan projection, NO explode and NO shuffle
@@ -203,6 +201,7 @@ def bm25_scores(
     Output: (id, doc_len, tf_0..tf_{T-1}, bm25)."""
     if not query_terms:
         raise ValueError("query_terms must be non-empty")
+    k1, b = 1.2, 0.75
 
     def _tf(term: str) -> Column:
         # closure factory, NOT a default arg: a 2-param lambda would be
@@ -412,7 +411,6 @@ def pack_documents(
 
 def gopher_quality_flags(
     df: DataFrame,
-    text_col: str = "text",
 ) -> DataFrame:
     """Gopher-style document quality rules (Rae et al. 2021, published
     heuristics) as PURE column expressions — one scan, no shuffle, no
@@ -429,7 +427,7 @@ def gopher_quality_flags(
     ≤ 0.9; ellipsis-terminated-line fraction ≤ 0.3; fraction of words
     containing an alphabetic character ≥ 0.8; ≥ 2 English stopword
     hits; duplicate-line fraction ≤ 0.3."""
-    txt = F.coalesce(F.col(text_col), F.lit(""))  # NULL text == empty doc
+    txt = F.coalesce(F.col("text"), F.lit(""))  # NULL text == empty doc
     # r9: tokenize and line-split ONCE into materialized columns — the
     # rule expressions each re-derived tokens()/split() from the raw
     # text (≈8 tokenizations per row, all CodegenFallback HOFs) — and
@@ -440,7 +438,7 @@ def gopher_quality_flags(
     # the materialized arrays — same flags, bit for bit.
     pre = (
         _ensure_parallelism(df)
-        .withColumn("_toks", tokens(F.col(text_col)))
+        .withColumn("_toks", tokens(F.col("text")))
         .withColumn(
             "_lines", F.filter(F.split(txt, "\n"), lambda ln: F.trim(ln) != "")
         )
@@ -579,16 +577,15 @@ def with_pii_flags(df: DataFrame) -> DataFrame:
     )
 
 
-def dedup_lines(df: DataFrame, blank_lines: str = "keep") -> DataFrame:
+def dedup_lines(df: DataFrame) -> DataFrame:
     """Within-document duplicate-line removal — the CCNet/RefinedWeb
     cleaning TRANSFORM behind the Gopher ``ok_dup_lines`` flag this
     module already computes: keep the FIRST occurrence of every
     distinct line, preserve original order, drop later repeats
     (navigation chrome, repeated headers, boilerplate footers).
 
-    ``blank_lines='keep'`` (default) preserves every empty line —
-    paragraph structure is meaning, and "" repeating is not
-    boilerplate; ``'dedup'`` treats "" like any other line.
+    Every empty line is kept — paragraph structure is meaning, and ""
+    repeating is not boilerplate.
 
     Returns ``(doc_id, text)`` with the rewritten text for EVERY input
     doc (NULL text → empty string, matching the engine-wide coalesce
@@ -604,21 +601,15 @@ def dedup_lines(df: DataFrame, blank_lines: str = "keep") -> DataFrame:
     exactly by the original line index, never by engine row order.
     (A row_number-window variant was rejected: it must SHUFFLE every
     raw duplicate line to rank it, forfeiting the combine.)"""
-    if blank_lines not in ("keep", "dedup"):
-        raise ValueError("blank_lines must be 'keep' or 'dedup'")
     lines = df.select(
         F.col("doc_id").alias("id"),
         F.posexplode(
             F.split(F.coalesce(F.col("text"), F.lit("")), "\n", -1)
         ).alias("pos", "line"),
     )
-    # blanks in 'keep' mode get a per-position discriminator so the
-    # dedup aggregate cannot collapse them (paragraph breaks survive)
-    disc = (
-        F.when(F.col("line") == "", F.col("pos"))
-        if blank_lines == "keep"
-        else F.lit(None).cast("int")
-    )
+    # blanks get a per-position discriminator so the dedup aggregate
+    # cannot collapse them (paragraph breaks survive)
+    disc = F.when(F.col("line") == "", F.col("pos"))
     kept = (
         lines.withColumn("disc", disc)
         .groupBy("id", "line", "disc")
@@ -648,7 +639,6 @@ def hashed_count_features(
     df: DataFrame,
     n_features: int,
     id_cols: list[str],
-    text_col: str = "text",
     hash_mode: str = "xxhash64",
     spread_by_ids: bool = False,
 ) -> DataFrame:
@@ -679,11 +669,11 @@ def hashed_count_features(
     # (per-doc scoring); a per-LABEL train pass must stay round-robin
     # or the whole corpus lands on n_labels partitions.
     src = _ensure_parallelism(
-        df.select(*id_cols, F.col(text_col)),
+        df.select(*id_cols, F.col("text")),
         *(id_cols if spread_by_ids else []),
     )
     return (
-        src.select(*id_cols, F.explode(tokens(F.col(text_col))).alias("_w"))
+        src.select(*id_cols, F.explode(tokens(F.col("text"))).alias("_w"))
         .select(*id_cols, feat.alias("feature"))
         .groupBy(*id_cols, "feature")
         .agg(F.count(F.lit(1)).alias("x"))

@@ -60,8 +60,7 @@ TIER_ORDER = ["1m", "1h", "1d"]
 
 # on-disk schema of each tier's partitions: every tier read carries it,
 # so reading one never runs a parquet schema-inference job.  The
-# coarser tiers append rollup_cascade's leaf-chunk count (backfill never
-# caps blobs, so there is no blob_chunks_dropped column)
+# coarser tiers append rollup_cascade's leaf-chunk count
 _CASCADE_SCHEMA = T.StructType(
     TIER_SCHEMA.fields + [T.StructField("blob_n_chunks", T.LongType(), False)]
 )

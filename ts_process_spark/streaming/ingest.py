@@ -6,13 +6,15 @@ Shape: file-source stream of transcript turns → 10-minute watermark →
 tumbling 1-minute window per conv_id → append-mode aggregates.  The
 streaming tier carries the JVM-side aggregate columns only (counts,
 sums, peaks); blob encoding and gap-fill need a conversation's
-neighborhood and therefore stay in the batch cascade, which
-periodically compacts the streaming tier (the classic lambda handoff —
-idempotent because both paths write the same keys).
+neighborhood and therefore stay in the batch cascade.  Both paths key
+rows by (conv_id, bucket_ts); nothing here writes the streaming rows
+into the batch tiers or reads them back.
 
-Late data: rows later than the watermark are dropped by the stream and
-healed by the next batch backfill over the same partition — the batch
-cascade is the source of truth; streaming is a freshness cache.
+Late data: rows later than the watermark are dropped by the stream.
+Nothing heals them: ``plans.backfill.backfill`` skips every (tier,
+bucket) that already has a lineage record, so a late row lands in the
+batch tiers only if its bucket is still pending when the backfill runs.
+A resume that notices changed raw input is ROADMAP direction 1.
 """
 
 from __future__ import annotations
@@ -35,9 +37,8 @@ def stream_rollup_1m(raw: DataFrame) -> DataFrame:
     """Windowed streaming aggregate under a 10-minute watermark; append
     output mode (finalized windows only)."""
     # NULL text normalizes to '' exactly like the batch tier
-    # (rollup_raw_to_1m): both paths write the same keys, so they must
-    # agree on NULL-text buckets or the batch compaction overwrites the
-    # streaming row with different values (review finding)
+    # (rollup_raw_to_1m): both paths key rows by (conv_id, bucket_ts),
+    # so a NULL-text bucket must carry the same values in both
     tlen = F.length(F.coalesce(F.col("text"), F.lit("")))
     return (
         raw.where(F.col("ts").isNotNull())
