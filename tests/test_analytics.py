@@ -141,26 +141,6 @@ def test_fas_matches_kernel(sig_df, sig_pdf):
     np.testing.assert_array_equal([r["amplitude"] for r in rows], amp)
 
 
-def test_asof_join_grouped(spark):
-    left = spark.createDataFrame(
-        pd.DataFrame(
-            {"k": [1, 1, 1, 2, 2], "t": [5.0, 10.0, 20.0, 3.0, 9.0],
-             "lv": ["a", "b", "c", "d", "e"]}
-        )
-    )
-    right = spark.createDataFrame(
-        pd.DataFrame({"k": [1, 1, 2], "rt": [4.0, 9.0, 100.0], "rv": [40, 90, 7]})
-    )
-    out = analytics.asof_join_grouped(
-        left, right, by="k", left_on="t", right_on="rt", right_cols=["rv"]
-    )
-    got = {(r["k"], r["t"]): r["rv"] for r in out.collect()}
-    assert got == {
-        (1, 5.0): 40, (1, 10.0): 90, (1, 20.0): 90,
-        (2, 3.0): None, (2, 9.0): None,
-    }
-
-
 def test_baseline_signals_matches_kernel(sig_df, sig_pdf):
     out = analytics.baseline_signals(
         sig_df.where(F.col("series_id") == "lowpass-h1"), order=5
@@ -255,56 +235,6 @@ def test_synchronize_stations_matches_reference_order(spark):
         for c in ("acc", "vel", "dis"):
             np.testing.assert_array_equal(g[c].to_numpy(), want[c],
                                           err_msg=f"{st}-{comp}:{c}")
-
-
-def test_asof_join_grouped_matches_window_form(spark):
-    """The scalable as-of join (cogrouped merge_asof) must agree with
-    the registry's SQL-checkable window form on the shared testdata.
-    Right side deduped to one order per (custkey, date) so both forms'
-    tie-breaks coincide."""
-    import __spark_entry__ as E
-
-    sf_dir = "/root/testdata/sf0.001"
-    ev = (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
-        .withColumn("ts", F.col("ts").cast("timestamp"))
-        .select(F.col("user_id").alias("custkey"), "ts", "event_id")
-    )
-    orders = (
-        spark.read.parquet(f"{sf_dir}/orders.parquet")
-        .select(
-            F.col("o_custkey").alias("custkey"),
-            F.col("o_orderdate").cast("timestamp").alias("o_orderdate"),
-            "o_orderkey",
-        )
-        .groupBy("custkey", "o_orderdate")
-        .agg(F.max("o_orderkey").alias("o_orderkey"))
-    )
-    grouped = analytics.asof_join_grouped(
-        ev, orders, by="custkey", left_on="ts", right_on="o_orderdate",
-        right_cols=["o_orderkey"],
-    )
-    got = {
-        r["event_id"]: r["o_orderkey"]
-        for r in grouped.collect()
-        if r["o_orderkey"] is not None
-    }
-
-    # window form over the same deduped right side
-    from pyspark.sql import Window
-
-    cand = ev.join(orders, "custkey").where(F.col("o_orderdate") <= F.col("ts"))
-    w = Window.partitionBy("event_id").orderBy(
-        F.col("o_orderdate").desc(), F.col("o_orderkey").desc()
-    )
-    want = {
-        r["event_id"]: r["o_orderkey"]
-        for r in cand.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .collect()
-    }
-    assert len(want) > 100
-    assert got == want
 
 
 def test_synchronization_plan_df_matches_dict_plan(spark):

@@ -22,6 +22,7 @@ from ts_process_spark.plans.backfill import (
     verify_lineage,
     with_bucket,
 )
+from ts_process_spark.plans.curation import StageLedger
 
 N_CONVS = 8
 N_BUCKETS = 4
@@ -46,6 +47,25 @@ def direct(spark, raw, tmp_path_factory):
         df.write.parquet(str(root / tier))
         out[tier] = spark.read.parquet(str(root / tier))
     return out
+
+
+def test_lineage_files_share_one_format(tmp_path):
+    """The tier lineage and the curation stage ledger append one JSON
+    object per line through the same helper, and a batch holding a
+    record that fails to encode appends none of its records."""
+    tables = TableSet(str(tmp_path))
+    ledger = StageLedger(str(tmp_path / "curation"))
+    rec = {"tier": "1m", "bucket_id": 0, "rows_out": 3, "value_hash": -7}
+    tables.append_lineage([rec, rec])
+    ledger.append(rec)
+    ledger.append(rec)
+    want = (json.dumps(rec) + "\n") * 2
+    for path in (tables.lineage_path, ledger.lineage_path):
+        with open(path) as f:
+            assert f.read() == want
+    with pytest.raises(TypeError):
+        tables.append_lineage([rec, {"bad": object()}])
+    assert tables.read_lineage() == ledger.read_lineage() == [rec, rec]
 
 
 def _tier_frame(df):

@@ -3,12 +3,13 @@
 Every module-level function, class and assignment in ``ts_process_spark``
 must be named somewhere besides its own definition: in the package, the
 jobs, tools, tests, perfbench or the root-level scripts.  A name that
-occurs exactly once across those ``.py`` files is a definition nothing
-calls, and should be deleted rather than kept alive.
+code names exactly once across those ``.py`` files is a definition
+nothing calls, and should be deleted rather than kept alive.
 
-The check is lexical (a count of ``\\w+`` tokens, comments and strings
-included), so it errs towards keeping code: a name cited only in a
-comment elsewhere still counts as used.  No Spark session is needed.
+Only code counts, read from the syntax tree: identifiers, attributes,
+imports, f-string fields and identifier-only string literals (dynamic
+lookups).  A name cited in a comment or a docstring keeps nothing
+alive.  No Spark session is needed.
 
 Options regrow the same way: a defaulted parameter that no call ever
 passes is a constant with a name, and any branch it selects never runs.
@@ -40,11 +41,25 @@ REFERENCE = "reference capability with a COVERAGE.md row"
 ORACLE = "oracle twin or oracle switch of a production path"
 DRIVER = "only driver of a public path"
 TEST_HOOK = "crash injection, or a size or subset tests cut to test scale"
-FIXTURE = "encoder the package's own decoder is tested against"
+FIXTURE = "fixture source (encoder or generator) tests build inputs with"
 
 TEST_ONLY_DEFINITIONS = {
     "encode_avi": FIXTURE,
     "encode_png": FIXTURE,
+    "encode_jpeg": FIXTURE,
+    "encode_jpeg_progressive": FIXTURE,
+    "encode_gif": FIXTURE,
+    "signals": FIXTURE,
+    "derivative": REFERENCE,
+    "extract_video_metadata": REFERENCE,
+    "sample_video_frames": REFERENCE,
+    "sample_by_rate": REFERENCE,
+    "pq_train_kmeans": REFERENCE,
+    "read_bbp": REFERENCE,
+    "read_bbp_bulk": REFERENCE,
+    "read_hercules": REFERENCE,
+    "hercules_to_bbp": REFERENCE,
+    "write_bbp": REFERENCE,
     "interp_fft": REFERENCE,
     "get_periods": REFERENCE,
     "resample_signals": REFERENCE,
@@ -62,6 +77,10 @@ TEST_ONLY_DEFINITIONS = {
     "write_hercules": REFERENCE,
     "station_to_signal_table": REFERENCE,
     "simhash_pairs_exact": ORACLE,
+    "encode_dod": ORACLE,
+    "encode_gorilla": ORACLE,
+    "concat_blobs": ORACLE,
+    "plan_synchronization": ORACLE,
     "SQL_SESSIONIZE": ORACLE,
     "SQL_PRICING_SUMMARY": ORACLE,
     "SQL_TOP3_PER_SUPPLIER": ORACLE,
@@ -123,10 +142,6 @@ TEST_ONLY_PARAMETERS = {
     "filter_signals(chunk_size)": TEST_HOOK,
     "filter_signals(chunk_overlap)": TEST_HOOK,
     "_bucket_pairs(max_bucket)": TEST_HOOK,
-    # outside tests bucket_cap_metrics is named only in comments: no
-    # production run records these metrics yet
-    "bucket_cap_metrics(max_bucket)": TEST_HOOK,
-    "bucket_cap_metrics(salt_col)": TEST_HOOK,
     "wordset_jaccard_pairs(allow_unblocked)": TEST_HOOK,
     "connected_components(max_iter)": TEST_HOOK,
     "transcripts(median_turns)": TEST_HOOK,
@@ -160,12 +175,50 @@ def _module_level_names(tree: ast.Module):
                     yield sub.id, node.lineno
 
 
+def _docstrings(tree: ast.Module):
+    for node in ast.walk(tree):
+        if isinstance(node, (ast.Module, ast.ClassDef, ast.FunctionDef,
+                             ast.AsyncFunctionDef)):
+            first = node.body[0] if node.body else None
+            if (isinstance(first, ast.Expr)
+                    and isinstance(first.value, ast.Constant)
+                    and isinstance(first.value.value, str)):
+                yield first.value
+
+
+def _code_names(source: str) -> Counter:
+    """How often code in ``source`` names each identifier: ``Name`` ids
+    (f-string fields included), ``Attribute`` attrs, imported names,
+    ``def``/``class`` names, and string constants that are exactly an
+    identifier (dynamic lookups such as ``getattr(mod, "name")``).
+    Comments and docstrings name nothing."""
+    tree = ast.parse(source)
+    docstrings = set(map(id, _docstrings(tree)))
+    names = Counter()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Name):
+            names[node.id] += 1
+        elif isinstance(node, ast.Attribute):
+            names[node.attr] += 1
+        elif isinstance(node, ast.alias):
+            names.update(node.name.split("."))
+            if node.asname:
+                names[node.asname] += 1
+        elif isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef,
+                               ast.ClassDef)):
+            names[node.name] += 1
+        elif (isinstance(node, ast.Constant) and isinstance(node.value, str)
+              and node.value.isidentifier() and id(node) not in docstrings):
+            names[node.value] += 1
+    return names
+
+
 def _unreferenced(files) -> dict[str, str]:
-    """Each package definition named at most once across ``files``
+    """Each package definition code names at most once across ``files``
     (its own definition), mapped to where it is defined."""
-    tokens = Counter()
+    named = Counter()
     for path in files:
-        tokens.update(re.findall(r"\w+", path.read_text()))
+        named.update(_code_names(path.read_text()))
 
     unreferenced = {}
     for path in sorted(PACKAGE.rglob("*.py")):
@@ -173,10 +226,33 @@ def _unreferenced(files) -> dict[str, str]:
         for name, lineno in _module_level_names(tree):
             if name.startswith("__") and name.endswith("__"):
                 continue
-            if tokens[name] <= 1:
+            if named[name] <= 1:
                 rel = path.relative_to(REPO)
                 unreferenced[name] = f"{rel}:{lineno} {name}"
     return unreferenced
+
+
+def test_only_code_counts_as_naming():
+    names = _code_names('''"""Module docstring citing in_module_doc."""
+from pkg import imported_name
+from pkg.sub import orig as alias_name
+
+# in_comment is cited here
+
+
+class Box:
+    """in_class_doc"""
+
+    def f(self):
+        """Function docstring citing in_func_doc."""
+        return mod.attr_name, f"{fstring_name}", "lookup_name", "two words"
+''')
+    for cited in ("in_module_doc", "in_comment", "in_class_doc",
+                  "in_func_doc", "two", "words"):
+        assert names[cited] == 0, cited
+    for used in ("imported_name", "alias_name", "attr_name", "fstring_name",
+                 "lookup_name", "Box", "f"):
+        assert names[used] == 1, used
 
 
 def test_every_package_definition_is_named_elsewhere():

@@ -660,49 +660,3 @@ def rotd50_stations(
         .groupBy("station")
         .applyInPandas(fn, schema=ROTD50_SCHEMA)
     )
-
-
-def asof_join_grouped(
-    left: DataFrame,
-    right: DataFrame,
-    by: str,
-    left_on: str,
-    right_on: str,
-    right_cols: list[str],
-) -> DataFrame:
-    """Scalable backward as-of join: cogrouped applyInPandas running
-    pd.merge_asof per key — sort-merge within groups, equi-partition
-    across keys (the engine's answer to SURVEY §2.3 J1 at scale; the
-    window-function form in queries_ts.q_asof_join is the
-    SQL-checkable variant)."""
-    out_schema = T.StructType(
-        list(left.schema.fields)
-        + [right.schema[c] for c in right_cols]
-    )
-    out_names = [f.name for f in out_schema.fields]
-    left_names = {f.name for f in left.schema.fields}  # plain set: the UDF
-    # closure must not capture the DataFrames themselves (SPARK-5063)
-
-    def fn(l: pd.DataFrame, r: pd.DataFrame) -> pd.DataFrame:
-        if l.empty:
-            return pd.DataFrame(columns=out_names)
-        l = l.sort_values(left_on)
-        if r.empty:
-            for c in right_cols:
-                l[c] = None
-            return l
-        r = r.sort_values(right_on)[[right_on] + right_cols]
-        merged = pd.merge_asof(
-            l, r, left_on=left_on, right_on=right_on, direction="backward",
-            suffixes=("", "_r"),
-        )
-        drop = [right_on + "_r"] if right_on + "_r" in merged.columns else (
-            [right_on] if right_on not in left_names else []
-        )
-        return merged.drop(columns=drop, errors="ignore")
-
-    return (
-        left.groupBy(by)
-        .cogroup(right.groupBy(by))
-        .applyInPandas(fn, schema=out_schema)
-    )

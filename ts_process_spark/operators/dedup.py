@@ -39,11 +39,6 @@ def hash60(col: Column) -> Column:
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
 
-# _ensure_parallelism lives in textstats (bottom of the operator import
-# graph) since r9; imported above and re-exported here for existing
-# callers (operators.similarity, tools/).
-
-
 # ---------------------------------------------------------------- exact
 
 
@@ -222,14 +217,15 @@ def _bucket_pairs(
 
     Buckets larger than ``max_bucket`` are degenerate (a boilerplate
     template cluster at web scale).  Without ``salt_col`` they are
-    DROPPED (surfaced by bucket_cap_metrics).  With ``salt_col`` — a
+    DROPPED.  With ``salt_col`` — a
     secondary-signature column carried on ``keyed`` (e.g. the NEXT LSH
     band's hash) — they are two-level SPLIT instead: members re-bucket
     on (key_cols…, salt_col) and pairs come from the sub-buckets, so a
     hot bucket costs recall only for pairs that ALSO disagree on the
     secondary signature (true near-dups agree on most bands, so they
     survive; pytest pins the retained recall).  Sub-buckets still over
-    the cap are dropped with metrics.  The split is pure per-bucket
+    the cap are dropped.  No run counts the dropped buckets or pairs
+    yet.  The split is pure per-bucket
     array arithmetic on the one collected aggregate — when no bucket
     exceeds the cap the over-branch filter matches zero rows and the
     common case pays only the salt bytes in the shuffle."""
@@ -288,82 +284,6 @@ def _bucket_pairs(
     return _expand_bucket_pairs(buckets).distinct()
 
 
-def bucket_cap_metrics(
-    keyed: DataFrame,
-    key_cols: list[str],
-    max_bucket: int = 10_000,
-    salt_col: str | None = None,
-) -> DataFrame:
-    """Surface what `_bucket_pairs`' degenerate-bucket policy costs (the
-    no-silent-caps rule) — run alongside a dedup job so the coverage
-    loss is a recorded metric, not an invisible truncation.
-
-    ONE schema for BOTH policies (ADVICE r4: a metrics consumer keyed
-    to the drop-policy columns silently read nothing once a pipeline
-    switched to split) — inapplicable columns are zero:
-    (n_buckets, n_dropped_buckets, n_split_buckets,
-    n_dropped_sub_buckets, n_dropped_pairs).
-
-    Without ``salt_col`` (drop policy): whole over-cap buckets drop.
-    With ``salt_col`` (two-level split policy): over-cap primaries are
-    SPLIT and only sub-buckets still beyond the cap drop; split
-    primaries are counted separately (pairs straddling sub-buckets are
-    a recall property pinned by tests, not a cap drop).  The split path
-    scans ``keyed`` once: (key, salt) sizes aggregate first and primary
-    sizes re-aggregate from them."""
-    zero = F.lit(0).cast("long")
-    if salt_col is None:
-        sizes = keyed.groupBy(*key_cols).agg(F.count(F.lit(1)).alias("n"))
-        # every counter coalesces to 0 on an EMPTY keyed input (F.sum
-        # over zero rows is NULL — ADVICE r5): the unified-schema
-        # contract promises always-consumable integers in both policies
-        return sizes.agg(
-            F.count(F.lit(1)).alias("n_buckets"),
-            F.coalesce(
-                F.sum(F.when(F.col("n") > max_bucket, 1).otherwise(0)),
-                F.lit(0),
-            ).alias("n_dropped_buckets"),
-            zero.alias("n_split_buckets"),
-            zero.alias("n_dropped_sub_buckets"),
-            F.coalesce(
-                F.sum(
-                    F.when(
-                        F.col("n") > max_bucket,
-                        F.col("n") * (F.col("n") - 1) / 2,
-                    ).otherwise(0)
-                ).cast("long"),
-                F.lit(0).cast("long"),
-            ).alias("n_dropped_pairs"),
-        )
-    sub_sizes = keyed.groupBy(*key_cols, salt_col).agg(
-        F.count(F.lit(1)).alias("n")
-    )
-    prim_sizes = sub_sizes.groupBy(*key_cols).agg(F.sum("n").alias("n"))
-    prim = prim_sizes.agg(
-        F.count(F.lit(1)).alias("n_buckets"),
-        zero.alias("n_dropped_buckets"),
-        F.coalesce(
-            F.sum(F.when(F.col("n") > max_bucket, 1).otherwise(0)),
-            F.lit(0),
-        ).alias("n_split_buckets"),
-    )
-    over = prim_sizes.where(F.col("n") > max_bucket).select(*key_cols)
-    sub = sub_sizes.join(F.broadcast(over), key_cols).agg(
-        F.coalesce(
-            F.sum(F.when(F.col("n") > max_bucket, 1).otherwise(0)), F.lit(0)
-        ).alias("n_dropped_sub_buckets"),
-        F.coalesce(
-            F.sum(
-                F.when(
-                    F.col("n") > max_bucket, F.col("n") * (F.col("n") - 1) / 2
-                ).otherwise(0)
-            ).cast("long"),
-            F.lit(0).cast("long"),
-        ).alias("n_dropped_pairs"),
-    )
-    return prim.crossJoin(sub)  # two 1-row aggregates → one metrics row
-
-
 def lsh_candidate_pairs(sigs: DataFrame, hash_mode: str = "xxhash64") -> DataFrame:
     """Band the signature into MINHASH_BANDS bands of
     MINHASH_ROWS_PER_BAND rows, hash each band, bucket on (band, hash).
@@ -373,7 +293,9 @@ def lsh_candidate_pairs(sigs: DataFrame, hash_mode: str = "xxhash64") -> DataFra
     secondary-signature salt for `_bucket_pairs`' two-level split: a
     boilerplate bucket beyond its cap re-buckets on (band, bh,
     bh2) instead of being dropped wholesale, keeping recall for pairs
-    that agree on consecutive bands (true near-dups agree on most)."""
+    that agree on consecutive bands (true near-dups agree on most).
+    Sub-buckets still over the cap drop; no run counts those drops
+    yet."""
 
     def band_hash(b: int) -> Column:
         vals = [
@@ -515,8 +437,8 @@ def simhash_chunk_layout(n_bits: int, max_hamming: int) -> list[tuple[int, int]]
     path has recall 1.0 by construction at every radius — up to
     `_bucket_pairs`' degenerate-bucket cap: a pair whose ONLY shared
     chunk lands in a bucket larger than max_bucket is dropped WITH the
-    bucket, a policy decision surfaced by bucket_cap_metrics and
-    replicated in the DuckDB oracle (queries_docs._sql_simhash_md5)."""
+    bucket, a policy decision replicated in the DuckDB oracle
+    (queries_docs._sql_simhash_md5); no run counts those drops yet."""
     n_chunks = max_hamming + 1
     if n_chunks > n_bits:
         raise ValueError(f"max_hamming {max_hamming} needs more chunks than bits")
@@ -542,8 +464,8 @@ def simhash_pairs(
     configuration; larger radii trade narrower chunks (bigger buckets)
     for the same pigeonhole guarantee.  Recall is 1.0 EXCEPT for pairs
     whose every shared chunk sits in a degenerate bucket beyond
-    _bucket_pairs' cap — quantified by bucket_cap_metrics and
-    replicated in the oracle, never silent."""
+    _bucket_pairs' cap — replicated in the oracle; no run counts
+    those drops yet."""
     n_bits = 64 if hash_mode == "xxhash64" else 60
     sigs = simhash64(df, hash_mode)
     layout = simhash_chunk_layout(n_bits, max_hamming)

@@ -19,8 +19,8 @@ and JPEG — baseline AND progressive — through a pure-NumPy
 Huffman+IDCT pipeline (functions/jpeg.py: 4:4:4/4:2:2/4:2:0, restart
 intervals, spectral-selection + successive-approximation scan scripts,
 verified against real libjpeg files shipped in this container, both
-sequential and progressive) — with pixel/sample-level features in
-``extract_decoded_features``.  PNG covers palette (PLTE+tRNS),
+sequential and progressive) — with integer-exact pixel/sample stats in
+``decoded_stats``.  PNG covers palette (PLTE+tRNS),
 sub-8-bit and 16-bit depths, and Adam7 interlace; GIF covers local
 color tables and interlace — each verified against real container
 files.  Audio: PCM16 WAV and FLAC (native decoder, functions/flac.py).
@@ -995,64 +995,6 @@ def decoded_stats(media: DataFrame) -> DataFrame:
             )
 
     return media.mapInPandas(run, schema=DECODED_STATS_SCHEMA)
-
-
-DECODED_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("kind", T.StringType(), False),
-        T.StructField("decoded_ok", T.BooleanType(), False),
-        T.StructField("d_mean", T.DoubleType(), True),
-        T.StructField("d_std", T.DoubleType(), True),
-        T.StructField("d_peak", T.DoubleType(), True),
-    ]
-)
-
-
-def extract_decoded_features(media: DataFrame) -> DataFrame:
-    """DECODED (pixel/sample-level) features through the real codecs:
-    BMP → luma mean/std/max, WAV → |sample| mean/std/max.  Payloads the
-    decoders don't support yield decoded_ok=false rows instead of
-    failing the batch — at corpus scale a poisoned payload must cost one
-    row, not a task retry storm."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, kind, payload in zip(
-                pdf["media_id"], pdf["kind"], pdf["payload"]
-            ):
-                b = bytes(payload) if payload is not None else b""
-                try:
-                    if kind == "image":
-                        img = as_rgb(decode_image(b))
-                        luma = (
-                            0.299 * img[..., 0]
-                            + 0.587 * img[..., 1]
-                            + 0.114 * img[..., 2]
-                        )
-                        vals = luma.ravel()
-                    elif kind == "audio":
-                        _rate, pcm = decode_audio(b)
-                        vals = np.abs(pcm.ravel().astype(np.float64))
-                    else:
-                        raise NotImplementedError(kind)
-                    rows.append(
-                        (mid, kind, True, float(vals.mean()),
-                         float(vals.std()), float(vals.max()))
-                    )
-                except (NotImplementedError, ValueError, IndexError,
-                        KeyError, struct.error, zlib.error):
-                    rows.append((mid, kind, False, None, None, None))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "kind", "decoded_ok", "d_mean", "d_std",
-                    "d_peak",
-                ],
-            )
-
-    return media.mapInPandas(run, schema=DECODED_SCHEMA)
 
 
 # ------------------------------------------------------ video (AVI)

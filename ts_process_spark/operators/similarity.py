@@ -21,6 +21,8 @@ import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ts_process_spark.operators.textstats import _ensure_parallelism
+
 
 def quantized(col: Column) -> Column:
     """array<float> → array<long> at 1e-6 resolution (exact in both
@@ -113,26 +115,18 @@ def dot_long_fast(a: Column, b: Column) -> Column:
     ).otherwise(hof)
 
 
-def cosine_q(a: Column, b: Column) -> Column:
-    """Cosine over quantized vectors — identical doubles on any engine
-    (int dot / sqrt(int ssq) products)."""
-    return dot_long(a, b) / (
-        F.sqrt(dot_long(a, a).cast("double")) * F.sqrt(dot_long(b, b).cast("double"))
-    )
-
-
 def cosine_qn(a: Column, b: Column, na: Column, nb: Column) -> Column:
-    """cosine_q with PRECOMPUTED squared norms: at scale the self-dot is
-    O(pairs·dim) recomputed per candidate pair, vs O(vectors·dim) done
-    once in cosine_base — same doubles bit-for-bit (the norm column is
-    the identical int64 dot the inline form evaluated).  Uses the
-    unrolled codegen dot: every call site scores pairs after a join,
-    where ``a``/``b`` are materialized attributes (dot_long_fast's
-    caller contract)."""
+    """Cosine over quantized vectors — identical doubles on any engine
+    (int dot / sqrt(int ssq) products) — with PRECOMPUTED squared norms:
+    at scale the self-dot is O(pairs·dim) recomputed per candidate pair,
+    vs O(vectors·dim) done once in cosine_base — same doubles
+    bit-for-bit (the norm column is the identical int64 dot the inline
+    form evaluated).  Uses the unrolled codegen dot: every call site
+    scores pairs after a join, where ``a``/``b`` are materialized
+    attributes (dot_long_fast's caller contract)."""
     return dot_long_fast(a, b) / (
         F.sqrt(na.cast("double")) * F.sqrt(nb.cast("double"))
     )
-
 
 
 def cosine_base(df: DataFrame) -> DataFrame:
@@ -146,9 +140,7 @@ def cosine_base(df: DataFrame) -> DataFrame:
     Also carries nq = ‖q‖² computed ONCE per vector (cosine_qn) and
     spreads a too-few-partition scan across the cluster first — a
     single-file corpus otherwise runs the whole pairwise-scoring stage
-    on one task (dedup._ensure_parallelism, same rationale)."""
-    from ts_process_spark.operators.dedup import _ensure_parallelism
-
+    on one task (_ensure_parallelism)."""
     # nq via a single-reference fold: the optimizer collapses scan-
     # adjacent projects by INLINING aliases, so a form referencing ``q``
     # k times would re-evaluate the quantization k times per row; the
@@ -318,17 +310,6 @@ def srp_bucket(vec_q: Column, planes: np.ndarray) -> Column:
         )
         bucket = bucket + F.shiftleft(bit, p)
     return bucket
-
-
-def srp_bucket_assignments(df: DataFrame, n_planes: int = 8) -> DataFrame:
-    planes = rademacher_hyperplanes(n_planes, 64)
-    # project the quantized vector ONCE, then bucket over the attribute:
-    # inlining quantized(...) into srp_bucket would re-evaluate the
-    # transform per plane per element under the unrolled dot (see
-    # dot_long's caller contract)
-    return df.select(
-        F.col("vec_id").alias("id"), quantized(F.col("embedding")).alias("q")
-    ).select("id", srp_bucket(F.col("q"), planes).alias("bucket"))
 
 
 def srp_ann_topk(df: DataFrame, k: int = 3, n_planes: int = 8) -> DataFrame:

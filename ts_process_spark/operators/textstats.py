@@ -41,8 +41,7 @@ def _ensure_parallelism(df: DataFrame, *keys: str) -> DataFrame:
     a downstream groupBy(keys) sees its clustering requirement already
     satisfied and skips its own exchange.  Without keys it is
     round-robin.  Lives here (the bottom of the operator import graph)
-    so dedup/similarity/textstats can all use it; dedup re-exports it
-    for backward compatibility."""
+    so dedup/similarity/textstats can all use it."""
     target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < target:
         if keys:
@@ -142,24 +141,20 @@ def with_language_id(df: DataFrame) -> DataFrame:
 _FP_MOD = 2147483647  # 2^31 - 1 (Mersenne): acc*33 + h stays < 2^37, no overflow
 
 
-def with_fingerprint(df: DataFrame, hash_mode: str = "xxhash64") -> DataFrame:
+def with_fingerprint(df: DataFrame) -> DataFrame:
     """Order-sensitive rolling polynomial fingerprint of the token
-    stream: acc = (acc*33 + pmod(hash(token), M)) % M.  A reordered
+    stream: acc = (acc*33 + hash60(token) % M) % M.  A reordered
     document gets a different fingerprint (unlike bag-of-words hashes);
-    JVM-side via the `aggregate` higher-order function.  hash_mode
-    'md5' swaps in the 60-bit md5-derived hash (dedup.hash60) so the
-    rolling recurrence is reproducible in DuckDB (list_reduce)."""
-    if hash_mode == "xxhash64":
-        hfn = lambda w: F.pmod(F.xxhash64(w), F.lit(_FP_MOD))  # noqa: E731
-    else:
-        from ts_process_spark.operators.dedup import hash60
+    JVM-side via the `aggregate` higher-order function.  The token hash
+    is the 60-bit md5-derived dedup.hash60, so the rolling recurrence is
+    reproducible in DuckDB (list_reduce)."""
+    from ts_process_spark.operators.dedup import hash60
 
-        hfn = lambda w: hash60(w) % _FP_MOD  # noqa: E731
     toks = tokens(F.col("text"))
     fp = F.aggregate(
         toks,
         F.lit(0).cast("long"),
-        lambda acc, w: (acc * 33 + hfn(w)) % _FP_MOD,
+        lambda acc, w: (acc * 33 + hash60(w) % _FP_MOD) % _FP_MOD,
     )
     return df.withColumn("fingerprint", fp)
 

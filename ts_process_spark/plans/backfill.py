@@ -129,6 +129,25 @@ def _bucket_stats(seen: Observation, buckets: list[int]) -> dict[int, tuple[int,
     return {b: (int(m[f"n{b}"]), int(m[f"x{b}"])) for b in buckets}
 
 
+def read_jsonl(path: str) -> list[dict]:
+    """The records of a JSON-lines lineage file; [] before its first
+    append."""
+    if not os.path.exists(path):
+        return []
+    with open(path) as f:
+        return [json.loads(line) for line in f if line.strip()]
+
+
+def append_jsonl(path: str, recs: list[dict]) -> None:
+    """Append ``recs`` to a JSON-lines lineage file in one write."""
+    # single-writer append; on Iceberg this is the snapshot commit.
+    # Serialized before the file opens: a record that fails to encode
+    # commits none of the records
+    lines = "".join(json.dumps(r) + "\n" for r in recs)
+    with open(path, "a") as f:
+        f.write(lines)
+
+
 @dataclass
 class TableSet:
     """Directory layout for one lineage of tier tables."""
@@ -146,21 +165,13 @@ class TableSet:
         return os.path.join(self.root, "_lineage.jsonl")
 
     def read_lineage(self) -> list[dict]:
-        if not os.path.exists(self.lineage_path):
-            return []
-        with open(self.lineage_path) as f:
-            return [json.loads(line) for line in f if line.strip()]
+        return read_jsonl(self.lineage_path)
 
     def committed(self) -> set[tuple[str, int]]:
         return {(r["tier"], r["bucket_id"]) for r in self.read_lineage()}
 
     def append_lineage(self, recs: list[dict]) -> None:
-        # single-writer append; on Iceberg this is the snapshot commit.
-        # Serialized before the file opens: a record that fails to encode
-        # commits none of the tier's records
-        lines = "".join(json.dumps(r) + "\n" for r in recs)
-        with open(self.lineage_path, "a") as f:
-            f.write(lines)
+        append_jsonl(self.lineage_path, recs)
 
     def read_tier(self, spark: SparkSession, tier: str) -> DataFrame:
         return spark.read.parquet(self.tier_dir(tier))

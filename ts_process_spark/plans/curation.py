@@ -43,7 +43,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ts_process_spark.plans.backfill import count_and_hash
+from ts_process_spark.plans.backfill import append_jsonl, count_and_hash, read_jsonl
 
 # pack is NOT a survivor stage (it emits a different table shape);
 # jobs/curate_corpus.py runs it from the final materialized survivors
@@ -91,10 +91,7 @@ class StageLedger:
         return os.path.join(self.root, f"stage_{name}")
 
     def read_lineage(self) -> list[dict]:
-        if not os.path.exists(self.lineage_path):
-            return []
-        with open(self.lineage_path) as f:
-            return [json.loads(line) for line in f if line.strip()]
+        return read_jsonl(self.lineage_path)
 
     def committed(self) -> dict[str, dict]:
         """stage -> its LATEST lineage record (a stage recomputed under
@@ -106,8 +103,7 @@ class StageLedger:
 
     def append(self, rec: dict) -> None:
         os.makedirs(self.root, exist_ok=True)
-        with open(self.lineage_path, "a") as f:
-            f.write(json.dumps(rec) + "\n")
+        append_jsonl(self.lineage_path, [rec])
 
 
 def _fp(prev: str, payload: dict) -> str:
