@@ -19,14 +19,20 @@ skipped; a unit whose data was written but whose lineage commit did not
 land is redone idempotently (dynamic partition overwrite, which leaves
 committed buckets untouched).
 
-The session comes from spark-submit: no master, parallelism or shuffle
-partition count is hardcoded here (AQE sizes the shuffles at run time).
+The session comes from spark-submit (master, parallelism and shuffle
+partitions; AQE sizes the shuffles at run time), but the job fixes the
+tier file format, as an Iceberg table property would: it calls
+``session.pin_runtime`` (zstd level 6, INT64 microsecond timestamps,
+UTC) after ``getOrCreate``, so a ``--conf`` cannot change it.  The JSON
+report's ``tier_bytes`` is the ``.parquet`` bytes under each tier
+directory.
 """
 
 from __future__ import annotations
 
 import argparse
 import json
+import os
 import sys
 import time
 
@@ -46,10 +52,16 @@ def main() -> None:
 
     from pyspark.sql import SparkSession
 
-    spark = SparkSession.builder.appName("ts-cascade-backfill").getOrCreate()
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    from ts_process_spark.plans.backfill import (
+        TIER_ORDER,
+        TableSet,
+        backfill,
+        verify_lineage,
+    )
+    from ts_process_spark.session import pin_runtime
 
-    from ts_process_spark.plans.backfill import TableSet, backfill, verify_lineage
+    spark = SparkSession.builder.appName("ts-cascade-backfill").getOrCreate()
+    pin_runtime(spark)
 
     if args.input.startswith("synth:"):
         from ts_process_spark.datagen import transcripts
@@ -65,6 +77,12 @@ def main() -> None:
     result = backfill(spark, raw, tables, n_buckets=args.buckets)
     wall = time.time() - t0
     problems = verify_lineage(spark, tables)
+    tier_bytes = {
+        t: sum(os.path.getsize(os.path.join(d, f))
+               for d, _, files in os.walk(tables.tier_dir(t))
+               for f in files if f.endswith(".parquet"))
+        for t in TIER_ORDER
+    }
     # count only this run's commits: on resume, turns that earlier runs
     # committed took none of this run's wall time
     n_turns = sum(r["rows_in"] for r in tables.read_lineage()
@@ -76,6 +94,7 @@ def main() -> None:
         "wall_s": round(wall, 2),
         "turns_per_sec": round(n_turns / wall, 1) if wall > 0 else None,
         "lineage_problems": problems,
+        "tier_bytes": tier_bytes,
         "cores": spark.sparkContext.defaultParallelism,
     }))
     spark.stop()

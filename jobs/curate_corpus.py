@@ -114,8 +114,10 @@ def main() -> None:
 
     from pyspark.sql import SparkSession
 
+    from ts_process_spark.session import pin_runtime
+
     spark = SparkSession.builder.appName("ts-curate-corpus").getOrCreate()
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    pin_runtime(spark)
 
     from ts_process_spark.operators import textstats
     from ts_process_spark.plans.curation import (

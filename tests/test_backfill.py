@@ -6,13 +6,19 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import subprocess
+import sys
+from urllib.parse import urlparse
 
 import pandas as pd
+import pyarrow.parquet as pq
 import pytest
+from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ts_process_spark.datagen import transcripts
-from ts_process_spark.operators.rollup import full_cascade
+from ts_process_spark.operators.rollup import TIER_SCHEMA, full_cascade
 from ts_process_spark.plans.backfill import (
     HASH_COLS,
     TIER_ORDER,
@@ -23,9 +29,12 @@ from ts_process_spark.plans.backfill import (
     with_bucket,
 )
 from ts_process_spark.plans.curation import StageLedger
+from ts_process_spark.session import RUNTIME_CONF
 
 N_CONVS = 8
 N_BUCKETS = 4
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+TS_COLS = {f.name for f in TIER_SCHEMA.fields if isinstance(f.dataType, T.TimestampType)}
 
 
 @pytest.fixture(scope="module")
@@ -321,14 +330,30 @@ def test_lineage_counters_with_empty_buckets(spark, raw, tmp_path):
     assert verify_lineage(spark, tables) == []
 
 
-@pytest.mark.parametrize("n_buckets", [N_BUCKETS, N_CONVS + 4])
-def test_backfill_jobs_per_tier(spark, raw, tmp_path, n_buckets):
+@pytest.fixture(scope="module")
+def wide_raw(spark, tmp_path_factory):
+    """Enough short conversations that each of 64 buckets holds some."""
+    path = str(tmp_path_factory.mktemp("wide_raw") / "turns")
+    transcripts(spark, n_convs=320, seed=5, median_turns=3).write.parquet(path)
+    return spark.read.parquet(path)
+
+
+@pytest.mark.parametrize(
+    "input_fixture, n_buckets",
+    [("raw", N_BUCKETS), ("raw", N_CONVS + 4), ("wide_raw", 64)],
+    ids=[str(N_BUCKETS), str(N_CONVS + 4), "64"],
+)
+def test_backfill_jobs_per_tier(spark, request, tmp_path, input_fixture, n_buckets):
     """A tier is one write over all its pending buckets: lineage
-    counters are observed during the write, nothing is read back and no
-    tier read infers a schema, so a backfill runs at most 3 Spark jobs
-    per tier (the two shuffle map stages and the write) and
-    verify_lineage 1, whatever the bucket count up to 32 (past Spark's
-    parallel-listing threshold a tier read adds a listing job)."""
+    counters are observed during the write, nothing is read back, no
+    tier read infers a schema and none lists its bucket directories in
+    a Spark job, so a backfill runs at most 3 Spark jobs per tier (the
+    two shuffle map stages and the write) and verify_lineage 1.  With
+    more buckets than conversations some buckets are empty and have no
+    directory; at 64 buckets (the backfill job's default, past Spark's
+    default listing threshold of 32) every bucket has one, and
+    ``RUNTIME_CONF``'s threshold keeps their listing on the driver."""
+    raw = request.getfixturevalue(input_fixture)
     sc = spark.sparkContext
     tables = TableSet(str(tmp_path / "t"))
     units = 3 * n_buckets
@@ -344,6 +369,9 @@ def test_backfill_jobs_per_tier(spark, raw, tmp_path, n_buckets):
 
     r, n_jobs = jobs("backfill", lambda: backfill(spark, raw, tables, n_buckets=n_buckets))
     assert r["committed"] == units
+    if input_fixture == "wide_raw":
+        n_dirs = sum(d.startswith("bucket_id=") for d in os.listdir(tables.tier_dir("1d")))
+        assert n_dirs == n_buckets
     assert n_jobs <= 3 * len(TIER_ORDER)
     problems, n_jobs = jobs("verify", lambda: verify_lineage(spark, tables))
     assert problems == [] and n_jobs <= len(TIER_ORDER)
@@ -367,3 +395,128 @@ def test_lineage_detects_schema_drift(spark, raw, tmp_path):
     ).write.mode("overwrite").parquet(victim)
     with pytest.raises(Exception, match="PARQUET_COLUMN_DATA_TYPE_MISMATCH"):
         verify_lineage(spark, tables)
+
+
+def _parquet_files(root):
+    return sorted(
+        os.path.join(d, f)
+        for d, _, files in os.walk(root)
+        for f in files
+        if f.endswith(".parquet")
+    )
+
+
+def _timestamp_columns(path):
+    """{tier timestamp column: (physical type, logical type)} of one
+    parquet file."""
+    md = pq.ParquetFile(path).metadata
+    cols = (md.schema.column(i) for i in range(md.num_columns))
+    return {
+        c.name: (c.physical_type, json.loads(c.logical_type.to_json()))
+        for c in cols
+        if c.name in TS_COLS
+    }
+
+
+def _assert_tier_format(paths):
+    """Each file stores every tier timestamp column as INT64
+    ``TIMESTAMP(MICROS, isAdjustedToUTC=true)`` and compresses every
+    column chunk with ZSTD."""
+    assert paths
+    for path in paths:
+        ts = _timestamp_columns(path)
+        assert set(ts) == TS_COLS, path
+        for name, (physical, logical) in ts.items():
+            assert physical == "INT64", (path, name)
+            assert (logical["Type"], logical["isAdjustedToUTC"], logical["timeUnit"]) == (
+                "Timestamp", True, "microseconds"), (path, name)
+        md = pq.ParquetFile(path).metadata
+        codecs = {
+            md.row_group(g).column(i).compression
+            for g in range(md.num_row_groups)
+            for i in range(md.num_columns)
+        }
+        assert codecs == {"ZSTD"}, path
+
+
+def test_tier_files_are_zstd_int64_micros(spark, raw, direct, tmp_path):
+    """The tier format on the session ``get_spark`` builds: the
+    single-job cascade's files and a backfill root's."""
+    _assert_tier_format([urlparse(f).path for df in direct.values() for f in df.inputFiles()])
+    tables = TableSet(str(tmp_path / "t"))
+    backfill(spark, raw, tables, n_buckets=N_BUCKETS)
+    _assert_tier_format(_parquet_files(tables.root))
+
+
+def test_resume_over_int96_root(spark, raw, tmp_path):
+    """A root written with INT96 timestamps (the tier format before
+    INT64 µs) resumes under the current format: its committed buckets'
+    files stay as they were, the redone buckets are written INT64, the
+    sweep reads both, and every tier equals a fresh backfill's."""
+    key = "spark.sql.parquet.outputTimestampType"
+    tables = TableSet(str(tmp_path / "old"))
+    spark.conf.set(key, "INT96")
+    try:
+        backfill(spark, raw, tables, n_buckets=N_BUCKETS)
+    finally:
+        spark.conf.set(key, RUNTIME_CONF[key])
+    recs = tables.read_lineage()
+    a, b = sorted(r["bucket_id"] for r in recs if r["tier"] == "1d" and r["rows_out"])[:2]
+    # bucket a is redone in every tier; bucket b's 1h/1d read its INT96
+    # 1m partition
+    dropped = {(t, a) for t in TIER_ORDER} | {("1h", b), ("1d", b)}
+    with open(tables.lineage_path, "w") as f:
+        f.writelines(json.dumps(r) + "\n" for r in recs
+                     if (r["tier"], r["bucket_id"]) not in dropped)
+    kept = tables.committed()
+    before = {k: _tree(tables.partition_dir(*k)) for k in kept}
+
+    r = backfill(spark, raw, tables, n_buckets=N_BUCKETS)
+    assert r == {"committed": len(dropped), "skipped": 3 * N_BUCKETS - len(dropped)}
+    assert {k: _tree(tables.partition_dir(*k)) for k in kept} == before
+    kept_files = [f for k in kept for f in _parquet_files(tables.partition_dir(*k))]
+    assert {ph for f in kept_files for ph, _ in _timestamp_columns(f).values()} == {"INT96"}
+    _assert_tier_format([f for k in dropped for f in _parquet_files(tables.partition_dir(*k))])
+    assert verify_lineage(spark, tables) == []
+
+    fresh = TableSet(str(tmp_path / "fresh"))
+    backfill(spark, raw, fresh, n_buckets=N_BUCKETS)
+    for tier in TIER_ORDER:
+        got, want = (t.read_tier(spark, tier).orderBy("conv_id", "bucket_ts").collect()
+                     for t in (tables, fresh))
+        assert got == want, tier
+
+
+def test_backfill_job_under_spark_submit(tmp_path):
+    """``jobs/cascade_backfill.py`` run by spark-submit commits every
+    unit, verifies clean, reports the bytes of each tier's files and
+    writes the tier format even when ``--conf`` asks for another."""
+    root = str(tmp_path / "root")
+    cmd = [
+        os.path.join(_find_spark_home(), "bin", "spark-submit"),
+        "--master", "local[2]",
+        "--driver-memory", "1g",
+        "--conf", "spark.ui.enabled=false",
+        "--conf", "spark.sql.parquet.compression.codec=snappy",
+        "--conf", "spark.sql.parquet.outputTimestampType=INT96",
+        os.path.join(REPO, "jobs", "cascade_backfill.py"),
+        "--input", "synth:24",
+        "--root", root,
+        "--buckets", "4",
+    ]
+    env = {
+        **os.environ,
+        "PYSPARK_PYTHON": sys.executable,
+        "PYTHONPATH": os.pathsep.join(p for p in (REPO, os.environ.get("PYTHONPATH")) if p),
+    }
+    proc = subprocess.run(cmd, env=env, capture_output=True, text=True, timeout=600)
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    report = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert report["committed"] == 12
+    assert report["lineage_problems"] == []
+    tables = TableSet(root)
+    assert report["tier_bytes"] == {
+        t: sum(os.path.getsize(f) for f in _parquet_files(tables.tier_dir(t)))
+        for t in TIER_ORDER
+    }
+    _assert_tier_format(_parquet_files(root))

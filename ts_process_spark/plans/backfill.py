@@ -28,10 +28,10 @@ per-partition lineage + metrics"):
   (per bucket, what ``count_and_hash`` gives on a read-back); 1m
   ``rows_in`` is observed the same way on the raw rows, 1h/1d
   ``rows_in`` is the parent record's ``rows_out``.  Nothing is read
-  back and tier reads carry the explicit tier schema, so a tier is its
-  write's Spark jobs (past 32 buckets Spark lists a tier read's
-  directories in one more job).  ``verify_lineage`` re-hashes every
-  committed partition on disk.
+  back, tier reads carry the explicit tier schema and the session's
+  ``RUNTIME_CONF`` lists up to 64 bucket directories on the driver, so
+  a tier is its write's Spark jobs.  ``verify_lineage`` re-hashes
+  every committed partition on disk.
 
 On a real cluster this layer sits on Iceberg (snapshot ids instead of
 directory overwrites); without the Iceberg runtime the same protocol
